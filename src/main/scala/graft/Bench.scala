@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR (default sf0.1), forcing full materialization via
-  * count(), and prints one JSON line with per-query seconds.
+  * a noop write, and prints one JSON line with per-query seconds.
   */
 object Bench {
 
@@ -48,47 +46,49 @@ object Bench {
   }
 
   /** Where the full per-query record lands. A measured out-of-window
-    * run (ratio above canaryThreshold OR below canaryLowThreshold —
-    * the gate is symmetric since r14) REFUSES to replace an existing
-    * stamp unless forced — the contaminated map goes to a quarantine
-    * name the continuity tooling never reads. A first stamp of the
+    * run (either canary leg above canaryThreshold or below
+    * canaryLowThreshold, see [[canaryBreach]]) REFUSES to replace an
+    * existing stamp unless forced — the contaminated map goes to a
+    * quarantine name the continuity tooling never reads. A first stamp of the
     * round writes regardless (a self-describing contaminated stamp
     * beats no stamp; the ratio rides the JSON), as does an unmeasured
-    * run (ratio 0.0 — no evidence to refuse on). */
-  def stampTarget(fullName: String, ratio: Double, forced: Boolean,
-      cleanStampExists: Boolean): String = {
-    val inWindow = ratio == 0.0 ||
-      (ratio >= canaryLowThreshold && ratio <= canaryThreshold)
-    if (inWindow || forced || !cleanStampExists) fullName
+    * run (both legs 0.0 — no evidence to refuse on). */
+  def stampTarget(fullName: String, canaryPre: Double, canaryPost: Double,
+      forced: Boolean, cleanStampExists: Boolean): String =
+    if (canaryBreach(canaryPre, canaryPost).isEmpty || forced ||
+        !cleanStampExists) fullName
     else fullName.stripSuffix(".json") + ".contaminated.json"
-  }
+
+  /** The first canary leg outside [canaryLowThreshold, canaryThreshold],
+    * with the bound it crossed (e.g. "pre 0.77 < 0.8"); None when both
+    * legs are in window or unmeasured (0.0). Either leg decides: a
+    * window opening mid-suite shows in post, one closing in pre. */
+  def canaryBreach(canaryPre: Double, canaryPost: Double): Option[String] =
+    Seq("pre" -> canaryPre, "post" -> canaryPost).collectFirst {
+      case (leg, r) if r != 0.0 && r < canaryLowThreshold =>
+        f"$leg $r%.2f < $canaryLowThreshold"
+      case (leg, r) if r > canaryThreshold =>
+        f"$leg $r%.2f > $canaryThreshold"
+    }
+
+  /** BENCH_SUMMARY.json is the fixed read target for the round's
+    * record, so only a 32-core stamp that went to the round's own name
+    * (not a quarantine file) may replace it. */
+  def writesSummary(cpus: String, fullName: String, target: String): Boolean =
+    cpus == "32" && target == fullName
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = Harness.sfDir
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // optional comma-separated query-name filter for local iteration
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+    val spark = Harness.session("graft-bench", cpus)
     // Queries may cache()/localCheckpoint() intermediates; released
     // after every run so block-manager state never accumulates across
     // the 150+ query executions (leftover blocks degrade the tail of
     // the run under memory pressure).
-    def release(): Unit = {
-      graft.ops.SimilarityOps.releaseCaches() // ANN-family scoped caches
-      graft.ops.DedupOps.releaseCaches() // dedup-family scoped caches
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
+    def release(): Unit = Harness.release(spark)
 
     val queries = only match {
       case Some(names) => Registry.all.filter(q => names.contains(q.name))
@@ -101,20 +101,19 @@ object Bench {
     // it Catalyst prunes all columns, and outer joins against
     // unique-keyed right sides are eliminated outright, so 5 of the
     // 140 registered plans (d_stream_dedup, d_semdedup,
-    // d_decontaminate, d_ngram_jaccard, j6_a4_token_jaccard — see
-    // graft.PlanAudit) benched a fraction of their real work. Kept
-    // selectable for A/B against the historical numbers.
+    // d_decontaminate, d_ngram_jaccard, j6_a4_token_jaccard; BASELINE.md
+    // "Round-8 forcing fix") benched a fraction of their real work.
+    // Kept selectable for A/B against the historical numbers.
     val force: org.apache.spark.sql.DataFrame => Unit =
       sys.env.getOrElse("SPARK_GRAFT_FORCE", "noop") match {
         case "count" => df => { df.count(); () }
-        case _ => df =>
-          df.write.format("noop").mode("overwrite").save()
+        case _ => Harness.force
       }
 
     // JVM/codegen warmup on the smallest SF so per-query timings below
     // measure the plan, not first-use compilation.
     queries.foreach { q =>
-      try force(q.run(spark, "/root/testdata/sf0.001"))
+      try force(q.run(spark, Harness.WarmupDir))
       catch { case _: Throwable => () }
       release()
     }
@@ -182,8 +181,6 @@ object Bench {
 
     val canaryPost = canaryLeg()
     if (canaryOn) println(f"CANARY post=$canaryPost%.2f")
-    // the window factor for the WHOLE run is the worse leg — a window
-    // opening mid-suite shows in post, one closing mid-suite in pre
     val canary = math.max(canaryPre, canaryPost)
     val canaryJson =
       if (!canaryOn) ""
@@ -258,12 +255,13 @@ object Bench {
         (line + "\n").getBytes("UTF-8"))
       // slow-window stamps QUARANTINE rather than replacing a clean
       // one (see stampTarget) — ends the re-stamp forensics cycle
-      val target = stampTarget(fullName, canary,
+      val target = stampTarget(fullName, canaryPre, canaryPost,
         forced = sys.env.get("SPARK_GRAFT_FORCE_STAMP").contains("1"),
         cleanStampExists =
           java.nio.file.Files.exists(java.nio.file.Paths.get(fullName)))
       if (target != fullName)
-        println(f"CANARY ratio $canary%.2f > $canaryThreshold: " +
+        println(s"CANARY ${canaryBreach(canaryPre, canaryPost).get} " +
+          s"(window [$canaryLowThreshold, $canaryThreshold]): " +
           s"refusing to replace $fullName; writing $target " +
           "(SPARK_GRAFT_FORCE_STAMP=1 overrides)")
       java.nio.file.Files.write(java.nio.file.Paths.get(target),
@@ -273,9 +271,10 @@ object Bench {
       // running despite the final line printing). The same compact
       // line that goes to stdout is committed here verbatim so the
       // driver can read it from the filesystem instead of the tail.
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("BENCH_SUMMARY.json"),
-        (finalLine + "\n").getBytes("UTF-8"))
+      if (writesSummary(cpus, fullName, target))
+        java.nio.file.Files.write(
+          java.nio.file.Paths.get("BENCH_SUMMARY.json"),
+          (finalLine + "\n").getBytes("UTF-8"))
     }
     println(finalLine)
     spark.stop()

@@ -465,9 +465,10 @@ object TxLog {
     * The commit RECORD is O(touched) too: a `#delta` record naming
     * only the rewritten partitions, with a full `#manifest`
     * checkpoint every `checkpointEvery` versions bounding the
-    * reader's overlay chain (TxProbe's manifest-bytes column measures
-    * both constant in catalog size). Same optimistic protocol as
-    * [[transact]]: stage → CAS → rebase on conflict; concurrent
+    * reader's overlay chain (both measured constant in catalog size:
+    * BASELINE.md "Round-11: O(touched) commit metadata"). Same
+    * optimistic protocol as [[transact]]: stage → CAS → rebase on
+    * conflict; concurrent
     * mergers — even to disjoint partitions — serialize through the
     * version counter, so the result is always a serial application
     * of the merges. */

@@ -109,9 +109,10 @@ object core {
     * partitioning that IS the on-disk layout (one file per bucket),
     * so AQE has nothing to improve — but it still materializes every
     * shuffle stage as its own job, turning a 1-job write into 2-5
-    * driver round-trips (the r13 OptProbe tables show the lifecycle
-    * queries spending their wall on exactly these barriers; at
-    * cluster scale each is a full scheduling round per commit).
+    * driver round-trips (the per-job traces in OPTIMIZATION_r13.md §10
+    * show the lifecycle queries spending their wall on exactly these
+    * barriers; at cluster scale each is a full scheduling round per
+    * commit).
     * Session conf is shared across threads, so the toggle wraps the
     * whole inParallel write batch, never an individual thunk, and
     * nothing else may run on the session between set and restore
@@ -119,30 +120,32 @@ object core {
     * work). NOT for general queries — AQE's runtime broadcast
     * conversion is what keeps iterative-join loops cheap (the r13
     * fixpoint A/B that measured 3-10× worse without it). */
-  private val aqeOffDepth = new java.util.concurrent.atomic.AtomicInteger(0)
-  @volatile private var aqeSaved = "true"
+  private val aqeOff =
+    scala.collection.mutable.Map.empty[SparkSession, (Int, String)]
 
   def withoutAqe[T](s: SparkSession)(f: => T): T = {
     val key = "spark.sql.adaptive.enabled"
-    // Refcounted (ADVICE r13): two overlapping calls on different
-    // threads (a streaming staging batch racing an ad-hoc store op)
-    // could interleave set/restore and leave AQE off for the whole
-    // session. The FIRST entering caller saves the live value and
-    // disables; the LAST exiting caller restores it — nested and
-    // concurrent batches compose, and the session can never end up
-    // permanently AQE-less. (A query compiling on an unrelated thread
-    // DURING a batch still sees AQE off — inherent to session-level
-    // conf and acceptable for the store-commit call sites, where the
-    // batch is normally the only live work.)
-    aqeOffDepth.synchronized {
-      if (aqeOffDepth.getAndIncrement() == 0) {
-        aqeSaved = s.conf.get(key, "true")
-        s.conf.set(key, "false")
-      }
+    // Refcounted per session (ADVICE r13/r14): two overlapping calls on
+    // different threads (a streaming staging batch racing an ad-hoc
+    // store op) could interleave set/restore and leave AQE off for the
+    // whole session. The FIRST caller entering on a session saves its
+    // live value and disables; the LAST caller leaving that session
+    // restores it — nested and concurrent batches compose, and sessions
+    // never share a count or a saved value. (A query compiling on an
+    // unrelated thread of the same session DURING a batch still sees
+    // AQE off — inherent to session-level conf and acceptable for the
+    // store-commit call sites, where the batch is normally the only
+    // live work.)
+    aqeOff.synchronized {
+      val (depth, saved) = aqeOff.getOrElse(s, (0, s.conf.get(key, "true")))
+      if (depth == 0) s.conf.set(key, "false")
+      aqeOff(s) = (depth + 1, saved)
     }
     try f
-    finally aqeOffDepth.synchronized {
-      if (aqeOffDepth.decrementAndGet() == 0) s.conf.set(key, aqeSaved)
+    finally aqeOff.synchronized {
+      val (depth, saved) = aqeOff(s)
+      if (depth == 1) { aqeOff.remove(s); s.conf.set(key, saved) }
+      else aqeOff(s) = (depth - 1, saved)
     }
   }
 

@@ -230,9 +230,9 @@ object NatVersionKey {
   * ~14 (visit) and 56 to ~0.2 (priority) — so flag computation and
   * executor-side resolve share ONE dispatch implementation. Same
   * answer as the reference's monolithic `^(p1|..|pn)$` alternation
-  * (RouteSpec pins equivalence on the python-re fixture; RouteProbe
-  * cross-checks counts every run) at wall-clock parity on warm JIT
-  * (both ≥2.5M URIs/s on 32 threads — BASELINE.md), with a bounded
+  * (RouteSpec pins equivalence on the python-re fixture) at
+  * wall-clock parity on warm JIT (both ≥2.5M URIs/s on 32 threads —
+  * BASELINE.md "Round-8 route-dispatch throughput"), with a bounded
   * worst case under regex backtracking that the alternation lacks.
   * Stays inside whole-stage codegen; `registry` ∈ visit/map/priority
   * is a plan-time constant.
@@ -387,8 +387,9 @@ object SimHash64 {
 /** dot_long(array<long>, array<long>) -> long: integer dot product
   * in one codegen'd loop — no intermediate array. The zip_with +
   * aggregate formulation allocates a 64-element array per evaluation;
-  * graft.DotProbe measures 4× query-level throughput for this
-  * expression (10.3M vs 2.6M rows/s over 64-dim pairs), which
+  * it measured 4× query-level throughput for this expression
+  * (10.3M vs 2.6M rows/s over 64-dim pairs, BASELINE.md "Round-8
+  * dot-product probe"), which
   * compounds across the n×k evaluations of k-means cell assignment.
   * Callers guarantee equal lengths and |component| ≤ 1e6 quantized
   * units (sums bounded far below Long overflow; Java arithmetic here

@@ -18,7 +18,7 @@ package graft.miners
   * ([[graft.streaming.Frontier.withRoutability]]); the anchored
   * `^(p1|p2|...)$` alternation of `route.py:187-200` remains
   * available through [[alternation]] as the reference-shaped
-  * baseline (RouteProbe cross-checks the two every run).
+  * baseline.
   */
 object RouteRegistry {
 

@@ -21,7 +21,7 @@ object ConnectedComponents {
 
   /** Per-round post-contraction edge counts of the most recent
     * `labels` call in this JVM (index 0 = deduped input edge count).
-    * Measurement surface for ScaleBench's round/edge telemetry only —
+    * Measurement surface for Harness scale's round/edge telemetry only —
     * concurrent `labels` calls overwrite each other here, which is
     * fine for a single-threaded measurement harness. */
   @volatile private var lastEdgeCountsVar: Seq[Long] = Seq.empty
@@ -103,7 +103,7 @@ object ConnectedComponents {
     // size gate as spark.sql.autoBroadcastJoinThreshold: 1M edges is
     // ~32 MB boxed on the driver (well under maxResultSize); at
     // 100 TB the near-dup edge set exceeds it and the distributed
-    // star rounds run unchanged — ScaleBench's 10×/100× CC points
+    // star rounds run unchanged — Harness scale's 10×/100× CC points
     // keep exercising that path via the env override.
     //
     // The size gate IS the collect: executeTake with threshold+1 as
@@ -111,7 +111,7 @@ object ConnectedComponents {
     // answers "below threshold?" and delivers the pairs in ONE job —
     // where probing a count first cost an eager checkpoint
     // materialization plus a signature aggregate before the collect
-    // (3 driver round-trips per CC call, r13 OptProbe). An
+    // (3 driver round-trips per CC call, OPTIMIZATION_r13.md §13). An
     // over-threshold set stops at the first partitions that overflow
     // the limit and falls through to the distributed rounds, which
     // re-run the edge plan for the checkpoint — one partial extra

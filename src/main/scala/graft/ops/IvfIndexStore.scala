@@ -45,7 +45,8 @@ import graft.ops.ArtifactLog.Rec
   * bounded by P, not by increment × nprobe) and pushes `pb IN (…)`
   * into the scan, so a small increment's candidate read prunes to the
   * touched buckets instead of scanning the corpus
-  * (graft.IvfProbe measures the pruned read bytes flat-vs-corpus).
+  * (pruned read bytes measured flat-vs-corpus: BASELINE.md "Round-12
+  * addendum 3").
   *
   * Exactness: vectors are already exact integers
   * ([[SimilarityOps.quantized]]), centroids/cells persist as bigint
@@ -147,8 +148,8 @@ object IvfIndexStore {
     // rg is the persisted layout policy (record kv): bucket files
     // default to one row group, which makes an id point-lookup read
     // the whole file — a small parquet.block.size gives the In
-    // pushdown row-group stats to skip against (graft.PqProbe
-    // measures the re-rank read drop)
+    // pushdown row-group stats to skip against (the re-rank read drop
+    // is in BASELINE.md "Round-12 addendum 9b")
     (if (rowGroup > 0) w.option("parquet.block.size", rowGroup) else w)
       .partitionBy("pb").parquet(dir)
   }
@@ -177,7 +178,7 @@ object IvfIndexStore {
     * predicate pushed to parquet, which at vector-store ratios
     * (≈10 B of attrs vs ≈0.5-6 KB of vector per row) is 2-3 orders
     * of magnitude under the vector bytes the filter saves scoring
-    * (graft.FilteredAnnProbe measures both sides). */
+    * (BASELINE.md "filtered vector search" measures both sides). */
   private def writeAttrs(attrs: DataFrame, buckets: Int,
       dir: String): Unit =
     attrs
@@ -290,8 +291,9 @@ object IvfIndexStore {
     * quantizer's budget on within-cell variation. Cost: per-(query,
     * probed-cell) ADC tables (nprobe× more table rows, still a
     * broadcast) and a centroid join on the encode path (broadcast, no
-    * shuffle). Measured honestly (graft.PqProbe RESIDUAL rows):
-    * recall@3 = 1.00 at 10×/100× like the raw path, and at the 1×
+    * shuffle). Measured honestly (BASELINE.md "Round-13: nprobe/recall
+    * operating grid + residual PQ"): recall@3 = 1.00 at 10×/100× like
+    * the raw path, and at the 1×
     * toy budget (m=4, ksub=16, ~64-wide cells) residuals do NOT
     * rescue the 0.70 dip (0.63) — the grids show that dip is
     * SHORTLIST-PRECISION truncation (recall falls as nprobe grows at
@@ -699,7 +701,8 @@ object IvfIndexStore {
     * PQ-encode RAW; [[savePq]]'s `residual = true` selects the
     * paper's by-residual encoding (per-(query, cell) lookup tables —
     * see the flag's scaladoc). Measured on this corpus
-    * (graft.PqProbe): recall@3 = 1.00 at 10×/100× under BOTH
+    * (BASELINE.md "Round-13: nprobe/recall operating grid + residual
+    * PQ"): recall@3 = 1.00 at 10×/100× under BOTH
     * encodings and every nprobe ∈ {1,2,4,8}; at the 1× toy budget
     * (m=4, ksub=16, ~64-wide cells) recall dips to 0.70 and the
     * grids attribute it to SHORTLIST truncation, not coarse coverage
@@ -715,9 +718,9 @@ object IvfIndexStore {
     * vectors — and the only raw-vector read is the ≤ L×|queries|
     * re-rank. Candidate read bytes scale with probed-cell CODE bytes
     * (~m ints/vector), not member-vector bytes (dim × 8 B/vector):
-    * graft.PqProbe measures the ratio. Integer-exact end to end, so
-    * the DuckDB oracle gates the whole save → load → ADC → re-rank
-    * path bit-for-bit (`s_ann_index_pq`).
+    * BASELINE.md "Round-12 addendum 9" measures the ratio.
+    * Integer-exact end to end, so the DuckDB oracle gates the whole
+    * save → load → ADC → re-rank path bit-for-bit (`s_ann_index_pq`).
     *
     * Re-rank IO knobs: the In(vec_id) point fetch can only skip
     * what the storage exposes — default bucket files are one row
@@ -726,7 +729,7 @@ object IvfIndexStore {
     * layout for the stats to skip against), and Spark collapses an
     * In pushdown above `spark.sql.parquet.pushdown.inFilterThreshold`
     * (default 10) to a vacuous min/max range — deployments raise it
-    * past L×|queries| (graft.PqProbe measures the pair). */
+    * past L×|queries| (BASELINE.md "Round-12 addendum 9b"). */
   /** The ADC candidate frame — (qid, nid, adc) over the probed
     * cells' packed codes, bucket-pruned — plus the probed bucket
     * set (package-private so the spec can pin the pruned code-scan
@@ -762,8 +765,9 @@ object IvfIndexStore {
     // the allowed ids semi-join the CODE scan — a failing candidate
     // never costs an ADC table lookup, and the shortlist fills with
     // passing candidates instead of post-filtering them away (the
-    // same in-probe-vs-post-filter recall gap FilteredAnnProbe
-    // measures on the flat path, compounded here by the fixed L)
+    // same in-probe-vs-post-filter recall gap BASELINE.md's round-13
+    // "filtered vector search" section measures on the flat path,
+    // compounded here by the fixed L)
     val candCodes = pred match {
       case None => probedCodes
       case Some(p) =>
@@ -861,7 +865,7 @@ object IvfIndexStore {
     * shifting distribution crowds its mass into the few cells nearest
     * the new region: imbalance is the direct monitor for "this
     * index's probe cost is degenerating toward brute force"
-    * (graft.DriftProbe measures the whole arc). */
+    * (BASELINE.md "Round-12 addendum 8" measures the whole arc). */
   final case class DriftStats(cells: Long, vectors: Long,
       emptyCells: Long, maxCell: Long, meanCell: Double) {
     def imbalance: Double =
@@ -972,9 +976,9 @@ object IvfIndexStore {
     * from a shifted regime — and low-id seeding can never place a
     * centroid inside a newly-arrived cluster, so no iteration count
     * ever splits it; k-means only divides a region a seed lands in.
-    * graft.DriftProbe measures both: low-id retrain leaves the
-    * drifted cluster's cell intact, hash-seeded retrain splits it
-    * proportionally. `reseed = false` selects the low-id path (the
+    * BASELINE.md "Round-12 addendum 8" measures both: low-id retrain
+    * leaves the drifted cluster's cell intact, hash-seeded retrain
+    * splits it proportionally. `reseed = false` selects the low-id path (the
     * A/B leg; also what a caller wanting bit-compatibility with a
     * fresh [[save]] picks).
     *
@@ -1095,14 +1099,14 @@ object IvfIndexStore {
     * (bounded by P, never by |queries|) and pushed as a partition
     * filter, so a point-lookup ingest reads O(touched buckets), not
     * O(corpus) (IvfIndexSpec pins the partition-filter shape;
-    * graft.IvfProbe measures it).
+    * BASELINE.md "Round-12 addendum 3b" measures it).
     *
     * Cache scope (also [[adcShortlist]]): the probe frame is cached
     * through [[SimilarityOps]]' per-thread scoped registry — a
     * long-lived caller must call `SimilarityOps.releaseCaches()`
     * after materializing each call's result, or the cached probe
     * frames accumulate for the thread's lifetime (Bench/Verify do
-    * this between queries; graft.PqProbe after every call). */
+    * this between queries, through Harness.release). */
   /** `pred` turns the probe into FILTERED vector search (the
     * metadata-constrained top-k every production vector store
     * serves): the predicate runs against the attribute sidecar —
@@ -1115,7 +1119,7 @@ object IvfIndexStore {
     * recall cliff); the candidate frame is exactly where a
     * deployment counts survivors per query and escalates — the
     * `s_ann_filtered_adaptive` query implements that policy
-    * in-plan, and graft.FilteredAnnProbe measures the
+    * in-plan, and BASELINE.md "filtered vector search" measures the
     * selectivity × corpus grid. */
   def shortlist(index: IvfIndex, queries: DataFrame, nprobe: Int,
       topK: Int,

@@ -31,10 +31,11 @@ import graft.ops.ArtifactLog.Rec
   * bucket counts, never by shard size) and pushes them as partition
   * filters: a small shard's ingest reads the buckets its band hashes
   * land in plus the shingle buckets of its COLLIDING corpus docs, not
-  * the corpus (graft.DedupIndexProbe measures both reads
-  * flat-vs-corpus). Records, CAS commits, append/compact/vacuum and
-  * time travel are the shared [[ArtifactLog]] machinery — identical
-  * protocol to the catalog and the IVF store.
+  * the corpus (both reads measured flat-vs-corpus: BASELINE.md
+  * "Round-12 addendum 4b"). Records, CAS commits,
+  * append/compact/vacuum and time travel are the shared
+  * [[ArtifactLog]] machinery — identical protocol to the catalog and
+  * the IVF store.
   *
   * Exactness: [[verdicts]] on a LOADED index is row-identical to
   * [[DedupOps.incrementalVerdicts]] on the same corpus∪shard frame
@@ -64,7 +65,7 @@ object MinhashIndexStore {
     * min(1, shard_hashes / P), so buckets must OUTNUMBER a shard's
     * ~8×|shard| band hashes for the pruned scan to skip anything —
     * the first probe run used ~2048 docs/bucket and a 50-doc shard
-    * touched every bucket (graft.DedupIndexProbe's A/B caught it).
+    * touched every bucket (BASELINE.md "Round-12 addendum 4").
     * The 65536 cap bounds the dir count at object-store scale
     * (10⁹ docs → 65536 buckets of ~15k docs; a 400-hash shard still
     * prunes to 0.6%); floor of 8 keeps tiny test indexes
@@ -352,8 +353,9 @@ object MinhashIndexStore {
     *
     * Cadence policy: the forwarding map grows one entry per merge
     * until this flush, but resolution is a single broadcast hash join
-    * either way — graft.DedupIndexProbe's FWD_CURVE measures resolve
-    * wall FLAT from 0 to 10⁵ entries — so compaction cadence is set
+    * either way — resolve wall measured FLAT from 0 to 10⁵ entries
+    * (BASELINE.md "Round-13: forwarding-map resolve curve") — so
+    * compaction cadence is set
     * by MANIFEST hygiene (dir-list length: one dir family per ingest;
     * fold when it approaches the ~10²-line point where record parse
     * and multi-dir unions start to show) and by outstanding
@@ -478,7 +480,9 @@ object MinhashIndexStore {
       : (DataFrame, Array[Int], Array[Int]) = {
     val incB = DedupOps.scopedCache(DedupOps.bandFrame(shard))
     val probed =
-      if (!prune) Array.empty[Int] // A/B leg for graft.DedupIndexProbe
+      // unpruned: the reference path that the benchmark's verdict
+      // check compares the pruned verdicts against
+      if (!prune) Array.empty[Int]
       else incB
         .select(pmod(col("band_hash").cast("long"),
           lit(index.bandBuckets.toLong)).cast("int").as("pb"))

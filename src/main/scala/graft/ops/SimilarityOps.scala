@@ -31,7 +31,8 @@ object SimilarityOps {
   /** Codegen'd single-loop integer dot product ([[graft.functions
     * .DotLong]]) — the zip_with + aggregate formulation allocates an
     * intermediate array per evaluation; 4× measured query-level
-    * throughput (graft.DotProbe), compounding on the n×k assignment
+    * throughput (BASELINE.md "Round-8 dot-product probe"), compounding
+    * on the n×k assignment
     * paths. */
   private def dot(a: String, b: String) =
     graft.functions.GraftFunctions.dot_long(col(a), col(b))
@@ -261,9 +262,10 @@ object SimilarityOps {
     * DuckDB oracle replays exactly one); more iterations are the
     * RETRAIN knob — re-partitioning a drifted distribution usually
     * needs the centroids to walk, not hop once
-    * ([[IvfIndexStore.retrain]] threads it, graft.DriftProbe measures
-    * the difference). Each iteration's k-row centroid frame is
-    * collected and re-broadcast (k ≤ 65 536 rows — driver-trivial),
+    * ([[IvfIndexStore.retrain]] threads it; BASELINE.md "Round-12
+    * addendum 8" measures the difference). Each iteration's k-row
+    * centroid frame is collected and re-broadcast (k ≤ 65 536 rows —
+    * driver-trivial),
     * so the emb-wide assignment subplan does not STACK across
     * iterations: iteration i scans emb against a literal centroid
     * table, the same shape every k-means-on-Spark implementation
@@ -273,7 +275,7 @@ object SimilarityOps {
     * a multi-regime corpus (base + drifted appends) arrival order IS
     * the bias — low-id seeding can never place a centroid inside a
     * newly-arrived cluster, so no iteration count can split it
-    * (graft.DriftProbe measures exactly that;
+    * (BASELINE.md "Round-12 addendum 8" measures exactly that;
     * [[IvfIndexStore.retrain]] passes hash-sampled seeds instead).
     * Returns (cid, cv: array<bigint>, cn2), broadcast-hinted. */
   def ivfCentroids(emb: org.apache.spark.sql.DataFrame, k: Int,
@@ -623,8 +625,8 @@ object SimilarityOps {
     * cannot starve the probe of cells, only of candidates). At
     * corpus scale the attribute join is the argument for storing
     * attributes WITH the lists ([[IvfIndexStore]] persists exactly
-    * that via `attrs`; graft.FilteredAnnProbe measures the read
-    * sides); in this self-contained plan it is a co-partitioned
+    * that via `attrs`; BASELINE.md "filtered vector search" measures the
+    * read sides); in this self-contained plan it is a co-partitioned
     * equi-join on vec_id. Selectivity here is ~0.5 (label % 2 = 0),
     * where fixed nprobe=4 keeps every query's filtered candidate
     * set comfortably above k — the rare-predicate regime where that
@@ -818,8 +820,8 @@ object SimilarityOps {
     * broadcast centroids) and shortlisted against those cells' corpus
     * members only — the ingest cost is O(increment × k) assignment
     * plus O(increment × probed-cell population) scoring, never
-    * corpus × corpus and never a corpus re-train (ScaleBench's
-    * s_ann_increment points measure the increment scaling). The
+    * corpus × corpus and never a corpus re-train (the s_ann_increment
+    * Harness scale points measure the increment scaling). The
     * oracle replays the exact integer arithmetic end-to-end, so a
     * drifted centroid or a mis-probed cell hash-fails rather than
     * passing approximately. */
@@ -1111,9 +1113,10 @@ object SimilarityOps {
     * bigint counts). This is the observable a deployment polls to
     * decide [[IvfIndexStore.retrain]]: appends crowd a drifting
     * distribution into the cells nearest its new region, and this
-    * frame is where that crowding shows (graft.DriftProbe measures
-    * the full degrade→retrain→restored arc). The oracle is the
-    * append oracle's frozen-centroid assignment replay aggregated
+    * frame is where that crowding shows (BASELINE.md "Round-12
+    * addendum 8" measures the full degrade→retrain→restored arc). The
+    * oracle is the append oracle's frozen-centroid assignment replay
+    * aggregated
     * per cell — composed from [[ivfAppend]]'s SQL so the twins
     * cannot drift — and a LEFT join from the trained-centroid CTE so
     * an emptied cell hash-fails if the Spark side drops it. */
@@ -1360,9 +1363,10 @@ object SimilarityOps {
     * codes quantized against — and the exact re-rank is unchanged.
     * Residuals concentrate the m×ksub quantization budget on
     * within-cell variation — the production default at real budgets
-    * (FAISS by_residual=true); graft.PqProbe's RESIDUAL rows record
-    * both encodings honestly (recall@3 = 1.00 at 10×/100× either
-    * way; the 1× toy-budget dip is shortlist-L-bound and residuals
+    * (FAISS by_residual=true); BASELINE.md "Round-13: nprobe/recall
+    * operating grid + residual PQ" records both encodings honestly
+    * (recall@3 = 1.00 at 10×/100× either way; the 1× toy-budget dip
+    * is shortlist-L-bound and residuals
     * do not move it — see IvfIndexStore.savePq's scaladoc). All
     * arithmetic stays exact bigint (residual subtraction of two
     * bigint arrays), so the oracle replays the WHOLE path —
@@ -1533,8 +1537,9 @@ object SimilarityOps {
     * table lookup and the fixed-L shortlist fills with PASSING
     * candidates (post-filtering an unfiltered ADC shortlist starves
     * at rare predicates — the compounded version of the gap
-    * graft.FilteredAnnProbe measures on the flat path). Oracle: the
-    * [[pqLifecycle]] replay with the predicate spliced into its ADC
+    * BASELINE.md "filtered vector search" measures on the flat
+    * path). Oracle: the [[pqLifecycle]] replay with the predicate
+    * spliced into its ADC
     * candidate CTE, so the filter's position relative to the ADC
     * scoring, the shortlist window, and the exact re-rank is all
     * gated — a filter applied after the shortlist instead of before
@@ -2012,9 +2017,10 @@ object SimilarityOps {
   /** L-level generalization of [[twoLevelRanked]], engaged when
     * `spark.graft.ann.levels` > 2 (the default depth-2 path keeps the
     * oracle-pinned [[twoLevelRanked]] verbatim — depth, like
-    * nprobe/cprobe, is a recall-vs-cost KNOB measured by KnnProbe,
-    * not an oracle-pinned semantic). Each level over a k-sized table
-    * picks kc = ⌈(cprobe·k)^((ℓ-1)/ℓ)⌉ supers — the balance point of
+    * nprobe/cprobe, is a recall-vs-cost KNOB, measured in BASELINE.md
+    * "Round-10: depth-L hierarchy", not an oracle-pinned semantic).
+    * Each level over a k-sized table picks kc = ⌈(cprobe·k)^((ℓ-1)/ℓ)⌉
+    * supers — the balance point of
     * the recursive cost — and ranks BOTH vectors→supers and
     * centroids→supers through the (ℓ−1)-level pass, so per-vector
     * assignment work is Θ(ℓ·(cprobe^(ℓ−1)·k)^(1/ℓ)) (≈ n^(1/3) at
@@ -2080,7 +2086,7 @@ object SimilarityOps {
     * unset/"auto" derives it from the centroid count — the smallest
     * L ≥ 2 with k^(1/(L-1)) ≤ [[LevelBudget]], i.e.
     * L = 2 + max(0, ⌈log k / log 4096⌉ − 1): k ≤ 4096 → 2 (every
-    * sf0.01/sf0.1 oracle and the 100× ScaleBench point, so the
+    * sf0.01/sf0.1 oracle and the 100× Harness scale point, so the
     * pinned plans are unchanged), k ≤ 4096² (n ≈ 10⁹) → 3, beyond →
     * 4. A 100 TB corpus therefore picks its own depth instead of
     * leaving the Θ(n^1.5) total assignment work of a fixed L=2 on
@@ -2148,8 +2154,9 @@ object SimilarityOps {
     * Θ(n^(1/L)·L) per-vector assignment, log-depth → Θ(log n)); L = 2
     * is shipped because the DuckDB oracle mirrors a fixed depth.
     * (nprobe=20, 1 hop, cprobe=12) holds mutual-edge recall
-    * 0.848/0.850 at the sf0.01/sf0.1 gates (KnnProbe sweep tables in
-    * BASELINE.md; cprobe is the knob that matters under constant
+    * 0.848/0.850 at the sf0.01/sf0.1 gates (sweep tables in BASELINE.md
+    * "Round-10: hierarchical-assignment IVF"; cprobe is the knob that
+    * matters under constant
     * cells — it sets the √(cprobe/k) reachable-cell fraction at
     * small k, while a second NN-descent hop measured ~4× the wall
     * for LESS recall than cprobe 8→12).
@@ -2232,7 +2239,8 @@ object SimilarityOps {
     // scale-safe); each iteration converges the candidate graph
     // toward the true kNN graph INDEPENDENT of the coarse quantizer's
     // probe fraction, which is exactly what holds recall as n grows
-    // past the probed nprobe·64 window (KnnProbe sweep in BASELINE.md).
+    // past the probed nprobe·64 window (BASELINE.md "Round-10: ANN
+    // recall with the constant-cell policy ENGAGED").
     // Reverse-neighbor sample (the NN-descent sample-rate knob): the
     // shared-neighbor join's output is Σ in-degree² — quadratic under
     // hub skew; capping each vector's reverse list at 16 (ordered by
@@ -2283,22 +2291,6 @@ object SimilarityOps {
     scoredAll
       .withColumn("rn", row_number().over(w3)).filter(col("rn") <= 3)
       .select(col("qid").as("a"), col("nid").as("b"), col("cosine"))
-  }
-
-  /** Measurement seam for graft.KnnProbe: mutual-edge recall of the
-    * ANN graph vs exact at an arbitrary (nprobe, hops, cprobe) —
-    * (n_exact, n_ann, n_common). Releases its own caches. */
-  def annRecallProbe(s: org.apache.spark.sql.SparkSession, dir: String,
-      nprobe: Int, hops: Int, cprobe: Int): (Long, Long, Long) = {
-    val emb = scopedCache(quantized(s, dir))
-    val exactE = scopedCache(mutualEdges(exactKnn(emb)))
-    val annE = scopedCache(mutualEdges(annKnn(emb, nprobe, hops, cprobe)))
-    try {
-      val nA = annE.count()
-      val nE = exactE.count()
-      val nC = annE.join(exactE, Seq("u", "v")).count()
-      (nE, nA, nC)
-    } finally releaseCaches()
   }
 
   /** Mutual edges (u < v) from a top-k kNN frame: (a,b) kept iff the

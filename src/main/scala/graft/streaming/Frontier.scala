@@ -48,7 +48,8 @@ object Frontier {
     * computed by the [[graft.functions.UriRoutable]] native expression
     * — the same prefix-pruned Router that serves executor-side
     * resolve, inside whole-stage codegen (measured at parity with the
-    * monolithic-alternation rlike, RouteProbe/BASELINE.md), no per-row
+    * monolithic-alternation rlike, BASELINE.md "Round-8 route-dispatch
+    * throughput"), no per-row
     * driver logic and no UDF. */
   def withRoutability(frontier: DataFrame): DataFrame = {
     import graft.functions.GraftFunctions.uri_routable

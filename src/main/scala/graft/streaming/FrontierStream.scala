@@ -26,7 +26,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     partitions its claims/inserts/marks touch — a batch's staged
   *     bytes are O(delta), never O(state); the round-10 layout
   *     rewrote the ENTIRE frontier per batch, the loop's one O(state)
-  *     term (FrontierProbe measures the difference) — writes an
+  *     term (BASELINE.md "Round-11: O(delta) frontier state
+  *     commits" measures the difference) — writes an
   *     O(touched) `#delta` manifest record to `sv=<batchId>` (full
   *     `#manifest` checkpoints at the [[ManifestCheckpointEvery]]
   *     cadence bound the reader's overlay chain — metadata follows
@@ -75,7 +76,8 @@ object FrontierStream {
     * creation (manifests re-link old partition dirs; the count is
     * persisted in a `SPARTS` sidecar and asserted per batch). At 10⁹
     * frontier URIs and 120-key batches that is ~10⁴-10⁵ partitions;
-    * FrontierProbe demonstrates flat staged bytes at 2048. */
+    * BASELINE.md "Round-11: O(delta) frontier state commits" records
+    * flat staged bytes at 2048. */
   val StatePartitions = 64
 
   /** The state partition key: hash of `canonical` (= lower(uri) —
@@ -277,8 +279,8 @@ object FrontierStream {
   // expiry, or a seed batch (seeding already reads the full frontier)
   // the batch falls back to the full scan and REBUILDS the head — so
   // the full read amortizes to 1/[[HeadHorizonBatches]] of batches in
-  // steady state instead of every batch (FrontierProbe's read-bytes
-  // column measures the difference).
+  // steady state instead of every batch (BASELINE.md "Round-12:
+  // bounded claim reads" measures the difference).
   //
   // Crash/replay: head pointers carry the batch that produced them
   // and swap AFTER the commit pointer. A crash before the commit

@@ -40,22 +40,23 @@ class BenchCanarySpec extends AnyFunSuite {
       "clean or forced or first stamp") {
     val f = "BENCH_FULL_r13.json"
     // clean window → stamp normally
-    assert(Bench.stampTarget(f, 1.10, forced = false,
+    assert(Bench.stampTarget(f, 1.10, 1.10, forced = false,
       cleanStampExists = true) == f)
     // slow window over an existing stamp → quarantine
-    assert(Bench.stampTarget(f, 1.42, forced = false,
+    assert(Bench.stampTarget(f, 1.42, 1.42, forced = false,
       cleanStampExists = true) == "BENCH_FULL_r13.contaminated.json")
     // slow window but no stamp yet this round → self-describing stamp
-    assert(Bench.stampTarget(f, 1.42, forced = false,
+    assert(Bench.stampTarget(f, 1.42, 1.42, forced = false,
       cleanStampExists = false) == f)
     // forced → stamp
-    assert(Bench.stampTarget(f, 1.42, forced = true,
+    assert(Bench.stampTarget(f, 1.42, 1.42, forced = true,
       cleanStampExists = true) == f)
     // unmeasured (canary off / wrong SF) → no evidence to refuse on
-    assert(Bench.stampTarget(f, 0.0, forced = false,
+    assert(Bench.stampTarget(f, 0.0, 0.0, forced = false,
       cleanStampExists = true) == f)
     // boundary: the threshold itself is not a breach
-    assert(Bench.stampTarget(f, Bench.canaryThreshold, forced = false,
+    val at = Bench.canaryThreshold
+    assert(Bench.stampTarget(f, at, at, forced = false,
       cleanStampExists = true) == f)
   }
 
@@ -64,17 +65,53 @@ class BenchCanarySpec extends AnyFunSuite {
       "that writes it and sandbags the next)") {
     val f = "BENCH_FULL_r14.json"
     // fast window over an existing stamp → quarantine
-    assert(Bench.stampTarget(f, 0.66, forced = false,
+    assert(Bench.stampTarget(f, 0.66, 0.66, forced = false,
       cleanStampExists = true) == "BENCH_FULL_r14.contaminated.json")
     // fast window, first stamp of the round → self-describing stamp
-    assert(Bench.stampTarget(f, 0.66, forced = false,
+    assert(Bench.stampTarget(f, 0.66, 0.66, forced = false,
       cleanStampExists = false) == f)
     // forced → stamp
-    assert(Bench.stampTarget(f, 0.66, forced = true,
+    assert(Bench.stampTarget(f, 0.66, 0.66, forced = true,
       cleanStampExists = true) == f)
     // boundary: the lower threshold itself is not a breach
-    assert(Bench.stampTarget(f, Bench.canaryLowThreshold, forced = false,
+    val at = Bench.canaryLowThreshold
+    assert(Bench.stampTarget(f, at, at, forced = false,
       cleanStampExists = true) == f)
+  }
+
+  test("stampTarget quarantines when EITHER leg leaves the window " +
+      "(pre 0.77 / post 0.91 is a fast window, not a clean one)") {
+    val f = "BENCH_FULL_r15.json"
+    val quarantined = "BENCH_FULL_r15.contaminated.json"
+    assert(Bench.stampTarget(f, 0.77, 0.91, forced = false,
+      cleanStampExists = true) == quarantined)
+    assert(Bench.stampTarget(f, 0.91, 1.30, forced = false,
+      cleanStampExists = true) == quarantined)
+    assert(Bench.stampTarget(f, 0.91, 1.10, forced = false,
+      cleanStampExists = true) == f)
+    // the message names the leg and the bound it crossed
+    assert(Bench.canaryBreach(0.77, 0.91).contains("pre 0.77 < 0.8"))
+    assert(Bench.canaryBreach(1.00, 1.30).contains("post 1.30 > 1.25"))
+    assert(Bench.canaryBreach(0.91, 1.10).isEmpty)
+    assert(Bench.canaryBreach(0.0, 0.0).isEmpty)
+  }
+
+  test("BENCH_SUMMARY.json is written only for a 32-core stamp that " +
+      "went to the round's own name") {
+    val f = "BENCH_FULL_r15.json"
+    val clean = Bench.stampTarget(f, 0.95, 1.05, forced = false,
+      cleanStampExists = true)
+    assert(Bench.writesSummary("32", f, clean))
+    val fast = Bench.stampTarget(f, 0.77, 0.91, forced = false,
+      cleanStampExists = true)
+    assert(!Bench.writesSummary("32", f, fast))
+    // a first stamp of the round lands on fullName even out of window
+    val first = Bench.stampTarget(f, 0.77, 0.91, forced = false,
+      cleanStampExists = false)
+    assert(Bench.writesSummary("32", f, first))
+    // a scaling run at another core count never replaces the summary
+    val c8 = "BENCH_FULL_r15_c8.json"
+    assert(!Bench.writesSummary("8", c8, c8))
   }
 
   test("canary queries resolve in the registry and stay trivial " +

@@ -74,7 +74,8 @@ class EmbeddingIngestStreamSpec extends SparkTestBase {
     IvfIndexStore.save(root, corpus, 32)
 
     // drifted arrivals: every component shifted by a large constant
-    // (the DriftProbe regime) — all of them land in one frozen cell
+    // (the BASELINE.md round-12 drift regime) — all of them land in
+    // one frozen cell
     def driftedBatch(off: Long): Seq[IngestVec] =
       rawVecs(col("vec_id") >= 0).map(v => IngestVec(
         v.vec_id + off, v.embedding.map(_ + 1.5f)))

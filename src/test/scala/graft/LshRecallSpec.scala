@@ -66,9 +66,9 @@ class LshRecallSpec extends SparkTestBase {
       "depth)") {
     import graft.ops.SimilarityOps.autoLevels
     // oracle scales: sf0.01 → k=32, sf0.1 → k=32 (n=2000 sits at the
-    // cell floor); 100× ScaleBench → n=200,000 → k=3,125 — all L=2,
-    // so the pinned plans and recall gates are untouched by the auto
-    // rule
+    // cell floor); the 100× Harness scale point → n=200,000 →
+    // k=3,125 — all L=2, so the pinned plans and recall gates are
+    // untouched by the auto rule
     assert(autoLevels(32) == 2)
     assert(autoLevels(78) == 2)
     assert(autoLevels(3125) == 2)

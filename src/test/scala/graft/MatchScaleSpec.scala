@@ -99,29 +99,16 @@ class MatchScaleSpec extends SparkTestBase {
       }
     }
 
-  // per-run shuffle-write row telemetry (the ScaleBench listener
-  // pattern, drained by polling until stable — the bus is async)
-  private class ShufCount extends org.apache.spark.scheduler.SparkListener {
-    val rows = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-      rows.addAndGet(
-        sc.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-  }
-
+  // per-run shuffle-write row telemetry, read through the harness
+  // listener once the async bus has drained
   private def measured(f: Int): (Set[(String, String, String)], Double,
       String, Long) = {
-    val l = new ShufCount
+    val l = new Harness.Listener
     spark.sparkContext.addSparkListener(l)
     try {
       val (got, sec, plan) = run(f)
-      var prev = -1L
-      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-      while (l.rows.get != prev && System.nanoTime() < deadline) {
-        prev = l.rows.get
-        Thread.sleep(200)
-      }
-      (got, sec, plan, l.rows.get)
+      l.drain()
+      (got, sec, plan, l.totals.writeRecs)
     } finally spark.sparkContext.removeSparkListener(l)
   }
 

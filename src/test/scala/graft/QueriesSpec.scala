@@ -78,10 +78,10 @@ class QueriesSpec extends SparkTestBase {
   test("cluster label memo rebuilds after an external unpersist") {
     val before = Registry.byName("d_dedup_clusters").run(spark, sf001)
       .collect().toSet
-    // simulate Bench.release(): kill every persisted block, including
-    // the memoized label checkpoint (lineage-truncated, can't recompute)
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    // the harness release between queries kills every persisted
+    // block, including the memoized label checkpoint (lineage-truncated,
+    // can't recompute)
+    Harness.release(spark)
     val after = Registry.byName("d_dedup_clusters").run(spark, sf001)
       .collect().toSet
     assert(before == after)

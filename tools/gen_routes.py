@@ -274,7 +274,7 @@ def emit_scala(regs):
     w("  * ([[graft.streaming.Frontier.withRoutability]]); the anchored")
     w("  * `^(p1|p2|...)$` alternation of `route.py:187-200` remains")
     w("  * available through [[alternation]] as the reference-shaped")
-    w("  * baseline (RouteProbe cross-checks the two every run).")
+    w("  * baseline.")
     w("  */")
     w("object RouteRegistry {")
     for router in ("visit", "map", "priority"):
