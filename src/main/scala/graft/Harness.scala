@@ -40,16 +40,18 @@ object Harness {
     spark
   }
 
-  /** Drop every cache a query may leave behind: the ANN- and
-    * dedup-family scoped caches, the catalog cache and every persisted
-    * RDD (memoized checkpoints included). Run between queries so
-    * block-manager state never accumulates across a suite. */
-  def release(spark: SparkSession): Unit = {
-    graft.ops.SimilarityOps.releaseCaches()
-    graft.ops.DedupOps.releaseCaches()
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-  }
+  /** Drop every cache a query may leave behind: this thread's root
+    * [[Scope]] region, the catalog cache and every persisted RDD
+    * (memoized checkpoints included). Run between queries so
+    * block-manager state never accumulates across a suite. A failed
+    * background task the query left unjoined is rethrown after the
+    * cleanup. */
+  def release(spark: SparkSession): Unit =
+    try Scope.release()
+    finally {
+      spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    }
 
   def force(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()

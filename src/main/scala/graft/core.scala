@@ -3,7 +3,10 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared helpers used by every query in the registry.
+/** Shared helpers used by every query in the registry: table reads
+  * ([[t]]), input spreading ([[par]]), job labels ([[labeled]]) and
+  * exact money arithmetic ([[cents]]). Caches, checkpoints, background
+  * actions and AQE-off staging writes are scoped by [[Scope]].
   *
   * Oracle-determinism conventions (the driver hash-compares our parquet
   * output against DuckDB running [[SparkEntry.oracleSql]] on the same
@@ -100,126 +103,6 @@ object core {
     sc.setJobDescription(desc)
     try f
     finally sc.setJobDescription(prev)
-  }
-
-  /** Run `f` with adaptive query execution disabled, restoring the
-    * previous setting on exit (nesting-safe). For artifact STAGING
-    * WRITES only: those plans are a scan → explicit bucket
-    * repartition → write, with no joins to re-strategize and a
-    * partitioning that IS the on-disk layout (one file per bucket),
-    * so AQE has nothing to improve — but it still materializes every
-    * shuffle stage as its own job, turning a 1-job write into 2-5
-    * driver round-trips (the per-job traces in OPTIMIZATION_r13.md §10
-    * show the lifecycle queries spending their wall on exactly these
-    * barriers; at cluster scale each is a full scheduling round per
-    * commit).
-    * Session conf is shared across threads, so the toggle wraps the
-    * whole inParallel write batch, never an individual thunk, and
-    * nothing else may run on the session between set and restore
-    * (true for every store call site: the batch is the only live
-    * work). NOT for general queries — AQE's runtime broadcast
-    * conversion is what keeps iterative-join loops cheap (the r13
-    * fixpoint A/B that measured 3-10× worse without it). */
-  private val aqeOff =
-    scala.collection.mutable.Map.empty[SparkSession, (Int, String)]
-
-  def withoutAqe[T](s: SparkSession)(f: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    // Refcounted per session (ADVICE r13/r14): two overlapping calls on
-    // different threads (a streaming staging batch racing an ad-hoc
-    // store op) could interleave set/restore and leave AQE off for the
-    // whole session. The FIRST caller entering on a session saves its
-    // live value and disables; the LAST caller leaving that session
-    // restores it — nested and concurrent batches compose, and sessions
-    // never share a count or a saved value. (A query compiling on an
-    // unrelated thread of the same session DURING a batch still sees
-    // AQE off — inherent to session-level conf and acceptable for the
-    // store-commit call sites, where the batch is normally the only
-    // live work.)
-    aqeOff.synchronized {
-      val (depth, saved) = aqeOff.getOrElse(s, (0, s.conf.get(key, "true")))
-      if (depth == 0) s.conf.set(key, "false")
-      aqeOff(s) = (depth + 1, saved)
-    }
-    try f
-    finally aqeOff.synchronized {
-      val (depth, saved) = aqeOff(s)
-      if (depth == 1) { aqeOff.remove(s); s.conf.set(key, saved) }
-      else aqeOff(s) = (depth - 1, saved)
-    }
-  }
-
-  /** Run independent Spark actions concurrently from a small thread
-    * pool (guide §2.6 "overlap independent jobs"): an artifact commit
-    * stages several tables (centroids, books, cells, codes; bands,
-    * shingles, labels) whose writes have no dependency on each other,
-    * and running them sequentially leaves the cluster idle through
-    * each write's scheduling tail. Each task gets its own job
-    * description (thread-local, so labels stay correct). Exceptions
-    * propagate with their original type. Staging writes land in
-    * separate directories, and the artifact-log commit happens
-    * strictly AFTER this returns, so concurrency never changes commit
-    * semantics. */
-  def inParallel(s: SparkSession, tasks: (String, () => Unit)*): Unit =
-    if (tasks.lengthCompare(1) <= 0) tasks.foreach(_._2())
-    else {
-      val pool =
-        java.util.concurrent.Executors.newFixedThreadPool(tasks.length)
-      try {
-        val futs = tasks.map { case (desc, f) =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            def call(): Unit = labeled(s, desc)(f())
-          })
-        }
-        futs.foreach { fu =>
-          try fu.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              throw e.getCause
-          }
-        }
-      } finally pool.shutdown()
-    }
-
-  /** Run ONE independent Spark action on a background thread while the
-    * caller's driver-blocking chain proceeds (guide §2.6, the
-    * inParallel idea started EARLY instead of batched at the end): an
-    * artifact staging write that depends only on already-available
-    * frames can overlap the serial collect chain that computes the
-    * rest of the commit. Returns a join function that rethrows the
-    * task's failure with its original type — the caller MUST invoke it
-    * before committing anything that assumes the write landed. */
-  def async[T](s: SparkSession, desc: String)(f: => T): () => T = {
-    val task = new java.util.concurrent.FutureTask[T](
-      new java.util.concurrent.Callable[T] {
-        def call(): T = labeled(s, desc)(f)
-      })
-    val t = new Thread(task, s"graft-async-$desc")
-    t.setDaemon(true)
-    t.start()
-    () =>
-      try task.get()
-      catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
-      }
-  }
-
-  /** Start materializing a CACHED frame on a background thread while
-    * the caller runs independent driver-blocking work (an iterative
-    * fixpoint loop, another training pass) — guide §2.6 applied
-    * inside one query: the final plan that consumes `df` finds its
-    * cache warm instead of paying the subplan after the loop. The
-    * caller must `join()` the returned thread before its final frame
-    * escapes the query body. Failures are swallowed here — a cold or
-    * partially-warm cache only means the terminal action computes the
-    * subplan itself and surfaces any real error deterministically. */
-  def warmAsync(s: SparkSession, desc: String, df: DataFrame): Thread = {
-    val t = new Thread(() =>
-      try labeled(s, desc) { df.count(); () }
-      catch { case _: Throwable => () })
-    t.setDaemon(true)
-    t.start()
-    t
   }
 
   /** Exact integer cents: CAST(FLOOR(x*100 + 0.5) AS BIGINT).

@@ -94,11 +94,15 @@ private[graft] object ArtifactLog {
     parse(kind, Files.readString(p.get).trim)
   }
 
-  /** CAS-commit `rec` as `readVersion + 1`; [[TxLog.CommitConflict]]
-    * propagates for the caller's rebase loop. */
+  /** CAS-commit `rec` as `readVersion + 1`, after joining the calling
+    * [[graft.Scope]] region's background tasks (the staging writes the
+    * record names); [[TxLog.CommitConflict]] propagates for the
+    * caller's rebase loop. */
   def commit(root: String, kind: String, readVersion: Long, rec: Rec,
-      store: CommitStore): Long =
+      store: CommitStore): Long = {
+    graft.Scope.join()
     TxLog.commit(root, readVersion, render(kind, rec), store)
+  }
 
   /** Prune history: keep the newest `keep` records, delete older
     * ones, then delete top-level data dirs no kept record references

@@ -75,11 +75,9 @@ object ConnectedComponents {
   /** Edge-count gate below which [[labels]] resolves the component
     * structure with a single collect + driver union-find instead of
     * the distributed star rounds (see the inline comment in
-    * [[labels]]). Env-overridable for scale probes and specs
-    * (`SPARK_GRAFT_CC_LOCAL_EDGES=0` forces the distributed path). */
-  def defaultLocalEdgeThreshold: Long =
-    sys.env.get("SPARK_GRAFT_CC_LOCAL_EDGES")
-      .flatMap(_.toLongOption).getOrElse(1000000L)
+    * [[labels]]); `localEdgeThreshold = 0` forces the distributed
+    * path. */
+  val defaultLocalEdgeThreshold: Long = 1000000L
 
   /** Label every node in `nodes` (single column `doc_id`, including
     * singletons) with its component minimum, from undirected `edges`

@@ -22,30 +22,8 @@ import org.apache.spark.sql.expressions.Window
   */
 object DedupOps {
 
-  /** Caches registered by the dedup family, releasable by the caller
-    * once the final action has run — the same PER-THREAD registry
-    * treatment the ANN family got in
-    * [[graft.ops.SimilarityOps.releaseCaches]] (ADVICE r11 flagged
-    * [[prefixCandidates]]' unpaired `cache()` as the one remaining
-    * library-side leak for long-lived sessions; Bench/Verify release
-    * per query, but a caller composing these ops into an always-on
-    * session needs a scoped release, not session-wide cleanup). */
-  private val scopedCaches = ThreadLocal.withInitial(() =>
-    new java.util.ArrayDeque[org.apache.spark.sql.DataFrame]())
-
-  private[ops] def scopedCache(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val c = df.cache(); scopedCaches.get().add(c); c
-  }
-
-  /** Unpersist every frame cached by the dedup family ON THIS THREAD
-    * since the last release. Call after the consuming action
-    * completes, from the thread that built the query. */
-  def releaseCaches(): Unit = {
-    val caches = scopedCaches.get()
-    var df = caches.poll()
-    while (df != null) { df.unpersist(false); df = caches.poll() }
-  }
+  /** Frees this thread's root [[graft.Scope]] region. */
+  def releaseCaches(): Unit = Scope.release()
 
   private def words = filter(split(col("text"), " "), w => w =!= "")
 
@@ -102,7 +80,7 @@ object DedupOps {
     // the shingle frame feeds three branches (signatures, exploded
     // grams, sizes); tokenize+shingle once, not three times.
     // MEMORY_AND_DISK default: spills rather than OOMs at scale.
-    scopedCache(shingleDocs(par(t(s, dir, "documents"))))
+    Scope.cache(shingleDocs(par(t(s, dir, "documents"))))
 
   /** Banded-LSH verified pairs over a pre-shingled (doc_id, sh) frame.
     * 3-token shingles: single tokens are too coarse on small
@@ -135,7 +113,7 @@ object DedupOps {
     // corpus band computation happen once per query instead of once
     // per action (the self-join below reused its exchange already;
     // this extends the reuse ACROSS actions)
-    val bands = scopedCache(bandFrame(docs))
+    val bands = Scope.cache(bandFrame(docs))
     val a = bands.alias("a")
     val b = bands.alias("b")
     val cand = a.join(b,
@@ -253,7 +231,7 @@ object DedupOps {
     val freq = grams.groupBy("gh").agg(count(lit(1)).as("df"))
     val w = Window.partitionBy("doc_id")
       .orderBy(col("df"), col("gh"), col("g"))
-    val pre = scopedCache(grams.join(freq, "gh")
+    val pre = Scope.cache(grams.join(freq, "gh")
       .withColumn("rn", row_number().over(w))
       .join(sizes, "doc_id")
       .filter(col("rn") <= expr("n_sh - (n_sh + 1) div 2 + 1"))
@@ -644,7 +622,7 @@ object DedupOps {
       // point of the sampled audit is to NOT pay corpus-sized work
       // (filtering the shared cached shingle frame would tokenize
       // everything first)
-      val sample = scopedCache(shingleDocs(
+      val sample = Scope.cache(shingleDocs(
         par(t(s, dir, "documents").filter(col("doc_id") % 2 === 0))))
       val nExact = exactJaccardPairs(sample)
         .agg(count(lit(1)).as("n_exact"))
@@ -922,18 +900,19 @@ object DedupOps {
     * lock, NOT inside the ConcurrentHashMap's bin lock — the map only
     * ever stores cheap holders, so concurrent callers on other keys
     * never block behind a Spark job. Liveness of the memoized
-    * localCheckpoint is checked driver-side: the checkpoint's RDD id
-    * must still be registered in `getPersistentRDDs` (exactly the map
-    * an external release — e.g. `Bench.release()` — unpersists from).
-    * No Spark job on warm reuse; falls back to a one-row probe only if
-    * the plan shape ever hides the checkpoint RDD. */
+    * localCheckpoint is checked driver-side: the checkpoint's RDD must
+    * still carry a storage level (an external release — e.g.
+    * `Harness.release` — unpersists it, which resets the level to
+    * NONE). No Spark job on warm reuse; falls back to a one-row probe
+    * only if the plan shape ever hides the checkpoint RDD. */
   private final class LabelsHolder(s: org.apache.spark.sql.SparkSession,
       dir: String) {
     private var frame: org.apache.spark.sql.DataFrame = null
-    private var rddId: Option[Int] = None
+    private var rdd: Option[org.apache.spark.rdd.RDD[_]] = None
 
-    private def alive: Boolean = frame != null && (rddId match {
-      case Some(id) => s.sparkContext.getPersistentRDDs.contains(id)
+    private def alive: Boolean = frame != null && (rdd match {
+      case Some(r) =>
+        r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE
       case None =>
         try { frame.take(1); true } catch { case _: Throwable => false }
     })
@@ -945,8 +924,8 @@ object DedupOps {
         val nodes = t(s, dir, "documents").select(col("doc_id"))
         frame = ConnectedComponents.labels(nodes, edges)
           .localCheckpoint(true)
-        rddId = frame.queryExecution.analyzed.collectFirst {
-          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+        rdd = frame.queryExecution.analyzed.collectFirst {
+          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
         }
       }
       frame
@@ -1540,7 +1519,7 @@ object DedupOps {
     // materialization overhead measured as a slight pairwise LOSS, so
     // they keep the plain plans (r13 interleaved A/B, 3 pairs each).
     def maybeCache(df: org.apache.spark.sql.DataFrame) =
-      if (cache) scopedCache(df) else df
+      if (cache) Scope.cache(df) else df
     val toks = maybeCache(par(t(s, dir, "documents"))
       .select(col("doc_id"), words.as("ws"))
       .select(col("doc_id"), col("ws"), size(col("ws")).as("n_tokens"))

@@ -438,10 +438,10 @@ object GraphOps {
       // (guide §2.6 inside one query) — the final join then reads a
       // warm cache instead of paying the vers-resolution subplan
       // after the loop
-      val pins = DedupOps.scopedCache(pinnedEdges(s, dir))
-      val warm = graft.core.warmAsync(s, "pins:prefetch", pins)
+      val pins = Scope.cache(pinnedEdges(s, dir))
+      val warm = Scope.fork(s, "pins:prefetch")(pins.count())
       val reach = bfs(seeds, edges(s, dir))
-      warm.join()
+      warm()
       reach.join(pins, reach("node") === pins("src"))
         .groupBy(col("root"), col("dst").as("dep"))
         .agg(count(lit(1)).as("n_edges"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.Scope
 import graft.catalog.{CommitStore, LinkCommitStore, TxLog}
 import graft.ops.ArtifactLog.Rec
 
@@ -200,19 +201,19 @@ object IvfIndexStore {
     * trained centroids. Returns the committed version. */
   def save(root: String, corpus: DataFrame, k: Int,
       store: CommitStore = LinkCommitStore, iters: Int = 1,
-      attrs: Option[DataFrame] = None): Long = {
+      attrs: Option[DataFrame] = None): Long = Scope {
     TxLog.init(root)
     // the Lloyd-iteration subplan behind the centroids feeds THREE
     // actions (empty check, centroid write, cell assignment) — cache
-    // locally so it runs once (terminal scope, like
+    // it for this call so it runs once (like
     // MinhashIndexStore.save's corpus cache)
-    val cents = SimilarityOps.ivfCentroids(corpus, k, iters).cache()
+    val cents = Scope.cache(SimilarityOps.ivfCentroids(corpus, k, iters))
     val sess = corpus.sparkSession
-    try graft.core.labeled(sess, "ivf:save") {
+    graft.core.labeled(sess, "ivf:save") {
       // the attr sidecar's bucket sizing (a count over the attrs
       // frame) is independent of training — overlap it with the
       // train gate and the staging writes (guide §2.6)
-      val apFut = attrs.map(a => graft.core.async(sess, "ivf:save:attrs-n")(
+      val apFut = attrs.map(a => Scope.fork(sess, "ivf:save:attrs-n")(
         defaultAttrBuckets(a.count())))
       require(!graft.core.labeled(sess, "ivf:save:train")(cents.isEmpty),
         "IVF save needs a non-empty training corpus (the coarse " +
@@ -222,32 +223,25 @@ object IvfIndexStore {
       val cells = SimilarityOps.ivfCells(corpus, cents)
       val dirName = UUID.randomUUID().toString
       // ALL independent staging writes — centroids, cells, and the
-      // attr sidecar (which used to run serially after the batch) —
-      // overlap (guide §2.6); each attr thunk joins its own bucket
-      // count, so the sizing job overlaps the other writes too
-      val apBox = new java.util.concurrent.atomic.AtomicInteger(0)
-      graft.core.inParallel(sess,
-        Seq(
-          "ivf:save:write:centroids" -> (() =>
-            cents.write.parquet(s"$root/data/$dirName/centroids")),
-          "ivf:save:write:cells" -> (() =>
-            writeCells(cells, defaultBuckets(k),
-              s"$root/data/$dirName/cells"))) ++
-          attrs.toSeq.zip(apFut.toSeq).map { case (a, f) =>
-            "ivf:save:write:attrs" -> (() => {
-              val ap = f()
-              apBox.set(ap)
-              writeAttrs(a, ap, s"$root/data/$dirName/attrs")
-            })
-          }: _*)
-      val attrKv = attrs.toSeq.map(_ => "ap" -> apBox.get().toString)
+      // attr sidecar — overlap (guide §2.6) and the commit joins
+      // them; the attr write joins its own bucket count, so the
+      // sizing job overlaps the other writes too
+      Scope.fork(sess, "ivf:save:write:centroids")(
+        cents.write.parquet(s"$root/data/$dirName/centroids"))
+      Scope.fork(sess, "ivf:save:write:cells")(
+        writeCells(cells, defaultBuckets(k), s"$root/data/$dirName/cells"))
+      attrs.zip(apFut).foreach { case (a, f) =>
+        Scope.fork(sess, "ivf:save:write:attrs")(
+          writeAttrs(a, f(), s"$root/data/$dirName/attrs"))
+      }
+      val attrKv = apFut.toSeq.map(f => "ap" -> f().toString)
       val base = mkRec(k, defaultBuckets(k), s"$dirName/centroids",
         Seq(s"$dirName/cells"))
       val rec = Rec(base.kv ++ attrKv,
         base.dirs ++ attrs.toSeq.map(_ => "A" -> s"$dirName/attrs"))
       val v = ArtifactLog.list(root).headOption.map(_._1).getOrElse(0L)
       ArtifactLog.commit(root, Kind, v, rec, store)
-    } finally cents.unpersist(false)
+    }
   }
 
   def load(spark: SparkSession, root: String): IvfIndex = {
@@ -307,132 +301,108 @@ object IvfIndexStore {
       ksub: Int, store: CommitStore = LinkCommitStore,
       iters: Int = 1, rowGroupBytes: Int = 0,
       residual: Boolean = false,
-      attrs: Option[DataFrame] = None): Long = {
+      attrs: Option[DataFrame] = None): Long = Scope {
     TxLog.init(root)
-    val corp = corpus.cache() // feeds coarse train + assign + PQ train + encode
+    // feeds coarse train + assign + PQ train + encode
+    val corp = Scope.cache(corpus)
     val sess = corpus.sparkSession
-    try {
-      // the attr sidecar's bucket sizing (a count over the attrs
-      // frame) is independent of training — overlap it with the
-      // whole train/encode chain (guide §2.6) and join at record
-      // render time
-      val apFut = attrs.map(a => graft.core.async(sess, "pq:attrs-n")(
-        defaultAttrBuckets(a.count())))
-      // one limit(1) action answers BOTH the non-empty gate and the
-      // dimension probe (was an isEmpty + a head() — two jobs)
-      val dimOpt = graft.core.labeled(sess, "pq:corp")(
-        corp.select(size(col("v"))).limit(1).collect().headOption
-          .map(_.getInt(0)))
-      require(dimOpt.isDefined,
-        "IVF-PQ save needs a non-empty training corpus (same " +
-          "no-empty-bootstrap rule as save)")
-      val dim = dimOpt.get
-      require(dim % m == 0,
-        s"vector dim $dim is not divisible by m=$m subspaces")
-      val subDim = dim / m
-      val cents = SimilarityOps.ivfCentroids(corp, k, iters).cache()
-      // NON-residual books train on the raw corpus — independent of
-      // the coarse quantizer, so the two Lloyd passes overlap
-      // (guide §2.6). Residual books need cents first (they train on
-      // x − c(cell)) and stay sequential below.
-      val booksEager =
-        if (residual) None
-        else Some(SimilarityOps.pqCodebooks(corp, m, subDim, ksub,
-          iters).cache())
-      try {
-        // the training counts ARE the non-empty gates (was a count
-        // plus a separate isEmpty job per trained frame)
-        @volatile var centsN = -1L
-        @volatile var booksN = -1L
-        graft.core.inParallel(sess,
-          Seq("pq:coarse-train" -> (() => { centsN = cents.count(); () })) ++
-            booksEager.toSeq.map(b =>
-              "pq:book-train" -> (() => { booksN = b.count(); () })): _*)
-        require(centsN > 0,
-          "IVF-PQ training produced no centroids (the default low-id " +
-            "seeding needs corpus ids below k; pass explicit seeds " +
-            "otherwise)")
-        val dirName = UUID.randomUUID().toString
-        val buckets = defaultBuckets(k)
-        // the trained centroid frame is final here — its staging
-        // write depends on nothing below, so it overlaps the whole
-        // assign/book-train/encode chain (guide §2.6) instead of
-        // joining the terminal write batch; the commit still waits
-        val centsStaged = graft.core.async(sess, "pq:write:centroids")(
-          cents.write.parquet(s"$root/data/$dirName/centroids"))
-        // the trained-centroid assignment feeds TWO sinks (the cells
-        // table write and the PQ encode / residual path) — cache for
-        // the call's scope or the broadcast argmin pass runs twice
-        val cells = SimilarityOps.ivfCells(corp, cents).cache()
-        // residual PQ trains and encodes on x − c(cell); the residual
-        // frame feeds book training AND the encode, so it caches for
-        // the call's scope
-        val resid =
-          if (residual)
-            Some(SimilarityOps.residuals(cells, cents).cache())
-          else None
-        try {
-          val books = booksEager.getOrElse(SimilarityOps.pqCodebooks(
-            resid.getOrElse(corp), m, subDim, ksub, iters).cache())
-          try {
-            // residual books train only here — their materializing
-            // count is the gate (the non-residual count was captured
-            // in the overlapped train above)
-            if (booksN < 0)
-              booksN = graft.core.labeled(sess, "pq:book-train")(
-                books.count())
-            require(booksN > 0,
-              "IVF-PQ training produced no codebooks (the default " +
-                "low-id seeding needs corpus ids below ksub; pass " +
-                "explicit seeds otherwise)")
-            // encode carries the coarse cell through the argmin, so
-            // the code table buckets like the lists WITHOUT an n×n
-            // re-join of codes to assignment
-            val codes = SimilarityOps.pqEncode(
-              resid.getOrElse(cells), books, m, subDim,
-              carry = Seq("cell"))
-            // 3 remaining independent staging writes to separate dirs:
-            // overlap them (guide §2.6) — the commit record below is
-            // written only after all (and the centroid write) complete,
-            // so atomicity is unchanged
-            val attrKv = attrs.zip(apFut).toSeq.map { case (_, f) =>
-              "ap" -> f().toString
-            }
-            graft.core.inParallel(sess,
-              Seq(
-                "pq:write:books" -> (() =>
-                  books.write.parquet(s"$root/data/$dirName/books")),
-                "pq:write:cells" -> (() =>
-                  writeCells(cells, buckets,
-                    s"$root/data/$dirName/cells", rowGroupBytes)),
-                "pq:write:codes" -> (() =>
-                  writeCodes(codes, buckets,
-                    s"$root/data/$dirName/codes"))) ++
-                attrs.toSeq.zip(attrKv).map { case (a, (_, ap)) =>
-                  "pq:write:attrs" -> (() =>
-                    writeAttrs(a, ap.toInt,
-                      s"$root/data/$dirName/attrs"))
-                }: _*)
-            centsStaged()
-            val rec = Rec(
-              Seq("k" -> k.toString, "p" -> buckets.toString,
-                "m" -> m.toString, "sd" -> subDim.toString,
-                "ks" -> ksub.toString) ++
-                (if (rowGroupBytes > 0)
-                  Seq("rg" -> rowGroupBytes.toString) else Nil) ++
-                (if (residual) Seq("res" -> "1") else Nil) ++ attrKv,
-              Seq("C" -> s"$dirName/centroids", "B" -> s"$dirName/books",
-                "D" -> s"$dirName/cells", "Q" -> s"$dirName/codes") ++
-                attrs.toSeq.map(_ => "A" -> s"$dirName/attrs"))
-            val v =
-              ArtifactLog.list(root).headOption.map(_._1).getOrElse(0L)
-            ArtifactLog.commit(root, Kind, v, rec, store)
-          } finally books.unpersist(false)
-        } finally {
-          resid.foreach(_.unpersist(false)); cells.unpersist(false)
-        }
-      } finally cents.unpersist(false)
-    } finally corp.unpersist(false)
+    // the attr sidecar's bucket sizing (a count over the attrs
+    // frame) is independent of training — overlap it with the
+    // whole train/encode chain (guide §2.6) and join at record
+    // render time
+    val apFut = attrs.map(a => Scope.fork(sess, "pq:attrs-n")(
+      defaultAttrBuckets(a.count())))
+    // one limit(1) action answers BOTH the non-empty gate and the
+    // dimension probe (was an isEmpty + a head() — two jobs)
+    val dimOpt = graft.core.labeled(sess, "pq:corp")(
+      corp.select(size(col("v"))).limit(1).collect().headOption
+        .map(_.getInt(0)))
+    require(dimOpt.isDefined,
+      "IVF-PQ save needs a non-empty training corpus (same " +
+        "no-empty-bootstrap rule as save)")
+    val dim = dimOpt.get
+    require(dim % m == 0,
+      s"vector dim $dim is not divisible by m=$m subspaces")
+    val subDim = dim / m
+    val cents = Scope.cache(SimilarityOps.ivfCentroids(corp, k, iters))
+    // NON-residual books train on the raw corpus — independent of
+    // the coarse quantizer, so the two Lloyd passes overlap
+    // (guide §2.6). Residual books need cents first (they train on
+    // x − c(cell)) and stay sequential below.
+    val booksEager =
+      if (residual) None
+      else Some(Scope.cache(SimilarityOps.pqCodebooks(corp, m, subDim,
+        ksub, iters)))
+    // the training counts ARE the non-empty gates (was a count
+    // plus a separate isEmpty job per trained frame)
+    val centsN = Scope.fork(sess, "pq:coarse-train")(cents.count())
+    val booksEagerN =
+      booksEager.map(b => Scope.fork(sess, "pq:book-train")(b.count()))
+    require(centsN() > 0,
+      "IVF-PQ training produced no centroids (the default low-id " +
+        "seeding needs corpus ids below k; pass explicit seeds " +
+        "otherwise)")
+    val dirName = UUID.randomUUID().toString
+    val buckets = defaultBuckets(k)
+    // the trained centroid frame is final here — its staging
+    // write depends on nothing below, so it overlaps the whole
+    // assign/book-train/encode chain (guide §2.6); the commit joins it
+    Scope.fork(sess, "pq:write:centroids")(
+      cents.write.parquet(s"$root/data/$dirName/centroids"))
+    // the trained-centroid assignment feeds TWO sinks (the cells
+    // table write and the PQ encode / residual path) — cache for
+    // the call's scope or the broadcast argmin pass runs twice
+    val cells = Scope.cache(SimilarityOps.ivfCells(corp, cents))
+    // residual PQ trains and encodes on x − c(cell); the residual
+    // frame feeds book training AND the encode, so it caches for
+    // the call's scope
+    val resid =
+      if (residual) Some(Scope.cache(SimilarityOps.residuals(cells, cents)))
+      else None
+    val books = booksEager.getOrElse(Scope.cache(SimilarityOps.pqCodebooks(
+      resid.getOrElse(corp), m, subDim, ksub, iters)))
+    // residual books train only here — their materializing count is
+    // the gate (the non-residual count runs in the overlapped train)
+    val booksN = booksEagerN.map(_()).getOrElse(
+      graft.core.labeled(sess, "pq:book-train")(books.count()))
+    require(booksN > 0,
+      "IVF-PQ training produced no codebooks (the default " +
+        "low-id seeding needs corpus ids below ksub; pass " +
+        "explicit seeds otherwise)")
+    // encode carries the coarse cell through the argmin, so
+    // the code table buckets like the lists WITHOUT an n×n
+    // re-join of codes to assignment
+    val codes = SimilarityOps.pqEncode(
+      resid.getOrElse(cells), books, m, subDim,
+      carry = Seq("cell"))
+    // the remaining independent staging writes to separate dirs
+    // overlap (guide §2.6) — the commit record below is written only
+    // after all of them (and the centroid write) complete, so
+    // atomicity is unchanged
+    Scope.fork(sess, "pq:write:books")(
+      books.write.parquet(s"$root/data/$dirName/books"))
+    Scope.fork(sess, "pq:write:cells")(
+      writeCells(cells, buckets, s"$root/data/$dirName/cells",
+        rowGroupBytes))
+    Scope.fork(sess, "pq:write:codes")(
+      writeCodes(codes, buckets, s"$root/data/$dirName/codes"))
+    attrs.zip(apFut).foreach { case (a, f) =>
+      Scope.fork(sess, "pq:write:attrs")(
+        writeAttrs(a, f(), s"$root/data/$dirName/attrs"))
+    }
+    val attrKv = apFut.toSeq.map(f => "ap" -> f().toString)
+    val rec = Rec(
+      Seq("k" -> k.toString, "p" -> buckets.toString,
+        "m" -> m.toString, "sd" -> subDim.toString,
+        "ks" -> ksub.toString) ++
+        (if (rowGroupBytes > 0)
+          Seq("rg" -> rowGroupBytes.toString) else Nil) ++
+        (if (residual) Seq("res" -> "1") else Nil) ++ attrKv,
+      Seq("C" -> s"$dirName/centroids", "B" -> s"$dirName/books",
+        "D" -> s"$dirName/cells", "Q" -> s"$dirName/codes") ++
+        attrs.toSeq.map(_ => "A" -> s"$dirName/attrs"))
+    val v = ArtifactLog.list(root).headOption.map(_._1).getOrElse(0L)
+    ArtifactLog.commit(root, Kind, v, rec, store)
   }
 
   def loadPq(spark: SparkSession, root: String): IvfPqIndex = {
@@ -609,39 +579,36 @@ object IvfIndexStore {
     val m = head.kvMap("m").toInt
     val subDim = head.kvMap("sd").toInt
     requireDim(d, m * subDim)
-    // feeds BOTH the cells write and the encode path (run
-    // concurrently below): cache so the assignment argmin runs once
-    val assigned = SimilarityOps.ivfCells(inc, cents).cache()
-    // a residual head (res=1) encodes the increment's RESIDUALS on
-    // the frozen books — the same frozen-structure rule as the raw
-    // path, with the broadcast centroid join supplying c(cell)
-    val encIn =
-      if (head.kvMap.get("res").contains("1"))
-        SimilarityOps.residuals(assigned, cents)
-      else assigned
-    val codes = SimilarityOps.pqEncode(
-      encIn, books, m, subDim, carry = Seq("cell"))
-    val dirName = UUID.randomUUID().toString
-    val buckets = head.kvMap("p").toInt
-    // independent staging writes to separate dirs — overlap them
-    // (guide §2.6); `assigned` is cached above because both sinks
-    // read it
-    try {
-      graft.core.inParallel(spark,
-        Seq(
-          "ivf:appendPq:cells" -> (() =>
-            writeCells(assigned, buckets, s"$root/data/$dirName/cells",
-              head.kvMap.get("rg").map(_.toInt).getOrElse(0))),
-          "ivf:appendPq:codes" -> (() =>
-            writeCodes(codes, buckets, s"$root/data/$dirName/codes"))) ++
-          attrs.toSeq.map(a => "ivf:appendPq:attrs" -> (() =>
-            writeAttrs(a, head.kvMap("ap").toInt,
-              s"$root/data/$dirName/attrs"))): _*)
+    Scope {
+      // feeds BOTH the cells write and the encode path (run
+      // concurrently below): cache so the assignment argmin runs once
+      val assigned = Scope.cache(SimilarityOps.ivfCells(inc, cents))
+      // a residual head (res=1) encodes the increment's RESIDUALS on
+      // the frozen books — the same frozen-structure rule as the raw
+      // path, with the broadcast centroid join supplying c(cell)
+      val encIn =
+        if (head.kvMap.get("res").contains("1"))
+          SimilarityOps.residuals(assigned, cents)
+        else assigned
+      val codes = SimilarityOps.pqEncode(
+        encIn, books, m, subDim, carry = Seq("cell"))
+      val dirName = UUID.randomUUID().toString
+      val buckets = head.kvMap("p").toInt
+      // independent staging writes to separate dirs — overlap them
+      // (guide §2.6); the commit joins them
+      Scope.fork(spark, "ivf:appendPq:cells")(
+        writeCells(assigned, buckets, s"$root/data/$dirName/cells",
+          head.kvMap.get("rg").map(_.toInt).getOrElse(0)))
+      Scope.fork(spark, "ivf:appendPq:codes")(
+        writeCodes(codes, buckets, s"$root/data/$dirName/codes"))
+      attrs.foreach(a => Scope.fork(spark, "ivf:appendPq:attrs")(
+        writeAttrs(a, head.kvMap("ap").toInt,
+          s"$root/data/$dirName/attrs")))
       casAppend(root, head,
         Seq("D" -> s"$dirName/cells", "Q" -> s"$dirName/codes") ++
           attrs.toSeq.map(_ => "A" -> s"$dirName/attrs"),
         tag, store, maxRetries)
-    } finally assigned.unpersist(false)
+    }
   }
 
   /** Tombstone-delete vectors from the index — the takedown path a
@@ -738,7 +705,7 @@ object IvfIndexStore {
       nprobe: Int,
       pred: Option[org.apache.spark.sql.Column] = None)
       : (DataFrame, Array[Int]) = {
-    val qprobe = SimilarityOps.scopedCache(
+    val qprobe = Scope.cache(
       SimilarityOps.probeCells(queries, index.flat.centroids, nprobe))
     val qp = qprobe.select(col("vec_id").as("qid"),
       col("cell").as("pcell"))
@@ -992,103 +959,97 @@ object IvfIndexStore {
   def retrain(spark: SparkSession, root: String, k: Option[Int] = None,
       store: CommitStore = LinkCommitStore,
       preCommitHook: Long => Unit = _ => (), iters: Int = 1,
-      reseed: Boolean = true): Long = {
+      reseed: Boolean = true): Long = Scope {
     val (v, head) = ArtifactLog.latest(root, Kind)
     // the corpus feeds count + train + assignment — cache for the
     // call's scope, like save(). Tombstoned vectors are excluded
     // (retraining ON deleted vectors would resurrect their influence
     // as centroid mass); the fresh record carries no T lines — the
     // retrain IS the physical fold for its generation.
-    val corpus = dropTombs(
+    val corpus = Scope.cache(dropTombs(
         readCellDirs(spark, root, head.dirsOf("D")),
         readTombs(spark, root, head.dirsOf("T")))
-      .select(col("vec_id"), col("v"), col("n2")).cache()
-    try {
-      // the n/64 target-cell rule, CAPPED at the k ≤ 65 536 budget
-      // ivfCentroids' collect/re-broadcast cycle and the broadcast-
-      // hinted centroid frame are built on (≈34 MB at 64 dims; an
-      // uncapped 10⁹-vector retrain would try to collect ~1.6e7
-      // centroid rows to the driver) — past the cap, cells grow past
-      // 64 vectors and the probe pays in cell size, not memory, the
-      // same trade defaultBuckets makes on dir count
-      val kNew = k.getOrElse(
-        math.min(65536L, math.max(32L, corpus.count() / 64L)).toInt)
-      val seeds =
-        if (reseed) Some(corpus.orderBy(xxhash64(col("vec_id")))
-          .limit(kNew).select("vec_id", "v", "n2"))
-        else None
-      val cents =
-        SimilarityOps.ivfCentroids(corpus, kNew, iters, seeds).cache()
-      try {
-        require(!cents.isEmpty,
-          "retrain found no trainable seeds (the index is empty, or " +
-            s"reseed=false with no vec_id < $kNew in the corpus)")
-        val cells = SimilarityOps.ivfCells(corpus, cents)
-        val dirName = UUID.randomUUID().toString
-        val buckets = defaultBuckets(kNew)
-        cents.write.parquet(s"$root/data/$dirName/centroids")
-        writeCells(cells, buckets, s"$root/data/$dirName/cells",
-          head.kvMap.get("rg").map(_.toInt).getOrElse(0))
-        // a PQ head retrains its codebooks from the same corpus (and
-        // the same hash-sampled seeds — codebooks freeze exactly like
-        // the coarse centroids, so they drift exactly like them) and
-        // re-encodes; dropping the layer here would silently degrade
-        // the index to flat
-        val pqDirs =
-          if (head.dirsOf("B").isEmpty) Nil
-          else {
-            val m = head.kvMap("m").toInt
-            val subDim = head.kvMap("sd").toInt
-            val ksub = head.kvMap("ks").toInt
-            val res = head.kvMap.get("res").contains("1")
-            // a residual head retrains its books on residuals to the
-            // NEW centroids (books quantize within-cell variation, so
-            // they must follow the cells they are relative to)
-            val encBase =
-              if (res) SimilarityOps.residuals(cells, cents) else corpus
-            // the books need their OWN ksub-sized hash sample: a
-            // subset of the kNew coarse seeds silently shrinks the
-            // codebooks whenever kNew < ksub (k is n/64 but ksub is
-            // a fixed quantization budget — at small corpora kNew
-            // can be far below it). Same ordering, so when
-            // kNew ≥ ksub this is exactly the old first-ksub subset.
-            val bookSeeds =
-              if (seeds.isDefined)
-                Some(encBase.orderBy(xxhash64(col("vec_id")))
-                  .limit(ksub).select("vec_id", "v", "n2"))
-              else None
-            val books = SimilarityOps.pqCodebooks(
-              encBase, m, subDim, ksub, iters, bookSeeds).cache()
-            try {
-              books.write.parquet(s"$root/data/$dirName/books")
-              writeCodes(
-                SimilarityOps.pqEncode(
-                  if (res) encBase else cells, books, m, subDim,
-                  carry = Seq("cell")),
-                buckets, s"$root/data/$dirName/codes")
-            } finally books.unpersist(false)
-            Seq("B" -> s"$dirName/books", "Q" -> s"$dirName/codes")
-          }
-        // the attribute sidecar survives retrain UNTOUCHED — it is
-        // bucketed by vec_id, not cell, precisely so the coarse
-        // structure can be replaced without an O(corpus) sidecar
-        // rewrite. Tombstoned ids' attr rows go stale here (the
-        // fresh record has no T lines) — harmless supersets for the
-        // filtered probe (deleted vectors are not in the new lists,
-        // so the semi-join never surfaces them) and physically
-        // folded at the next compact.
-        val rec = Rec(
-          Seq("k" -> kNew.toString, "p" -> buckets.toString) ++
-            head.kvMap.filter(kv =>
-              Set("m", "sd", "ks", "rg", "res", "ap")(kv._1)) ++
-            head.kvMap.get("tag").map("tag" -> _),
-          Seq("C" -> s"$dirName/centroids") ++ pqDirs.take(1) ++
-            Seq("D" -> s"$dirName/cells") ++ pqDirs.drop(1) ++
-            head.dirs.filter(_._1 == "A"))
-        preCommitHook(v) // test seam: races injected between stage + CAS
-        ArtifactLog.commit(root, Kind, v, rec, store)
-      } finally cents.unpersist(false)
-    } finally corpus.unpersist(false)
+      .select(col("vec_id"), col("v"), col("n2")))
+    // the n/64 target-cell rule, CAPPED at the k ≤ 65 536 budget
+    // ivfCentroids' collect/re-broadcast cycle and the broadcast-
+    // hinted centroid frame are built on (≈34 MB at 64 dims; an
+    // uncapped 10⁹-vector retrain would try to collect ~1.6e7
+    // centroid rows to the driver) — past the cap, cells grow past
+    // 64 vectors and the probe pays in cell size, not memory, the
+    // same trade defaultBuckets makes on dir count
+    val kNew = k.getOrElse(
+      math.min(65536L, math.max(32L, corpus.count() / 64L)).toInt)
+    val seeds =
+      if (reseed) Some(corpus.orderBy(xxhash64(col("vec_id")))
+        .limit(kNew).select("vec_id", "v", "n2"))
+      else None
+    val cents =
+      Scope.cache(SimilarityOps.ivfCentroids(corpus, kNew, iters, seeds))
+    require(!cents.isEmpty,
+      "retrain found no trainable seeds (the index is empty, or " +
+        s"reseed=false with no vec_id < $kNew in the corpus)")
+    val cells = SimilarityOps.ivfCells(corpus, cents)
+    val dirName = UUID.randomUUID().toString
+    val buckets = defaultBuckets(kNew)
+    cents.write.parquet(s"$root/data/$dirName/centroids")
+    writeCells(cells, buckets, s"$root/data/$dirName/cells",
+      head.kvMap.get("rg").map(_.toInt).getOrElse(0))
+    // a PQ head retrains its codebooks from the same corpus (and
+    // the same hash-sampled seeds — codebooks freeze exactly like
+    // the coarse centroids, so they drift exactly like them) and
+    // re-encodes; dropping the layer here would silently degrade
+    // the index to flat
+    val pqDirs =
+      if (head.dirsOf("B").isEmpty) Nil
+      else {
+        val m = head.kvMap("m").toInt
+        val subDim = head.kvMap("sd").toInt
+        val ksub = head.kvMap("ks").toInt
+        val res = head.kvMap.get("res").contains("1")
+        // a residual head retrains its books on residuals to the
+        // NEW centroids (books quantize within-cell variation, so
+        // they must follow the cells they are relative to)
+        val encBase =
+          if (res) SimilarityOps.residuals(cells, cents) else corpus
+        // the books need their OWN ksub-sized hash sample: a
+        // subset of the kNew coarse seeds silently shrinks the
+        // codebooks whenever kNew < ksub (k is n/64 but ksub is
+        // a fixed quantization budget — at small corpora kNew
+        // can be far below it). Same ordering, so when
+        // kNew ≥ ksub this is exactly the old first-ksub subset.
+        val bookSeeds =
+          if (seeds.isDefined)
+            Some(encBase.orderBy(xxhash64(col("vec_id")))
+              .limit(ksub).select("vec_id", "v", "n2"))
+          else None
+        val books = Scope.cache(SimilarityOps.pqCodebooks(
+          encBase, m, subDim, ksub, iters, bookSeeds))
+        books.write.parquet(s"$root/data/$dirName/books")
+        writeCodes(
+          SimilarityOps.pqEncode(
+            if (res) encBase else cells, books, m, subDim,
+            carry = Seq("cell")),
+          buckets, s"$root/data/$dirName/codes")
+        Seq("B" -> s"$dirName/books", "Q" -> s"$dirName/codes")
+      }
+    // the attribute sidecar survives retrain UNTOUCHED — it is
+    // bucketed by vec_id, not cell, precisely so the coarse
+    // structure can be replaced without an O(corpus) sidecar
+    // rewrite. Tombstoned ids' attr rows go stale here (the
+    // fresh record has no T lines) — harmless supersets for the
+    // filtered probe (deleted vectors are not in the new lists,
+    // so the semi-join never surfaces them) and physically
+    // folded at the next compact.
+    val rec = Rec(
+      Seq("k" -> kNew.toString, "p" -> buckets.toString) ++
+        head.kvMap.filter(kv =>
+          Set("m", "sd", "ks", "rg", "res", "ap")(kv._1)) ++
+        head.kvMap.get("tag").map("tag" -> _),
+      Seq("C" -> s"$dirName/centroids") ++ pqDirs.take(1) ++
+        Seq("D" -> s"$dirName/cells") ++ pqDirs.drop(1) ++
+        head.dirs.filter(_._1 == "A"))
+    preCommitHook(v) // test seam: races injected between stage + CAS
+    ArtifactLog.commit(root, Kind, v, rec, store)
   }
 
   /** Candidate shortlist for `queries` (quantized frame) against a
@@ -1101,12 +1062,12 @@ object IvfIndexStore {
     * O(corpus) (IvfIndexSpec pins the partition-filter shape;
     * BASELINE.md "Round-12 addendum 3b" measures it).
     *
-    * Cache scope (also [[adcShortlist]]): the probe frame is cached
-    * through [[SimilarityOps]]' per-thread scoped registry — a
-    * long-lived caller must call `SimilarityOps.releaseCaches()`
-    * after materializing each call's result, or the cached probe
-    * frames accumulate for the thread's lifetime (Bench/Verify do
-    * this between queries, through Harness.release). */
+    * Cache scope (also [[adcShortlist]]): the probe frame is cached in
+    * the caller's [[graft.Scope]] region — a long-lived caller runs
+    * each call and the action on its result inside `Scope { }`, or the
+    * cached probe frames accumulate in the thread's root region until
+    * `Scope.release()` (Bench/Verify release between queries, through
+    * Harness.release). */
   /** `pred` turns the probe into FILTERED vector search (the
     * metadata-constrained top-k every production vector store
     * serves): the predicate runs against the attribute sidecar —
@@ -1124,7 +1085,7 @@ object IvfIndexStore {
   def shortlist(index: IvfIndex, queries: DataFrame, nprobe: Int,
       topK: Int,
       pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val qp = SimilarityOps.scopedCache(
+    val qp = Scope.cache(
       SimilarityOps.probeCells(queries, index.centroids, nprobe)
         .select(col("vec_id").as("qid"), col("v").as("qv"),
           col("n2").as("qn2"), col("cell").as("pcell")))

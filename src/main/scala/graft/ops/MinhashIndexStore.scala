@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.Scope
 import graft.catalog.{CommitStore, LinkCommitStore, TxLog}
 import graft.ops.ArtifactLog.Rec
 
@@ -89,38 +90,36 @@ object MinhashIndexStore {
     * of zero rows emits no schema-bearing file at all, so the empty
     * tables write plain — the pb/qb columns are ordinary data columns
     * there, union cleanly with partition-discovered dirs, and still
-    * satisfy the pruning filters. */
+    * satisfy the pruning filters. A [[Scope.staged]] `shingled` plans
+    * the writes (and the band cache) without AQE. */
   private def writeShard(shingled: DataFrame, p: Int, q: Int,
       dir: String, partitioned: Boolean = true): Unit = {
     // scoped-cached for cross-action reuse: an ingest computes this
     // same band frame for its candidate probe (verifiedShardPairs)
     // and a labeled save computes it for the CC pair generation —
     // the plan-keyed cache collapses those MinHash passes to one
-    val bands = DedupOps.scopedCache(DedupOps.bandFrame(shingled))
+    val bands = Scope.cache(DedupOps.bandFrame(shingled))
       .withColumn("pb",
         pmod(col("band_hash").cast("long"), lit(p.toLong)).cast("int"))
     val sh = shingled.select(col("doc_id"), col("sh"),
       pmod(col("doc_id"), lit(q.toLong)).cast("int").as("qb"))
     val sess = shingled.sparkSession
-    if (partitioned) {
-      // repartition on the bucket column first: ONE file per bucket
-      // per shard instead of tasks × buckets — the object-store
-      // layout (a shard contributes k files, not k × parallelism),
-      // and measurably less write/commit overhead on the in-plan
-      // lifecycle queries. ~256 rows per bucket bounds the skew a
-      // single-bucket task can carry. The two tables are independent
-      // staging writes — overlap them (guide §2.6).
-      graft.core.inParallel(sess,
-        "mh:write:bands" -> (() => bands.repartition(col("pb"))
-          .write.partitionBy("pb").parquet(s"$dir/bands")),
-        "mh:write:shingles" -> (() => sh.repartition(col("qb"))
-          .write.partitionBy("qb").parquet(s"$dir/shingles")))
-    } else {
-      graft.core.inParallel(sess,
-        "mh:write:bands" -> (() =>
-          bands.write.parquet(s"$dir/bands")),
-        "mh:write:shingles" -> (() =>
-          sh.write.parquet(s"$dir/shingles")))
+    // repartition on the bucket column first: ONE file per bucket
+    // per shard instead of tasks × buckets — the object-store
+    // layout (a shard contributes k files, not k × parallelism),
+    // and measurably less write/commit overhead on the in-plan
+    // lifecycle queries. ~256 rows per bucket bounds the skew a
+    // single-bucket task can carry. The two tables are independent
+    // staging writes — overlap them (guide §2.6).
+    Scope {
+      Scope.fork(sess, "mh:write:bands")(
+        if (partitioned) bands.repartition(col("pb"))
+          .write.partitionBy("pb").parquet(s"$dir/bands")
+        else bands.write.parquet(s"$dir/bands"))
+      Scope.fork(sess, "mh:write:shingles")(
+        if (partitioned) sh.repartition(col("qb"))
+          .write.partitionBy("qb").parquet(s"$dir/shingles")
+        else sh.write.parquet(s"$dir/shingles"))
     }
   }
 
@@ -133,15 +132,14 @@ object MinhashIndexStore {
     * forwarding map. */
   def save(root: String, corpus: DataFrame,
       labels: Option[DataFrame] = None,
-      store: CommitStore = LinkCommitStore): Long = {
+      store: CommitStore = LinkCommitStore): Long = Scope {
     TxLog.init(root)
+    val sess = corpus.sparkSession
     // the shingle pipeline behind `corpus` feeds THREE actions
-    // (count, bands write, shingles write) — cache locally so the
-    // tokenize+shingle subplan runs once, not three times (save is
-    // terminal, so the cache scope is this call, not the caller's
-    // release discipline)
-    val c = corpus.cache()
-    try graft.core.labeled(corpus.sparkSession, "mh:save") {
+    // (count, bands write, shingles write) — cache it for this call
+    // so the tokenize+shingle subplan runs once, not three times
+    val c = Scope.cache(corpus)
+    graft.core.labeled(sess, "mh:save") {
       val n = c.count()
       val (p, q) = (defaultBuckets(n), defaultBuckets(n))
       val dirName = UUID.randomUUID().toString
@@ -149,36 +147,31 @@ object MinhashIndexStore {
         // the label frame (typically a CC fixpoint's output) feeds
         // TWO writes (doc-bucketed labels + cluster-bucketed members
         // mirror) — cache for the call or the fixpoint runs twice
-        val lab0 = lab.select(col("doc_id"),
-          col("cluster_id").as("cid0")).cache()
+        val lab0 = Scope.cache(lab.select(col("doc_id"),
+          col("cluster_id").as("cid0")))
         // own top-level uuid: the F line is replaced on every labeled
         // ingest, and a replaced dir must become vacuum-sweepable
         val fwdDirName = UUID.randomUUID().toString
         // the shard tables, the labmem table and the empty forward
-        // map are independent staging writes — overlap them
-        // (guide §2.6)
-        // AQE off for the whole staging batch (guide §2.4 via
-        // core.withoutAqe: fixed bucket repartitions, no joins to
-        // re-plan — each write becomes one job instead of 2-5)
-        try graft.core.withoutAqe(corpus.sparkSession)(
-          graft.core.inParallel(corpus.sparkSession,
-            "mh:save:shard" -> (() =>
-              writeShard(c, p, q, s"$root/data/$dirName",
-                partitioned = n > 0)),
-            "mh:save:labmem" -> (() =>
-              writeLabelsAndMembers(lab0, q, gen = 1L,
-                s"$root/data/$dirName", partitioned = n > 0)),
-            "mh:save:fwd" -> (() =>
-              lab.limit(0).select(col("doc_id").as("cid_from"),
-                  col("doc_id").as("cid_to"))
-                .write.parquet(s"$root/data/$fwdDirName/forward"))))
-        finally lab0.unpersist(false)
+        // map are independent AQE-off staging writes (fixed bucket
+        // repartitions, no joins to re-plan — each write becomes one
+        // job instead of 2-5) — overlap them (guide §2.6); the
+        // commit joins them
+        Scope.fork(sess, "mh:save:shard")(
+          writeShard(Scope.staged(c), p, q, s"$root/data/$dirName",
+            partitioned = n > 0))
+        Scope.fork(sess, "mh:save:labmem")(
+          writeLabelsAndMembers(Scope.staged(lab0), q, gen = 1L,
+            s"$root/data/$dirName", partitioned = n > 0))
+        Scope.fork(sess, "mh:save:fwd")(
+          Scope.staged(lab.limit(0).select(col("doc_id").as("cid_from"),
+              col("doc_id").as("cid_to")))
+            .write.parquet(s"$root/data/$fwdDirName/forward"))
         labelDirs(dirName) :+ ("F" -> s"$fwdDirName/forward")
       }
       if (labels.isEmpty)
-        graft.core.withoutAqe(corpus.sparkSession)(
-          writeShard(c, p, q, s"$root/data/$dirName",
-            partitioned = n > 0))
+        writeShard(Scope.staged(c), p, q, s"$root/data/$dirName",
+          partitioned = n > 0)
       val rec = Rec(
         mkRec(p, q, Nil).kv ++
           (if (labels.isDefined) Seq("lab" -> "1") else Nil),
@@ -186,7 +179,7 @@ object MinhashIndexStore {
           labDirs)
       val v = ArtifactLog.list(root).headOption.map(_._1).getOrElse(0L)
       ArtifactLog.commit(root, Kind, v, rec, store)
-    } finally c.unpersist(false)
+    }
   }
 
   /** Label rows persist with a `gen` column (the commit version that
@@ -322,8 +315,7 @@ object MinhashIndexStore {
     if (shard.isEmpty) return ArtifactLog.latest(root, Kind)._1
     val (p, q) = (head.kvMap("p").toInt, head.kvMap("q").toInt)
     val dirName = UUID.randomUUID().toString
-    graft.core.withoutAqe(spark)(
-      writeShard(shard, p, q, s"$root/data/$dirName"))
+    writeShard(Scope.staged(shard), p, q, s"$root/data/$dirName")
     var attempt = 0
     while (true) {
       val (v, latest) = ArtifactLog.latest(root, Kind)
@@ -367,7 +359,7 @@ object MinhashIndexStore {
     * the T lines are dropped, so a takedown stops costing the
     * probe-time anti-join here. */
   def compact(spark: SparkSession, root: String,
-      store: CommitStore = LinkCommitStore): Long = {
+      store: CommitStore = LinkCommitStore): Long = Scope {
     val (v, r) = ArtifactLog.latest(root, Kind)
     val labeled = r.kvMap.get("lab").contains("1")
     val tombs = readTombs(spark, root, r.dirsOf("T"))
@@ -381,33 +373,30 @@ object MinhashIndexStore {
     // form)
     def bands = dropTombs(readDirs(spark, root, r.dirsOf("B")), tombs)
     val empty = bands.isEmpty
-    // staging-batch AQE toggle — see save(). Scope NARROWED to the
-    // pure re-bucket writes and the empty fwd write (ADVICE r13 /
-    // the §10b rule): the labmem fold's plan EMBEDS real compute
-    // (loadAt's newest-gen window + resolvedLabels' joins), exactly
-    // the shape the IVF-store toggle regressed on and was reverted.
-    graft.core.withoutAqe(spark) {
-      writeBucketed(bands, "pb", s"$root/data/$dirName/bands", empty)
-      writeBucketed(dropTombs(readDirs(spark, root, r.dirsOf("S")),
-          tombs),
-        "qb", s"$root/data/$dirName/shingles", empty)
-    }
+    // AQE-off staging ([[Scope.staged]]) only for the pure re-bucket
+    // writes and the empty fwd write (ADVICE r13 / the §10b rule):
+    // the labmem fold's plan EMBEDS real compute (loadAt's newest-gen
+    // window + resolvedLabels' joins), exactly the shape an AQE-off
+    // IVF-store write regressed on and was reverted.
+    writeBucketed(Scope.staged(bands), "pb",
+      s"$root/data/$dirName/bands", empty)
+    writeBucketed(Scope.staged(dropTombs(
+        readDirs(spark, root, r.dirsOf("S")), tombs)),
+      "qb", s"$root/data/$dirName/shingles", empty)
     val labDirs =
       if (!labeled) Nil
       else {
         val idx = loadAt(spark, root, v) // tomb-filtered, newest-gen
         // feeds the folded write — cache (same rationale as save)
-        val lab0 = resolvedLabels(idx)
-          .select(col("doc_id"), col("cluster_id").as("cid0")).cache()
+        val lab0 = Scope.cache(resolvedLabels(idx)
+          .select(col("doc_id"), col("cluster_id").as("cid0")))
         // compiled under AQE: the write materializes the resolved-
         // label recompute, not a bare re-bucket
-        try writeLabelsAndMembers(lab0, idx.shingleBuckets, gen = 0L,
+        writeLabelsAndMembers(lab0, idx.shingleBuckets, gen = 0L,
           s"$root/data/$dirName", partitioned = !empty)
-        finally lab0.unpersist(false)
         val fwdDirName = UUID.randomUUID().toString
-        graft.core.withoutAqe(spark)(
-          idx.forward.get.limit(0)
-            .write.parquet(s"$root/data/$fwdDirName/forward"))
+        Scope.staged(idx.forward.get.limit(0))
+          .write.parquet(s"$root/data/$fwdDirName/forward")
         labelDirs(dirName) :+ ("F" -> s"$fwdDirName/forward")
       }
     ArtifactLog.commit(root, Kind, v, Rec(r.kv,
@@ -478,7 +467,7 @@ object MinhashIndexStore {
   private[ops] def verifiedShardPairsInfo(index: MinhashIndex,
       shard: DataFrame, prune: Boolean = true)
       : (DataFrame, Array[Int], Array[Int]) = {
-    val incB = DedupOps.scopedCache(DedupOps.bandFrame(shard))
+    val incB = Scope.cache(DedupOps.bandFrame(shard))
     val probed =
       // unpruned: the reference path that the benchmark's verdict
       // check compares the pruned verdicts against
@@ -508,7 +497,7 @@ object MinhashIndexStore {
         lit("increment").as("src"))
     // d1 provenance is disjoint (index docs vs shard docs), so the
     // tag survives the pair-level dedup
-    val cand = DedupOps.scopedCache(
+    val cand = Scope.cache(
       corpusCand.unionByName(withinShard).dropDuplicates("d1", "d2"))
     val candBuckets =
       if (!prune) Array.empty[Int]
@@ -576,7 +565,7 @@ object MinhashIndexStore {
     }
     val idx = loadAt(spark, root, v)
     val (p, q) = (idx.bandBuckets, idx.shingleBuckets)
-    val shardC = DedupOps.scopedCache(shard)
+    val shardC = Scope.cache(shard)
     val (pairsRaw, probed, candBuckets) =
       verifiedShardPairsInfo(idx, shardC)
     // empty shard: NO-OP — staging it would partitionBy-write zero
@@ -587,13 +576,12 @@ object MinhashIndexStore {
     val dirName = UUID.randomUUID().toString
     // the shard's bands/shingles staging write depends only on shardC
     // and (p, q): start it NOW, overlapped with the probe/CC chain
-    // below (guide §2.6), and join before the commit. No AQE toggle —
-    // the recompute plans compile concurrently (the §10b rule); the
-    // band frame is the SAME plan-keyed scoped cache the probe uses,
-    // so the overlap never duplicates the MinHash pass.
-    val shardStaged = graft.core.async(spark, "mh:ingest:write:shard")(
+    // below (guide §2.6); the commit joins it. Planned under AQE: the
+    // band frame is the SAME plan-keyed cache the probe uses, so the
+    // overlap never duplicates the MinHash pass.
+    Scope.fork(spark, "mh:ingest:write:shard")(
       writeShard(shardC, p, q, s"$root/data/$dirName"))
-    val pairs = DedupOps.scopedCache(
+    val pairs = Scope.cache(
       pairsRaw.select("d1", "d2", "src"))
     val fwd = broadcast(idx.forward.get)
     // witness cluster ids: labels0 rows pruned to the CANDIDATE
@@ -611,10 +599,10 @@ object MinhashIndexStore {
         col("d2").as("v"))
     val shardEdges = pairs.filter(col("src") === "increment")
       .select(col("d1").as("u"), col("d2").as("v"))
-    val cidNodes = DedupOps.scopedCache(
+    val cidNodes = Scope.cache(
       corpusEdges.select(col("u").as("doc_id")).distinct())
     val nodes = shardC.select("doc_id").unionByName(cidNodes)
-    val sub = DedupOps.scopedCache(ConnectedComponents.labels(
+    val sub = Scope.cache(ConnectedComponents.labels(
       nodes, corpusEdges.unionByName(shardEdges)))
     // moved clusters → new forwarding entries; old entries re-point
     // through this ingest's moves so the map stays single-hop
@@ -637,17 +625,15 @@ object MinhashIndexStore {
     // can sweep it — under the shard's uuid it would hide forever
     // behind the still-live bands/shingles/labels
     val fwdDirName = UUID.randomUUID().toString
-    // the two CC-dependent staging targets (labmem, forwarding map)
-    // overlap each other (guide §2.6); the shard write has been
-    // running since before the CC — the CAS commit below waits for
-    // all three
-    graft.core.withoutAqe(spark)(graft.core.inParallel(spark,
-      "mh:ingest:write:labmem" -> (() =>
-        writeLabelsAndMembers(shardLabels, q, v + 1,
-          s"$root/data/$dirName")),
-      "mh:ingest:write:fwd" -> (() =>
-        newFwd.write.parquet(s"$root/data/$fwdDirName/forward"))))
-    shardStaged() // bands/shingles must be on disk before commit
+    // the two CC-dependent AQE-off staging targets (labmem,
+    // forwarding map) overlap each other (guide §2.6); the shard write
+    // has been running since before the CC — the CAS commit below
+    // joins all three
+    Scope.fork(spark, "mh:ingest:write:labmem")(
+      writeLabelsAndMembers(Scope.staged(shardLabels), q, v + 1,
+        s"$root/data/$dirName"))
+    Scope.fork(spark, "mh:ingest:write:fwd")(
+      Scope.staged(newFwd).write.parquet(s"$root/data/$fwdDirName/forward"))
     // an UNTAGGED ingest must PRESERVE the committed streaming tag —
     // erasing it would let a crash-replayed stream batch re-ingest
     // after any interleaved ad-hoc ingest
@@ -720,15 +706,14 @@ object MinhashIndexStore {
       val committed = head.kvMap.get(tagKey).map(_.toLong)
       if (committed.exists(_ >= t)) return v // replayed batch: no-op
     }
-    val del = DedupOps.scopedCache(ids.select("doc_id").distinct())
+    val del = Scope.cache(ids.select("doc_id").distinct())
     val labeled = head.kvMap.get("lab").contains("1")
     val dirName = UUID.randomUUID().toString
     if (!labeled) {
       if (graft.core.labeled(spark, "mh:del:emptyCheck")(del.isEmpty))
         return v // nothing to tombstone, no version burn
       graft.core.labeled(spark, "mh:del:tombs")(
-        graft.core.withoutAqe(spark)(
-          del.write.parquet(s"$root/data/$dirName/tombs")))
+        Scope.staged(del).write.parquet(s"$root/data/$dirName/tombs"))
     }
 
     val labDirs =
@@ -736,7 +721,7 @@ object MinhashIndexStore {
       else {
         val idx = loadAt(spark, root, v) // prior tombs already filtered
         val q = idx.shingleBuckets
-        val fwd = DedupOps.scopedCache(idx.forward.get)
+        val fwd = Scope.cache(idx.forward.get)
         // 1. touched clusters: the deleted docs' current labels. The
         // bucket collect doubles as the emptiness gate (was a separate
         // isEmpty job): delQb is empty iff `del` is
@@ -746,11 +731,9 @@ object MinhashIndexStore {
         if (delQb.isEmpty)
           return v // nothing to tombstone, no version burn
         // the tombstone write depends only on `del` — overlap it with
-        // the serial recompute chain below (guide §2.6) and join
-        // before the commit. No AQE toggle: the plan has no exchange,
-        // and a session-level toggle here would strip AQE from the
-        // recompute plans compiling concurrently (the §10b rule).
-        val tombsDone = graft.core.async(spark, "mh:del:tombs")(
+        // the serial recompute chain below (guide §2.6); the commit
+        // joins it. Planned under AQE: the plan has no exchange.
+        Scope.fork(spark, "mh:del:tombs")(
           del.write.parquet(s"$root/data/$dirName/tombs"))
         // 2. candidate clusters: the touched set (the deleted docs'
         // resolved labels) PLUS forwarding sources pointing into it.
@@ -758,7 +741,7 @@ object MinhashIndexStore {
         // to be two serial driver round-trips): the touched subplan
         // is scoped-cached so its union branches compute it once, and
         // the flag column keeps the two sets apart on the driver.
-        val touchedDF = DedupOps.scopedCache(idx.labels0.get
+        val touchedDF = Scope.cache(idx.labels0.get
           .filter(col("qb").isin(delQb.toSeq: _*))
           .join(del, Seq("doc_id"))
           .join(broadcast(fwd), col("cid0") === col("cid_from"), "left")
@@ -774,7 +757,7 @@ object MinhashIndexStore {
           .map(_.getLong(0)).distinct
         val affected = affRows.map(_.getLong(0)).distinct
         val affectedMb = affected.map(c => (c % q).toInt).distinct
-        val candDocs = DedupOps.scopedCache(
+        val candDocs = Scope.cache(
           readDirs(spark, root, head.dirsOf("M"))
             .withColumnRenamed("b", "mb") // labmem/side=m bucket col
             .filter(col("mb").isin(affectedMb.toSeq: _*) &&
@@ -785,7 +768,7 @@ object MinhashIndexStore {
         val candQb = graft.core.labeled(spark, "mh:del:candQb")(candDocs
           .select(pmod(col("doc_id"), lit(q.toLong)).cast("int").as("qb"))
           .distinct().collect().map(_.getInt(0))) // ≤ Q
-        val survivors = DedupOps.scopedCache(idx.labels0.get
+        val survivors = Scope.cache(idx.labels0.get
           .filter(col("qb").isin(candQb.toSeq: _*))
           .join(candDocs, Seq("doc_id"))
           .join(broadcast(fwd), col("cid0") === col("cid_from"), "left")
@@ -800,11 +783,11 @@ object MinhashIndexStore {
         // collect above already answers the emptiness probe the
         // labmem write needs (was a separate isEmpty job)
         val hasSurvivors = survQb.nonEmpty
-        val ssh = DedupOps.scopedCache(idx.shingles
+        val ssh = Scope.cache(idx.shingles
           .filter(col("qb").isin(survQb.toSeq: _*))
           .join(survivors, Seq("doc_id"))
           .select("doc_id", "sh"))
-        val bb = DedupOps.scopedCache(DedupOps.bandFrame(ssh))
+        val bb = Scope.cache(DedupOps.bandFrame(ssh))
         val cand = bb.alias("a").join(bb.alias("b"),
             col("a.band_idx") === col("b.band_idx") &&
               col("a.band_hash") === col("b.band_hash") &&
@@ -815,22 +798,21 @@ object MinhashIndexStore {
           .select(col("d1").as("u"), col("d2").as("v"))
         // the subgraph-CC output feeds both writes — scoped-cached
         // like the other delete-path frames
-        val relabeled = DedupOps.scopedCache(
+        val relabeled = Scope.cache(
           ConnectedComponents.labels(survivors, edges)
             .select(col("doc_id"), col("cluster_id").as("cid0")))
         // 4. forwarding entries into touched clusters die with the
         // recompute; the map is REPLACED, like ingest (own uuid so
         // the dropped dir becomes vacuum-sweepable). Both staging
-        // writes are independent — overlap them (guide §2.6).
+        // writes are independent AQE-off stages — overlap them
+        // (guide §2.6); the commit joins them and the tombstones.
         val fwdDirName = UUID.randomUUID().toString
-        graft.core.withoutAqe(spark)(graft.core.inParallel(spark,
-          "mh:del:write:labmem" -> (() =>
-            writeLabelsAndMembers(relabeled, q, v + 1,
-              s"$root/data/$dirName", partitioned = hasSurvivors)),
-          "mh:del:write:fwd" -> (() =>
-            fwd.filter(!col("cid_to").isin(touched.toSeq: _*))
-              .write.parquet(s"$root/data/$fwdDirName/forward"))))
-        tombsDone() // staged tombstones must be on disk before commit
+        Scope.fork(spark, "mh:del:write:labmem")(
+          writeLabelsAndMembers(Scope.staged(relabeled), q, v + 1,
+            s"$root/data/$dirName", partitioned = hasSurvivors))
+        Scope.fork(spark, "mh:del:write:fwd")(
+          Scope.staged(fwd.filter(!col("cid_to").isin(touched.toSeq: _*)))
+            .write.parquet(s"$root/data/$fwdDirName/forward"))
         labelDirs(dirName) :+ ("F" -> s"$fwdDirName/forward")
       }
     val rec = Rec(

@@ -703,7 +703,7 @@ object SimilarityOps {
     "LLM-pipeline similarity: selectivity-adaptive filtered ANN",
     "label=3 ∧ id%7=0 rare filter; underfilled probes fall back to exact pre-filter; top-3 + path tag",
     (s, dir) => {
-      val emb = scopedCache(quantized(s, dir))
+      val emb = Scope.cache(quantized(s, dir))
       val attrs = t(s, dir, "embeddings")
         .select(col("vec_id"), col("label"))
       val cents1 = ivfCentroids(emb, 32).cache()
@@ -712,7 +712,7 @@ object SimilarityOps {
         .filter(col("label") === 3 && col("vec_id") % 7 === 0)
         .drop("label")
       val queries = emb.filter(col("vec_id") < 10)
-      val annCand = scopedCache(
+      val annCand = Scope.cache(
         ivfCandidates(queries, fcells, cents1, nprobe = 4)
           .select(col("qid"), col("qv"), col("qn2"),
             col("vec_id"), col("v"), col("n2")))
@@ -830,7 +830,7 @@ object SimilarityOps {
     "LLM-pipeline similarity: incremental ANN shard ingest",
     "assign only the increment against the persisted corpus IVF index",
     (s, dir) => {
-      val emb = scopedCache(quantized(s, dir))
+      val emb = Scope.cache(quantized(s, dir))
       val corpus = emb.filter(col("vec_id") % 5 =!= 0)
       val inc = emb.filter(col("vec_id") % 5 === 0)
       // k grows with the corpus (~64-vector target cells, the
@@ -840,7 +840,7 @@ object SimilarityOps {
       // literal 32 the oracle mirrors (every verify SF qualifies)
       val kC = math.max(32L, corpus.count() / 64L).toInt
       // the persisted index: corpus-trained centroids + corpus cells
-      val cents = scopedCache(ivfCentroids(corpus, kC))
+      val cents = Scope.cache(ivfCentroids(corpus, kC))
       val cells = ivfCells(corpus, cents)
       val pairs = ivfCandidates(inc, cells, cents, nprobe = 4)
         .withColumn("dp", dot("qv", "v"))
@@ -976,7 +976,7 @@ object SimilarityOps {
     "LLM-pipeline similarity: persisted IVF index lifecycle",
     "build → save → load → bucket-pruned shortlist ≡ in-memory increment",
     (s, dir) => {
-      val emb = scopedCache(quantized(s, dir))
+      val emb = Scope.cache(quantized(s, dir))
       val corpus = emb.filter(col("vec_id") % 5 =!= 0)
       val inc = emb.filter(col("vec_id") % 5 === 0)
       val kC = math.max(32L, corpus.count() / 64L).toInt
@@ -1005,7 +1005,7 @@ object SimilarityOps {
     "LLM-pipeline similarity: persisted filtered vector search",
     "save(attrs sidecar) → load → shortlist(pred=label%2=0) ≡ filtered replay",
     (s, dir) => {
-      val emb = scopedCache(quantized(s, dir))
+      val emb = Scope.cache(quantized(s, dir))
       val attrs = t(s, dir, "embeddings")
         .select(col("vec_id"), col("label"))
       val corpus = emb.filter(col("vec_id") % 5 =!= 0)
@@ -1046,7 +1046,7 @@ object SimilarityOps {
     "LLM-pipeline similarity: O(increment) index shard append",
     "append assigns the shard on frozen centroids; loaded cells = corpus ∪ shard",
     (s, dir) => {
-      val emb = scopedCache(quantized(s, dir))
+      val emb = Scope.cache(quantized(s, dir))
       val corpus = emb.filter(col("vec_id") % 5 =!= 0)
       val inc = emb.filter(col("vec_id") % 5 === 0)
       val kC = math.max(32L, corpus.count() / 64L).toInt
@@ -1125,7 +1125,7 @@ object SimilarityOps {
     "LLM-pipeline similarity: IVF cell-occupancy drift monitor",
     "save → frozen-centroid append → per-cell counts incl. empty cells",
     (s, dir) => {
-      val emb = scopedCache(quantized(s, dir))
+      val emb = Scope.cache(quantized(s, dir))
       val corpus = emb.filter(col("vec_id") % 5 =!= 0)
       val inc = emb.filter(col("vec_id") % 5 === 0)
       val kC = math.max(32L, corpus.count() / 64L).toInt
@@ -1164,7 +1164,7 @@ object SimilarityOps {
     "LLM-pipeline similarity: index tombstone delete (takedown)",
     "save → append → delete vec_id%7=0 → loaded cells exclude tombstones",
     (s, dir) => {
-      val emb = scopedCache(quantized(s, dir))
+      val emb = Scope.cache(quantized(s, dir))
       val corpus = emb.filter(col("vec_id") % 5 =!= 0)
       val inc = emb.filter(col("vec_id") % 5 === 0)
       val kC = math.max(32L, corpus.count() / 64L).toInt
@@ -1198,7 +1198,7 @@ object SimilarityOps {
     "LLM-pipeline similarity: persisted IVF-PQ index (IVFADC probe)",
     "savePq → load → coarse probe → ADC top-10 on packed codes → exact re-rank top-3",
     (s, dir) => {
-      val emb = scopedCache(quantized(s, dir))
+      val emb = Scope.cache(quantized(s, dir))
       val corpus = emb.filter(col("vec_id") % 5 =!= 0)
       val inc = emb.filter(col("vec_id") % 5 === 0)
       val kC = math.max(32L, corpus.count() / 64L).toInt
@@ -1381,7 +1381,7 @@ object SimilarityOps {
     "LLM-pipeline similarity: residual IVF-PQ (by-residual IVFADC)",
     "savePq(residual) → per-(query,cell) ADC tables → exact re-rank top-3",
     (s, dir) => {
-      val emb = scopedCache(quantized(s, dir))
+      val emb = Scope.cache(quantized(s, dir))
       val corpus = emb.filter(col("vec_id") % 5 =!= 0)
       val inc = emb.filter(col("vec_id") % 5 === 0)
       val kC = math.max(32L, corpus.count() / 64L).toInt
@@ -1450,7 +1450,7 @@ object SimilarityOps {
     "LLM-pipeline similarity: frozen-codebook PQ shard encode",
     "appendPq encodes the shard on frozen books; loaded codes = corpus ∪ shard",
     (s, dir) => {
-      val emb = scopedCache(quantized(s, dir))
+      val emb = Scope.cache(quantized(s, dir))
       val corpus = emb.filter(col("vec_id") % 5 =!= 0)
       val inc = emb.filter(col("vec_id") % 5 === 0)
       val kC = math.max(32L, corpus.count() / 64L).toInt
@@ -1549,7 +1549,7 @@ object SimilarityOps {
     "LLM-pipeline similarity: filtered IVFADC (PQ + attr sidecar)",
     "savePq(attrs) -> load -> ADC with label%2=0 semi-joined below the code scan -> re-rank",
     (s, dir) => {
-      val emb = scopedCache(quantized(s, dir))
+      val emb = Scope.cache(quantized(s, dir))
       val attrs = t(s, dir, "embeddings")
         .select(col("vec_id"), col("label"))
       val corpus = emb.filter(col("vec_id") % 5 =!= 0)
@@ -1891,64 +1891,30 @@ object SimilarityOps {
       .select(col("vec_id").as("a"), col("nid").as("b"), col("cosine"))
   }
 
-  /** Caches registered by the ANN-kNN family, releasable by the
-    * caller once the final action has run (ADVICE r9: cached blocks
-    * must not accumulate across an always-on session; Bench/Verify
-    * call [[releaseCaches]] inside their per-query release, mirroring
-    * FrontierStream's before/after persistent-RDD diff). PER-THREAD
-    * registries (ADVICE r10): plan construction and [[releaseCaches]]
-    * happen on the caller's thread, so a release from one caller can
-    * no longer unpersist another in-flight query's frames — two
-    * concurrent sessions threads (FrontierStream + an ad-hoc query)
-    * each release exactly what they registered. */
-  private val scopedCaches = ThreadLocal.withInitial(() =>
-    new java.util.ArrayDeque[org.apache.spark.sql.DataFrame]())
-  private[ops] def scopedCache(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = { val c = df.cache(); scopedCaches.get().add(c); c }
-
-  /** Lineage-truncating variant of [[scopedCache]] for the ANN
-    * pipeline's NESTING MULTIPLIERS (each stage references the
-    * previous one 2-5×, so plain cached plans grow exponentially —
-    * the recall query's printed plan reached 108k InMemoryTableScan
-    * nodes and the DRIVER spent tens of seconds canonicalizing it;
-    * `localCheckpoint` collapses the subtree to a LogicalRDD leaf, so
-    * downstream plans stay constant-size while the blocks live in the
-    * block manager exactly like a cache). Cluster tradeoff:
-    * localCheckpoint truncates LINEAGE, so a lost executor fails the
-    * job instead of recomputing — acceptable here because every
-    * checkpointed frame is a per-query intermediate a retry rebuilds
-    * from parquet in one pass; an always-on 100 TB deployment swaps in
-    * reliable `checkpoint()` against its checkpoint dir at the same
-    * call sites. Disable via `spark.graft.ann.checkpoint=false` to
-    * expose the full logical tree (PlanSpec pins the join shapes that
-    * way). */
-  private val scopedCkpts = ThreadLocal.withInitial(() =>
-    new java.util.ArrayDeque[org.apache.spark.sql.DataFrame]())
-  private def scopedCkpt(df: org.apache.spark.sql.DataFrame)
+  /** [[graft.Scope.checkpoint]] for the ANN pipeline's NESTING
+    * MULTIPLIERS (each stage references the previous one 2-5×, so
+    * plain cached plans grow exponentially — the recall query's
+    * printed plan reached 108k InMemoryTableScan nodes and the DRIVER
+    * spent tens of seconds canonicalizing it; `localCheckpoint`
+    * collapses the subtree to a LogicalRDD leaf, so downstream plans
+    * stay constant-size while the blocks live in the block manager
+    * exactly like a cache). Cluster tradeoff: localCheckpoint
+    * truncates LINEAGE, so a lost executor fails the job instead of
+    * recomputing — acceptable here because every checkpointed frame is
+    * a per-query intermediate a retry rebuilds from parquet in one
+    * pass; an always-on 100 TB deployment swaps in reliable
+    * `checkpoint()` against its checkpoint dir at the same call sites.
+    * Disable via `spark.graft.ann.checkpoint=false` to expose the full
+    * logical tree (PlanSpec pins the join shapes that way; the frame
+    * is then scope-cached instead). */
+  private def ckpt(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
     if (df.sparkSession.conf.get("spark.graft.ann.checkpoint", "true")
-        != "true") scopedCache(df)
-    else { val c = df.localCheckpoint(); scopedCkpts.get().add(c); c }
+        != "true") Scope.cache(df)
+    else Scope.checkpoint(df)
 
-  /** Unpersist every frame cached or checkpointed by the ANN family
-    * ON THIS THREAD since the last release. Call after the consuming
-    * action completes, from the thread that built the query (the
-    * registries are thread-local — see [[scopedCaches]]). */
-  def releaseCaches(): Unit = {
-    val caches = scopedCaches.get()
-    var df = caches.poll()
-    while (df != null) { df.unpersist(false); df = caches.poll() }
-    val ckpts = scopedCkpts.get()
-    var ck = ckpts.poll()
-    while (ck != null) {
-      ck.queryExecution.analyzed.foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.unpersist(false)
-        case _ => ()
-      }
-      ck = ckpts.poll()
-    }
-  }
+  /** Frees this thread's root [[graft.Scope]] region. */
+  def releaseCaches(): Unit = Scope.release()
 
   /** Two-level (coarse→fine) centroid ranking — the hierarchical
     * assignment pass. The first `kc` centroids of `cents` (by cid
@@ -2185,12 +2151,12 @@ object SimilarityOps {
     val n = emb.count()
     val k = math.max(32L, n / 64L).toInt
     val kc = math.max(4, math.ceil(math.sqrt(cprobe.toDouble * k)).toInt)
-    val cents1 = scopedCkpt(annCentroids(emb, k, kc, cprobe))
+    val cents1 = ckpt(annCentroids(emb, k, kc, cprobe))
     // ONE ranked pass serves both the cell assignment (rank 1) and
     // the nprobe probe set (rank ≤ nprobe); the oracle's `ranked`
     // CTE makes the same sharing.
     val lv = rankLevels(emb.sparkSession, k.toLong)
-    val ranked = scopedCkpt(
+    val ranked = ckpt(
       if (lv <= 2) twoLevelRanked(emb, cents1, kc, cprobe, nprobe)
       else hierRanked(emb, cents1, k.toLong, cprobe, nprobe, lv))
     val cellsNarrow = ranked.filter(col("crn") === 1)
@@ -2275,17 +2241,17 @@ object SimilarityOps {
         .select(col("a.qid").as("qid"), col("b.qid").as("nid"))
       hopFwd.unionByName(hopShare)
     }
-    var scoredAll = scopedCkpt(scored0)
-    var kcur = scopedCkpt(top8(scoredAll)) // consumed by 3 hop sides
+    var scoredAll = ckpt(scored0)
+    var kcur = ckpt(top8(scoredAll)) // consumed by 3 hop sides
     var h = 0
     while (h < hops) {
       val fresh = hopExpand(kcur).distinct()
         .join(scoredAll.select("qid", "nid"), Seq("qid", "nid"),
           "left_anti")
-      scoredAll = scopedCkpt(
+      scoredAll = ckpt(
         scoredAll.unionByName(scoredPairs(fresh)))
       h += 1
-      if (h < hops) kcur = scopedCkpt(top8(scoredAll))
+      if (h < hops) kcur = ckpt(top8(scoredAll))
     }
     val w3 = Window.partitionBy("qid").orderBy(desc("cosine"), col("nid"))
     scoredAll
@@ -2303,7 +2269,7 @@ object SimilarityOps {
     // without this cache the mutuality self-join computes it twice in
     // one materialization — for the exact side that is the n² scoring
     // pass run twice (the knn frame itself is only n×3 rows)
-    val knn = scopedCache(knn0)
+    val knn = Scope.cache(knn0)
     val fwd = knn.filter(col("a") < col("b") && col("cosine") >= 0.4)
       .select("a", "b")
     val bwd = knn.filter(col("a") > col("b"))
@@ -2604,7 +2570,7 @@ object SimilarityOps {
     "LLM-pipeline similarity: mutual-kNN clustering (ANN candidates)",
     "LSH-multiprobe candidate 3-NN → mutual ≥0.4 → connected components",
     (s, dir) =>
-      clustersFromKnn(s, dir, annKnn(scopedCache(quantized(s, dir)))),
+      clustersFromKnn(s, dir, annKnn(Scope.cache(quantized(s, dir)))),
     Some(s"""WITH RECURSIVE $annKnnOracleCtes,
       edges AS MATERIALIZED (
         SELECT au AS u, av AS v FROM mut_a
@@ -2639,13 +2605,13 @@ object SimilarityOps {
       // ONE scan+quantize for both graphs (this query runs the exact
       // all-pairs oracle AND the full ANN pipeline — the shared frame
       // is the difference between 2× and 1× corpus reads)
-      val emb = scopedCache(quantized(s, dir))
+      val emb = Scope.cache(quantized(s, dir))
       // both edge frames are referenced twice below (count + overlap
       // join): cache them so each graph materializes once and the
       // overlap join compiles against two shallow in-memory scans
       // instead of two copies of the full pipeline subtree
-      val exactE = scopedCache(mutualEdges(exactKnn(emb)))
-      val annE = scopedCache(mutualEdges(annKnn(emb)))
+      val exactE = Scope.cache(mutualEdges(exactKnn(emb)))
+      val annE = Scope.cache(mutualEdges(annKnn(emb)))
       val nExact = exactE.agg(count(lit(1)).as("n_exact"))
       val nAnn = annE.agg(count(lit(1)).as("n_ann"))
       val nCommon = annE.join(exactE, Seq("u", "v"))

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Scope
 import graft.ops.{DedupOps, MinhashIndexStore}
 
 /** Always-on dedup ingest: a document stream drives
@@ -35,11 +36,10 @@ object DedupIngestStream {
     if (batch.isEmpty) {
       val (v, _) = MinhashIndexStore.latestVersion(root)
       v
-    } else {
+    } else Scope {
       val shard = DedupOps.shingleDocs(batch.select("doc_id", "text"))
-      try MinhashIndexStore.ingestLabeled(spark, root, shard,
+      MinhashIndexStore.ingestLabeled(spark, root, shard,
         tag = Some(batchId))
-      finally DedupOps.releaseCaches()
     }
   }
 

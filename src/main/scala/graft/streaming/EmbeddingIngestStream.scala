@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Scope
 import graft.ops.{IvfIndexStore, SimilarityOps}
 
 /** Always-on embedding ingest — the ANN mirror of
@@ -32,17 +33,15 @@ object EmbeddingIngestStream {
     * the committed (or, on replay, already-committed) version. */
   def processBatch(root: String, batch: DataFrame, batchId: Long): Long =
     if (batch.isEmpty) IvfIndexStore.latestVersion(root)
-    else {
+    else Scope {
       val inc = SimilarityOps.quantizeEmbeddings(
         batch.select("vec_id", "embedding"))
-      try {
-        if (IvfIndexStore.hasPqLayer(root))
-          IvfIndexStore.appendPq(batch.sparkSession, root, inc,
-            tag = Some(batchId))
-        else
-          IvfIndexStore.append(batch.sparkSession, root, inc,
-            tag = Some(batchId))
-      } finally SimilarityOps.releaseCaches()
+      if (IvfIndexStore.hasPqLayer(root))
+        IvfIndexStore.appendPq(batch.sparkSession, root, inc,
+          tag = Some(batchId))
+      else
+        IvfIndexStore.append(batch.sparkSession, root, inc,
+          tag = Some(batchId))
     }
 
   /** Wire a streaming (vec_id, embedding) frame into the saved index

@@ -8,6 +8,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Scope
+
 /** ST1 as an actual Structured Streaming job — the reference's
   * always-on visit loop (`run_visit.py:143-227`: poll queue → claim →
   * visit → insert children → mark visited, forever) expressed as
@@ -379,33 +381,31 @@ object FrontierStream {
     * row tying the floor). */
   private def buildHead(stateRoot: String, dataDir: String,
       candidates: DataFrame, k: Int, forBatch: Long,
-      horizonBatch: Long): Unit = {
+      horizonBatch: Long): Unit = Scope {
     // ONE scan of the candidate plan (a full-frontier read on rebuild
     // batches): cache it, derive the floor from a single ≤k-row
     // driver collect of the ranked top, write the filtered rows from
     // the cache, release. Without the cache this ran three jobs over
     // the full frontier per rebuild.
-    val cand = candidates.cache()
-    try {
-      val top = cand.orderBy(desc("priority"), desc("uri")).limit(k)
-        .select("priority", "uri").collect()
-      // the floor is the LOWEST-ranked of the top K (the collect is
-      // rank-ordered descending, so that is the last element)
-      val floor: Option[(Int, String)] =
-        if (top.length < k) None
-        else top.lastOption.map(r => (r.getInt(0), r.getString(1)))
-      val rows = floor match {
-        case Some((fp, fu)) => cand.filter(atOrAbove(fp, fu))
-        case None           => cand
-      }
-      val uuid = UUID.randomUUID().toString
-      // repartition(1), not coalesce(1): a shuffle barrier keeps the
-      // upstream frontier scan parallel — coalesce(1) would collapse
-      // the very read the head exists to amortize into one task
-      rows.repartition(1).write.parquet(s"$stateRoot/$dataDir/$uuid")
-      writeHeadPtr(stateRoot, dataDir.toUpperCase, dataDir, // VHEAD/MHEAD
-        HeadPtr(uuid, forBatch, horizonBatch, floor))
-    } finally cand.unpersist(false)
+    val cand = Scope.cache(candidates)
+    val top = cand.orderBy(desc("priority"), desc("uri")).limit(k)
+      .select("priority", "uri").collect()
+    // the floor is the LOWEST-ranked of the top K (the collect is
+    // rank-ordered descending, so that is the last element)
+    val floor: Option[(Int, String)] =
+      if (top.length < k) None
+      else top.lastOption.map(r => (r.getInt(0), r.getString(1)))
+    val rows = floor match {
+      case Some((fp, fu)) => cand.filter(atOrAbove(fp, fu))
+      case None           => cand
+    }
+    val uuid = UUID.randomUUID().toString
+    // repartition(1), not coalesce(1): a shuffle barrier keeps the
+    // upstream frontier scan parallel — coalesce(1) would collapse
+    // the very read the head exists to amortize into one task
+    rows.repartition(1).write.parquet(s"$stateRoot/$dataDir/$uuid")
+    writeHeadPtr(stateRoot, dataDir.toUpperCase, dataDir, // VHEAD/MHEAD
+      HeadPtr(uuid, forBatch, horizonBatch, floor))
   }
 
   /** O(delta) head carry-forward: drop the touched partitions' rows,
@@ -616,297 +616,295 @@ object FrontierStream {
       retainBatches: Int = 2,
       headSize: Int = 0): Unit = {
     val last = committedBatch(stateRoot)
-    if (batchId <= last) return // replayed, already applied — skip
-    Files.createDirectories(Paths.get(stateRoot))
-    assertStateParts(stateRoot, statePartitions)
-    val now = batchTime(batchId)
+    // replayed batches (≤ last) are already applied — skip. The
+    // batch's cached frames are owned by its own region, so a
+    // concurrent caller's caches and checkpoints survive it.
+    if (batchId > last) Scope {
+      Files.createDirectories(Paths.get(stateRoot))
+      assertStateParts(stateRoot, statePartitions)
+      val now = batchTime(batchId)
 
-    // the seed inbox is control-plane, not data-plane: a micro-batch
-    // carries the handful of operator-entered roots (the reference's
-    // `seed` command reads them from a file into memory the same way,
-    // seed.py:42-89) — collecting them is bounded by the seed file,
-    // never by corpus size
-    val seeds = seedBatch.select(col("value")).collect()
-      .map(_.getString(0).trim).filter(u => u.nonEmpty && u != "tick")
-      .toSeq.distinct
+      // the seed inbox is control-plane, not data-plane: a micro-batch
+      // carries the handful of operator-entered roots (the reference's
+      // `seed` command reads them from a file into memory the same way,
+      // seed.py:42-89) — collecting them is bounded by the seed file,
+      // never by corpus size
+      val seeds = seedBatch.select(col("value")).collect()
+        .map(_.getString(0).trim).filter(u => u.nonEmpty && u != "tick")
+        .toSeq.distinct
 
-    val manifest = if (last < 0) Map.empty[Int, String]
-      else readManifest(stateRoot, last)
-    // LAZY: on a head-served batch the full frontier relation is
-    // never built — not even its file listing (the claim/map heads
-    // are the whole point: per-batch reads bounded by the batch, not
-    // the frontier). Seed batches and head rebuilds force it.
-    lazy val frontier = currentFrontier(spark, stateRoot)
+      val manifest = if (last < 0) Map.empty[Int, String]
+        else readManifest(stateRoot, last)
+      // LAZY: on a head-served batch the full frontier relation is
+      // never built — not even its file listing (the claim/map heads
+      // are the whole point: per-batch reads bounded by the batch, not
+      // the frontier). Seed batches and head rebuilds force it.
+      lazy val frontier = currentFrontier(spark, stateRoot)
 
-    def seedInto(f: DataFrame): DataFrame =
-      if (seeds.isEmpty) f
-      else Frontier
-        .insertSeedUris(Frontier.withRoutability(f), seeds, now)
-        .drop("is_visitable", "is_mappable")
+      def seedInto(f: DataFrame): DataFrame =
+        if (seeds.isEmpty) f
+        else Frontier
+          .insertSeedUris(Frontier.withRoutability(f), seeds, now)
+          .drop("is_visitable", "is_mappable")
 
-    // SELECTION: from the bounded visitable/mappable HEAD tables when
-    // their pointers are valid for this batch (exact by the floor
-    // invariant — see the head section above); from the full frontier
-    // on seed batches, stale pointers, horizon expiry, or drain. The
-    // claimed/yielded/map-batch frames are all batch-bounded either
-    // way, and drive both the touched-partition probe and the
-    // restricted recompute below.
-    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    lazy val seededFull = seedInto(frontier)
+      // SELECTION: from the bounded visitable/mappable HEAD tables when
+      // their pointers are valid for this batch (exact by the floor
+      // invariant — see the head section above); from the full frontier
+      // on seed batches, stale pointers, horizon expiry, or drain. The
+      // claimed/yielded/map-batch frames are all batch-bounded either
+      // way, and drive both the touched-partition probe and the
+      // restricted recompute below.
+      lazy val seededFull = seedInto(frontier)
 
-    val vPtr = readHeadPtr(stateRoot, "VHEAD")
-    val mPtr = readHeadPtr(stateRoot, "MHEAD")
-    var vheadDrained = false
-    var mheadDrained = false
+      val vPtr = readHeadPtr(stateRoot, "VHEAD")
+      val mPtr = readHeadPtr(stateRoot, "MHEAD")
+      var vheadDrained = false
+      var mheadDrained = false
 
-    val headClaimed: Option[DataFrame] =
-      if (seeds.nonEmpty) None
-      else vPtr.filter(p => p.forBatch == last && batchId <= p.horizonBatch)
-        .flatMap { p =>
-          val head = readHeadRows(spark, stateRoot, "vhead", p.uuid)
-          val picked = Frontier.visitables(head, now)
-            .orderBy(desc("priority"), desc("uri")).limit(batchSize)
-            .cache()
-          // a full batch's picks all rank at-or-above the floor, so
-          // nothing outside the head can outrank them; a complete
-          // head (no floor) is exact at any count. A short pick with
-          // a floor means below-floor rows may belong in the claim —
-          // fall back and rebuild.
-          if (picked.count() >= batchSize || p.floor.isEmpty) Some(picked)
-          else { picked.unpersist(false); vheadDrained = true; None }
-        }
-    val claimed = headClaimed
-      .getOrElse(Frontier.claim(seededFull, now, batchSize).cache())
-
-    val prevHits =
-      if (hostDelayMs > 0) readHostHits(stateRoot)
-      else Map.empty[String, Long]
-    val hitsAcc =
-      if (hostDelayMs > 0)
-        Some(spark.sparkContext
-          .collectionAccumulator[(String, Long)]("graft.hostHits"))
-      else None
-    val yielded = Frontier.expandClaims(spark, claimed, visitor,
-      hostDelayMs, prevHits, hitsAcc).cache()
-
-    val mapBatch = mapper.map { _ =>
-      def fullSelection() =
-        // mappables excludes never-visited rows, so the selection over
-        // the marked frontier equals the old full-cycle selection
-        Frontier.selectMapBatch(
-          Frontier.markVisited(seededFull, claimed, now), batchSize)
-          .cache()
-      (if (seeds.nonEmpty) None else mPtr.filter(_.forBatch == last))
-        .flatMap { p =>
-          val mhead = readHeadRows(spark, stateRoot, "mhead", p.uuid)
-          // rows this batch makes NEWLY mappable: claimed rows that
-          // were not mappable before the visited mark (pre-mappable
-          // claimed rows are already head members — or rank below the
-          // floor, where the full selection could not pick them
-          // either while the head serves a full batch)
-          val preMappable = col("last_visit_date").isNotNull &&
-            col("last_map_date").isNull && col("visit_error").isNull
-          val newly0 = claimed.filter(!preMappable)
-            .withColumn("last_visit_date", lit(now))
-          val newly = p.floor match {
-            case Some((fp, fu)) => newly0.filter(atOrAbove(fp, fu))
-            case None           => newly0
+      val headClaimed: Option[DataFrame] =
+        if (seeds.nonEmpty) None
+        else vPtr.filter(p => p.forBatch == last && batchId <= p.horizonBatch)
+          .flatMap { p =>
+            val head = readHeadRows(spark, stateRoot, "vhead", p.uuid)
+            val picked = Scope.cache(Frontier.visitables(head, now)
+              .orderBy(desc("priority"), desc("uri")).limit(batchSize))
+            // a full batch's picks all rank at-or-above the floor, so
+            // nothing outside the head can outrank them; a complete
+            // head (no floor) is exact at any count. A short pick with
+            // a floor means below-floor rows may belong in the claim —
+            // fall back and rebuild.
+            if (picked.count() >= batchSize || p.floor.isEmpty) Some(picked)
+            else { vheadDrained = true; None }
           }
-          val sel = Frontier.selectMapBatch(
-            Frontier.markVisited(mhead, claimed, now)
-              .unionByName(newly), batchSize).cache()
-          if (sel.count() >= batchSize || p.floor.isEmpty) Some(sel)
-          else { sel.unpersist(false); mheadDrained = true; None }
-        }
-        .getOrElse(fullSelection())
-    }
+      val claimed = headClaimed
+        .getOrElse(Scope.cache(Frontier.claim(seededFull, now, batchSize)))
 
-    // touched partitions: every canonical this batch writes —
-    // seeds (insert/revisit), claimed rows (visited mark), visitor
-    // children (insert-if-absent), map batch (mapped mark). Bounded
-    // by batchSize × fanout, never corpus size.
-    val spark2 = spark
-    import spark2.implicits._
-    val touchedCanon = seeds.toDF("uri").select(lower(col("uri")).as("c"))
-      .unionByName(claimed.select(col("canonical").as("c")))
-      .unionByName(yielded.select(lower(col("uri")).as("c")))
-      .unionByName(mapBatch.map(_.select(col("canonical").as("c")))
-        .getOrElse(spark.emptyDataset[String].toDF("c")))
-    val touched = touchedCanon
-      .select(spidOf(col("c"), statePartitions).as("p"))
-      .distinct().collect().map(_.getInt(0)).sorted.toSeq
+      val prevHits =
+        if (hostDelayMs > 0) readHostHits(stateRoot)
+        else Map.empty[String, Long]
+      val hitsAcc =
+        if (hostDelayMs > 0)
+          Some(spark.sparkContext
+            .collectionAccumulator[(String, Long)]("graft.hostHits"))
+        else None
+      val yielded = Scope.cache(Frontier.expandClaims(spark, claimed,
+        visitor, hostDelayMs, prevHits, hitsAcc))
 
-    // restricted recompute: the SAME cycle against only the touched
-    // partitions (exactness argued in the object scaladoc)
-    val touchedPaths = partitionPaths(stateRoot, manifest, touched)
-    val oldTouched =
-      if (touchedPaths.isEmpty) emptyState(spark)
-      else spark.read.schema(
-          org.apache.spark.sql.types.StructType.fromDDL(stateDdl))
-        .parquet(touchedPaths: _*)
-    val subSeeded = seedInto(oldTouched)
-    val afterVisit = Frontier.markVisited(subSeeded, claimed, now)
-      .unionByName(Frontier.insertNewUris(subSeeded, yielded))
-    val next = (mapper, mapBatch) match {
-      case (Some(m), Some(batch)) =>
-        val pkgs = Frontier.mapPackages(spark, batch, m)
-        // batch-keyed overwrite = replay-idempotent; invisible to
-        // readers until the commit pointer covers this batch
-        pkgs.write.mode("overwrite")
-          .parquet(s"$stateRoot/packages/b=$batchId")
-        // the merge leg: feed this batch's mapped packages through the
-        // O(delta) catalog commit, tagged with the batchId. Replay
-        // idempotence needs the tag, not the frontier pointer: a crash
-        // BETWEEN this merge and the pointer swap re-runs the whole
-        // batch, and the watermark check is what keeps the catalog at
-        // exactly one application (the uninterrupted twin's result,
-        // FrontierStreamSpec). Reading the just-written parquet (not
-        // re-running the pkgs plan) keeps the merged rows bit-
-        // identical to the committed map output.
-        catalog.foreach { sink =>
-          if (graft.catalog.TxLog.maxTag(sink.root) < batchId) {
-            val incoming = sink.toPackages(
-              spark.read.parquet(s"$stateRoot/packages/b=$batchId"))
-            graft.catalog.TxLog.mergeCommitDelta(spark, sink.root,
-              incoming, now.toInstant.toString, sink.empty(),
-              sink.partitions, tag = Some(batchId))
+      val mapBatch = mapper.map { _ =>
+        def fullSelection() =
+          // mappables excludes never-visited rows, so the selection over
+          // the marked frontier equals the old full-cycle selection
+          Scope.cache(Frontier.selectMapBatch(
+            Frontier.markVisited(seededFull, claimed, now), batchSize))
+        (if (seeds.nonEmpty) None else mPtr.filter(_.forBatch == last))
+          .flatMap { p =>
+            val mhead = readHeadRows(spark, stateRoot, "mhead", p.uuid)
+            // rows this batch makes NEWLY mappable: claimed rows that
+            // were not mappable before the visited mark (pre-mappable
+            // claimed rows are already head members — or rank below the
+            // floor, where the full selection could not pick them
+            // either while the head serves a full batch)
+            val preMappable = col("last_visit_date").isNotNull &&
+              col("last_map_date").isNull && col("visit_error").isNull
+            val newly0 = claimed.filter(!preMappable)
+              .withColumn("last_visit_date", lit(now))
+            val newly = p.floor match {
+              case Some((fp, fu)) => newly0.filter(atOrAbove(fp, fu))
+              case None           => newly0
+            }
+            val sel = Scope.cache(Frontier.selectMapBatch(
+              Frontier.markVisited(mhead, claimed, now)
+                .unionByName(newly), batchSize))
+            if (sel.count() >= batchSize || p.floor.isEmpty) Some(sel)
+            else { mheadDrained = true; None }
           }
-          if (sink.vacuumEvery > 0 && batchId % sink.vacuumEvery == 0) {
-            graft.catalog.TxLog.vacuum(sink.root, keep = 2,
-              graceMs = sink.vacuumGraceMs)
-            compactPackages(spark, stateRoot)
+          .getOrElse(fullSelection())
+      }
+
+      // touched partitions: every canonical this batch writes —
+      // seeds (insert/revisit), claimed rows (visited mark), visitor
+      // children (insert-if-absent), map batch (mapped mark). Bounded
+      // by batchSize × fanout, never corpus size.
+      val spark2 = spark
+      import spark2.implicits._
+      val touchedCanon = seeds.toDF("uri").select(lower(col("uri")).as("c"))
+        .unionByName(claimed.select(col("canonical").as("c")))
+        .unionByName(yielded.select(lower(col("uri")).as("c")))
+        .unionByName(mapBatch.map(_.select(col("canonical").as("c")))
+          .getOrElse(spark.emptyDataset[String].toDF("c")))
+      val touched = touchedCanon
+        .select(spidOf(col("c"), statePartitions).as("p"))
+        .distinct().collect().map(_.getInt(0)).sorted.toSeq
+
+      // restricted recompute: the SAME cycle against only the touched
+      // partitions (exactness argued in the object scaladoc)
+      val touchedPaths = partitionPaths(stateRoot, manifest, touched)
+      val oldTouched =
+        if (touchedPaths.isEmpty) emptyState(spark)
+        else spark.read.schema(
+            org.apache.spark.sql.types.StructType.fromDDL(stateDdl))
+          .parquet(touchedPaths: _*)
+      val subSeeded = seedInto(oldTouched)
+      val afterVisit = Frontier.markVisited(subSeeded, claimed, now)
+        .unionByName(Frontier.insertNewUris(subSeeded, yielded))
+      val next = (mapper, mapBatch) match {
+        case (Some(m), Some(batch)) =>
+          val pkgs = Frontier.mapPackages(spark, batch, m)
+          // batch-keyed overwrite = replay-idempotent; invisible to
+          // readers until the commit pointer covers this batch
+          pkgs.write.mode("overwrite")
+            .parquet(s"$stateRoot/packages/b=$batchId")
+          // the merge leg: feed this batch's mapped packages through the
+          // O(delta) catalog commit, tagged with the batchId. Replay
+          // idempotence needs the tag, not the frontier pointer: a crash
+          // BETWEEN this merge and the pointer swap re-runs the whole
+          // batch, and the watermark check is what keeps the catalog at
+          // exactly one application (the uninterrupted twin's result,
+          // FrontierStreamSpec). Reading the just-written parquet (not
+          // re-running the pkgs plan) keeps the merged rows bit-
+          // identical to the committed map output.
+          catalog.foreach { sink =>
+            if (graft.catalog.TxLog.maxTag(sink.root) < batchId) {
+              val incoming = sink.toPackages(
+                spark.read.parquet(s"$stateRoot/packages/b=$batchId"))
+              graft.catalog.TxLog.mergeCommitDelta(spark, sink.root,
+                incoming, now.toInstant.toString, sink.empty(),
+                sink.partitions, tag = Some(batchId))
+            }
+            if (sink.vacuumEvery > 0 && batchId % sink.vacuumEvery == 0) {
+              graft.catalog.TxLog.vacuum(sink.root, keep = 2,
+                graceMs = sink.vacuumGraceMs)
+              compactPackages(spark, stateRoot)
+            }
           }
-        }
-        Frontier.markMapped(afterVisit, batch, now)
-      case _ => afterVisit
-    }
+          Frontier.markMapped(afterVisit, batch, now)
+        case _ => afterVisit
+      }
 
-    // stage ONLY the touched partitions to an immutable dir; the
-    // manifest re-links every untouched partition from the previous
-    // batch's manifest — the O(delta) write
-    val dirName = UUID.randomUUID().toString
-    next.withColumn("spid", spidOf(col("canonical"), statePartitions))
-      .write.partitionBy("spid").parquet(s"$stateRoot/sdata/$dirName")
-    val touchedEntries = touched.map(p => p -> s"$dirName/spid=$p")
-    val nextManifest = manifest ++ touchedEntries
-    writeManifest(stateRoot, batchId, touchedEntries, nextManifest)
+      // stage ONLY the touched partitions to an immutable dir; the
+      // manifest re-links every untouched partition from the previous
+      // batch's manifest — the O(delta) write
+      val dirName = UUID.randomUUID().toString
+      next.withColumn("spid", spidOf(col("canonical"), statePartitions))
+        .write.partitionBy("spid").parquet(s"$stateRoot/sdata/$dirName")
+      val touchedEntries = touched.map(p => p -> s"$dirName/spid=$p")
+      val nextManifest = manifest ++ touchedEntries
+      writeManifest(stateRoot, batchId, touchedEntries, nextManifest)
 
-    spark.sparkContext.getPersistentRDDs
-      .filter { case (id, _) => !cachedBefore.contains(id) }
-      .values.foreach(_.unpersist(false))
-    preCommitHook(batchId)
-    val tmp = Paths.get(stateRoot, "COMMIT.tmp")
-    Files.writeString(tmp, batchId.toString)
-    Files.move(tmp, commitFile(stateRoot),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+      preCommitHook(batchId)
+      val tmp = Paths.get(stateRoot, "COMMIT.tmp")
+      Files.writeString(tmp, batchId.toString)
+      Files.move(tmp, commitFile(stateRoot),
+        StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
 
-    // ---- head maintenance (post-commit: a crash here skips the
-    // batch on replay and the stale pointer forces a rebuild) -------
-    val k = if (headSize > 0) headSize else headK(batchSize)
-    def postState(): DataFrame =
-      if (nextManifest.isEmpty) emptyState(spark)
-      else spark.read.schema(
-          org.apache.spark.sql.types.StructType.fromDDL(stateDdl))
-        .parquet(nextManifest.values.toSeq.sorted
-          .map(p => s"$stateRoot/sdata/$p"): _*)
-    def newTouchedState(): DataFrame =
-      if (touched.isEmpty) emptyState(spark)
-      else spark.read.schema(
-          org.apache.spark.sql.types.StructType.fromDDL(stateDdl))
-        .parquet(partitionPaths(stateRoot, nextManifest, touched): _*)
+      // ---- head maintenance (post-commit: a crash here skips the
+      // batch on replay and the stale pointer forces a rebuild) -------
+      val k = if (headSize > 0) headSize else headK(batchSize)
+      def postState(): DataFrame =
+        if (nextManifest.isEmpty) emptyState(spark)
+        else spark.read.schema(
+            org.apache.spark.sql.types.StructType.fromDDL(stateDdl))
+          .parquet(nextManifest.values.toSeq.sorted
+            .map(p => s"$stateRoot/sdata/$p"): _*)
+      def newTouchedState(): DataFrame =
+        if (touched.isEmpty) emptyState(spark)
+        else spark.read.schema(
+            org.apache.spark.sql.types.StructType.fromDDL(stateDdl))
+          .parquet(partitionPaths(stateRoot, nextManifest, touched): _*)
 
-    val vCarry = !seeds.nonEmpty && !vheadDrained &&
-      vPtr.exists(p => p.forBatch == last && batchId + 1 <= p.horizonBatch)
-    if (vCarry) {
-      val p = vPtr.get
-      if (touched.isEmpty) // nothing moved: re-point the same rows
-        writeHeadPtr(stateRoot, "VHEAD", "vhead",
-          p.copy(forBatch = batchId))
-      else updateHead(spark, stateRoot, "vhead", p, touched,
-        newTouchedState().filter(potentialVisitable(p.horizonBatch)),
-        batchId, statePartitions)
-    } else {
-      val hb = batchId + HeadHorizonBatches
-      buildHead(stateRoot, "vhead",
-        postState().filter(potentialVisitable(hb)), k, batchId, hb)
-    }
-    mapper.foreach { _ =>
-      val mCarry = !seeds.nonEmpty && !mheadDrained &&
-        mPtr.exists(_.forBatch == last)
-      if (mCarry) {
-        val p = mPtr.get
-        if (touched.isEmpty)
-          writeHeadPtr(stateRoot, "MHEAD", "mhead",
+      val vCarry = !seeds.nonEmpty && !vheadDrained &&
+        vPtr.exists(p => p.forBatch == last && batchId + 1 <= p.horizonBatch)
+      if (vCarry) {
+        val p = vPtr.get
+        if (touched.isEmpty) // nothing moved: re-point the same rows
+          writeHeadPtr(stateRoot, "VHEAD", "vhead",
             p.copy(forBatch = batchId))
-        else updateHead(spark, stateRoot, "mhead", p, touched,
-          Frontier.mappables(newTouchedState()), batchId,
-          statePartitions)
-      } else buildHead(stateRoot, "mhead",
-        Frontier.mappables(postState()), k, batchId, Long.MaxValue)
-    }
+        else updateHead(spark, stateRoot, "vhead", p, touched,
+          newTouchedState().filter(potentialVisitable(p.horizonBatch)),
+          batchId, statePartitions)
+      } else {
+        val hb = batchId + HeadHorizonBatches
+        buildHead(stateRoot, "vhead",
+          postState().filter(potentialVisitable(hb)), k, batchId, hb)
+      }
+      mapper.foreach { _ =>
+        val mCarry = !seeds.nonEmpty && !mheadDrained &&
+          mPtr.exists(_.forBatch == last)
+        if (mCarry) {
+          val p = mPtr.get
+          if (touched.isEmpty)
+            writeHeadPtr(stateRoot, "MHEAD", "mhead",
+              p.copy(forBatch = batchId))
+          else updateHead(spark, stateRoot, "mhead", p, touched,
+            Frontier.mappables(newTouchedState()), batchId,
+            statePartitions)
+        } else buildHead(stateRoot, "mhead",
+          Frontier.mappables(postState()), k, batchId, Long.MaxValue)
+      }
 
-    // persist the batch's per-host last-hit walls for the NEXT
-    // batch's politeness floor (cluster-global budget — the map is
-    // ≤ one entry per host this batch touched). Max-merged, so a
-    // cached-partition recompute double-reporting a hit is harmless.
-    hitsAcc.foreach { acc =>
-      import scala.jdk.CollectionConverters._
-      val batchHits = acc.value.asScala
-        .groupMapReduce(_._1)(_._2)(math.max)
-      val merged = (prevHits.keySet ++ batchHits.keySet).map { h =>
-        h -> math.max(prevHits.getOrElse(h, 0L),
-          batchHits.getOrElse(h, 0L))
-      }.toMap
-      writeHostHits(stateRoot, merged, hostDelayMs)
-    }
+      // persist the batch's per-host last-hit walls for the NEXT
+      // batch's politeness floor (cluster-global budget — the map is
+      // ≤ one entry per host this batch touched). Max-merged, so a
+      // cached-partition recompute double-reporting a hit is harmless.
+      hitsAcc.foreach { acc =>
+        import scala.jdk.CollectionConverters._
+        val batchHits = acc.value.asScala
+          .groupMapReduce(_._1)(_._2)(math.max)
+        val merged = (prevHits.keySet ++ batchHits.keySet).map { h =>
+          h -> math.max(prevHits.getOrElse(h, 0L),
+            batchHits.getOrElse(h, 0L))
+        }.toMap
+        writeHostHits(stateRoot, merged, hostDelayMs)
+      }
 
-    // retention: the newest `retainBatches` committed manifests stay
-    // resolvable (crash-window safety margin by default; raise it for
-    // a frontierAt audit horizon) — with delta records that means
-    // keeping the overlay CHAIN down to the newest checkpoint at or
-    // below the oldest kept batch (≤ checkpoint cadence files,
-    // bounded); older records, and any sdata dir referenced by no
-    // kept RESOLUTION (superseded partition files, crashed replays'
-    // orphaned staging), are dropped. Entries of intermediate chain
-    // deltas superseded in every kept resolution are never served as
-    // data paths, so their dirs are safe to drop even while the
-    // chain records survive.
-    val manifests = listManifests(stateRoot)
-    val keepIds = manifests.map(_._1).filter(_ <= batchId)
-      .take(math.max(retainBatches, 1))
-    // the newest checkpoint at or below the oldest kept batch, BY
-    // ARITHMETIC (ADVICE r11: the old scan re-read every retained
-    // record per batch just to find the floor): checkpoints land
-    // exactly at the ManifestCheckpointEvery cadence — batch 0
-    // included — so the floor is the aligned multiple, no file reads
-    val chainFloor =
-      (keepIds.min / ManifestCheckpointEvery) * ManifestCheckpointEvery
-    val liveDirs = keepIds.flatMap { b =>
-      val m =
-        if (b == batchId) nextManifest
-        else if (b == last) manifest
-        else readManifest(stateRoot, b)
-      m.values.map(_.split('/').head)
-    }.toSet
-    manifests.foreach { case (v, p) =>
-      if (v < chainFloor) Files.deleteIfExists(p)
+      // retention: the newest `retainBatches` committed manifests stay
+      // resolvable (crash-window safety margin by default; raise it for
+      // a frontierAt audit horizon) — with delta records that means
+      // keeping the overlay CHAIN down to the newest checkpoint at or
+      // below the oldest kept batch (≤ checkpoint cadence files,
+      // bounded); older records, and any sdata dir referenced by no
+      // kept RESOLUTION (superseded partition files, crashed replays'
+      // orphaned staging), are dropped. Entries of intermediate chain
+      // deltas superseded in every kept resolution are never served as
+      // data paths, so their dirs are safe to drop even while the
+      // chain records survive.
+      val manifests = listManifests(stateRoot)
+      val keepIds = manifests.map(_._1).filter(_ <= batchId)
+        .take(math.max(retainBatches, 1))
+      // the newest checkpoint at or below the oldest kept batch, BY
+      // ARITHMETIC (ADVICE r11: the old scan re-read every retained
+      // record per batch just to find the floor): checkpoints land
+      // exactly at the ManifestCheckpointEvery cadence — batch 0
+      // included — so the floor is the aligned multiple, no file reads
+      val chainFloor =
+        (keepIds.min / ManifestCheckpointEvery) * ManifestCheckpointEvery
+      val liveDirs = keepIds.flatMap { b =>
+        val m =
+          if (b == batchId) nextManifest
+          else if (b == last) manifest
+          else readManifest(stateRoot, b)
+        m.values.map(_.split('/').head)
+      }.toSet
+      manifests.foreach { case (v, p) =>
+        if (v < chainFloor) Files.deleteIfExists(p)
+      }
+      val sdata = Paths.get(stateRoot, "sdata")
+      if (Files.exists(sdata)) {
+        val dl = Files.list(sdata)
+        try {
+          val it = dl.iterator()
+          while (it.hasNext) {
+            val p = it.next()
+            if (!liveDirs.contains(p.getFileName.toString)) deleteTree(p)
+          }
+        } finally dl.close()
+      }
+      // crash-orphaned dot-file temps (`.sv-*`, `.hosts-*`, pointer
+      // swaps) older than the grace — the shared TxLog sweep; an
+      // always-on stream in a crash loop must not accrete them
+      graft.catalog.TxLog.sweepDotOrphans(Paths.get(stateRoot),
+        System.currentTimeMillis() - OrphanGraceMs)
     }
-    val sdata = Paths.get(stateRoot, "sdata")
-    if (Files.exists(sdata)) {
-      val dl = Files.list(sdata)
-      try {
-        val it = dl.iterator()
-        while (it.hasNext) {
-          val p = it.next()
-          if (!liveDirs.contains(p.getFileName.toString)) deleteTree(p)
-        }
-      } finally dl.close()
-    }
-    // crash-orphaned dot-file temps (`.sv-*`, `.hosts-*`, pointer
-    // swaps) older than the grace — the shared TxLog sweep; an
-    // always-on stream in a crash loop must not accrete them
-    graft.catalog.TxLog.sweepDotOrphans(Paths.get(stateRoot),
-      System.currentTimeMillis() - OrphanGraceMs)
   }
 
   /** Grace for the dot-file orphan sweep: a live temp is younger than

@@ -19,6 +19,16 @@ object GraftBridge {
     classic.Dataset.ofRows(
       spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A clone of `s` with adaptive execution off: its conf, temp views,
+    * functions and query-execution listeners are copied at the call,
+    * and it shares `s`'s cache. */
+  def aqeOffClone(s: SparkSession): SparkSession = {
+    val c = s.asInstanceOf[classic.SparkSession].cloneSession()
+    c.sessionState.conf.setConf(
+      internal.SQLConf.ADAPTIVE_EXECUTION_ENABLED, false)
+    c
+  }
+
   /** Eager local checkpoint that also RETURNS the row count of the
     * materialization. `Dataset.localCheckpoint(eager = true)` runs an
     * internal `rdd.count()` and throws the number away, so iterative

@@ -192,4 +192,20 @@ class DedupIngestStreamSpec extends SparkTestBase {
     assert(labelsAt(root) == fullCc(all))
     DedupOps.releaseCaches()
   }
+
+  test("a batch processed on the caller's thread frees only its own " +
+      "frames: the caller's dedup caches stay cached") {
+    val df = Registry.byName("d_jaccard_prefix_capped").run(spark, sf001)
+    assert(df.count() > 0) // materializes the query's cached frames
+    val callers = spark.sparkContext.getPersistentRDDs.keySet
+    val root = Files.createTempDirectory("ingest_scope").toString
+    val corpusSh = shingled(Seq((2L, dA), (3L, dB)))
+    MinhashIndexStore.save(root, corpusSh,
+      Some(corpusSh.select(col("doc_id"), col("doc_id").as("cluster_id"))))
+    DedupIngestStream.processBatch(root,
+      Seq(5L -> dC).toDF("doc_id", "text"), 0L)
+    val lost = callers -- spark.sparkContext.getPersistentRDDs.keySet
+    assert(lost.isEmpty, s"the batch unpersisted the caller's RDDs $lost")
+    DedupOps.releaseCaches()
+  }
 }

@@ -289,4 +289,18 @@ class EmbeddingIngestStreamSpec extends SparkTestBase {
       Seq.empty[IngestVec].toDF(), 0L)
     assert(v == v1 && IvfIndexStore.latestVersion(root) == v1)
   }
+
+  test("a batch processed on the caller's thread frees only its own " +
+      "frames: the caller's checkpointed ANN query still runs") {
+    // the recall query's output reads cached edge frames built over
+    // localCheckpointed intermediates, which cannot recompute — a
+    // batch that dropped them would make the action throw
+    val df = Registry.byName("s_knn_ann_recall").run(spark, sf001)
+    val root = Files.createTempDirectory("emb_scope").toString
+    IvfIndexStore.save(root, emb.filter(col("vec_id") % 5 =!= 0), 32)
+    EmbeddingIngestStream.processBatch(root,
+      rawVecs(col("vec_id") % 10 === 0).toDF(), 0L)
+    assert(df.count() > 0)
+    SimilarityOps.releaseCaches()
+  }
 }

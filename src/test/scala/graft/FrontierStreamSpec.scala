@@ -670,9 +670,46 @@ class FrontierStreamSpec extends SparkTestBase {
           s"${FrontierStream.committedBatch(stateRoot)}")
     } finally q.stop()
   }
+
+  test("a batch on one thread leaves another thread's checkpoints " +
+      "alone") {
+    import spark.implicits._
+    val stateRoot = tmp("fs-scope")
+    FrontierStreamSpec.inVisit = new java.util.concurrent.CountDownLatch(1)
+    FrontierStreamSpec.gate = new java.util.concurrent.CountDownLatch(1)
+    val blocking: Frontier.Visitor = uri => {
+      FrontierStreamSpec.inVisit.countDown()
+      FrontierStreamSpec.gate.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      Seq.empty
+    }
+    val seeds = Seq("https://registry.npmjs.org/index").toDF("value")
+    @volatile var failure: Throwable = null
+    val a = new Thread(() =>
+      try FrontierStream.processBatch(spark, seeds, 0L, stateRoot,
+        blocking, 10)
+      catch { case e: Throwable => failure = e })
+    a.start()
+    try {
+      assert(FrontierStreamSpec.inVisit.await(60,
+        java.util.concurrent.TimeUnit.SECONDS))
+      // checkpointed while A's batch is in flight
+      val ck = spark.range(0, 100).toDF("id").localCheckpoint()
+      FrontierStreamSpec.gate.countDown()
+      a.join()
+      assert(failure == null, s"batch failed: $failure")
+      assert(FrontierStream.committedBatch(stateRoot) == 0L)
+      assert(ck.count() == 100L)
+    } finally {
+      FrontierStreamSpec.gate.countDown()
+      a.join()
+    }
+  }
 }
 
 object FrontierStreamSpec {
+  // a visitor blocked mid-batch (executor side) and its release
+  @volatile var inVisit = new java.util.concurrent.CountDownLatch(1)
+  @volatile var gate = new java.util.concurrent.CountDownLatch(1)
   // crash-once latch shared with executor-free driver-side hook
   val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
   // (uri, wall-clock ms) per visitor invocation — static so the
