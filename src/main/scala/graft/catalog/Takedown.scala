@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.ArtifactLog
-import graft.ops.ArtifactLog.Rec
+import graft.ops.ArtifactLog.{Rec, dropTombs, readTombs}
 
 /** Package takedown with FK-cascade semantics — the reference's
   * `Package.delete()` cascading to its Resource rows and matchcode
@@ -83,22 +83,10 @@ object Takedown {
         TableTags.map(t => t -> s"$dirName/$t")), store)
   }
 
-  private def readTombs(spark: SparkSession, root: String,
-      dirs: Seq[String]): Option[DataFrame] =
-    if (dirs.isEmpty) None
-    else Some(dirs.sorted
-      .map(d => spark.read.parquet(s"$root/data/$d"))
-      .reduce(_ unionByName _))
-
   private def table(spark: SparkSession, root: String, r: Rec,
-      tag: String, tombs: Option[DataFrame]): DataFrame = {
-    val df = spark.read.parquet(s"$root/data/${r.dirsOf(tag).head}")
-    tombs match {
-      case Some(t) =>
-        df.join(broadcast(t), Seq("download_url"), "left_anti")
-      case None => df
-    }
-  }
+      tag: String, tombs: Option[DataFrame]): DataFrame =
+    dropTombs(spark.read.parquet(s"$root/data/${r.dirsOf(tag).head}"),
+      tombs, "download_url")
 
   def load(spark: SparkSession, root: String): Catalog = {
     val recs = ArtifactLog.list(root)

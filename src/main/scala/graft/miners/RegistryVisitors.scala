@@ -217,10 +217,4 @@ object RegistryVisitors {
   def npmFrontierVisitor(transport: Transport)
       : graft.streaming.Frontier.Visitor =
     frontierVisitor(transport)(npmRegistryUris)
-
-  /** The pypi package visitor as a frontier visitor. */
-  def pypiFrontierVisitor(transport: Transport)
-      : graft.streaming.Frontier.Visitor =
-    frontierVisitor(transport)((json, src) =>
-      Right(pypiPackageUris(json, src)))
 }

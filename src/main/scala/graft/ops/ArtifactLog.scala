@@ -2,6 +2,9 @@ package graft.ops
 
 import java.nio.file.{Files, Path, Paths}
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.broadcast
+
 import graft.catalog.{CommitStore, TxLog}
 
 /** Shared commit-log machinery for versioned on-disk INDEX artifacts
@@ -40,7 +43,6 @@ private[graft] object ArtifactLog {
   val TagKeys: Set[String] = Set("tag", "tdtag")
 
   private def commitsDir(root: String): Path = Paths.get(root, "_commits")
-  private def vname(v: Long): String = f"v$v%020d"
 
   def render(kind: String, r: Rec): String =
     (s"#$kind ${r.kv.map { case (k, v) => s"$k=$v" }.mkString(" ")}" +:
@@ -93,6 +95,34 @@ private[graft] object ArtifactLog {
         "bounds how far back index reads reach")
     parse(kind, Files.readString(p.get).trim)
   }
+
+  /** Tombstone dirs are tiny unpartitioned key tables — read whole,
+    * broadcast, anti-joined ([[dropTombs]]). None → no filter in any
+    * plan. */
+  def readTombs(spark: SparkSession, root: String,
+      dirs: Seq[String]): Option[DataFrame] =
+    if (dirs.isEmpty) None
+    else Some(dirs.sorted
+      .map(d => spark.read.parquet(s"$root/data/$d"))
+      .reduce(_ unionByName _))
+
+  /** `df` without the rows whose `key` a tombstone names. */
+  def dropTombs(df: DataFrame, tombs: Option[DataFrame],
+      key: String): DataFrame =
+    tombs.fold(df)(t => df.join(broadcast(t), Seq(key), "left_anti"))
+
+  /** Shard dirs are each a partitioned table root; Spark's partition
+    * discovery refuses a multi-root scan without a common basePath, so
+    * each dir reads under its own basePath and the shards union — the
+    * unions are FEW (one per un-compacted shard, bounded by the stores'
+    * compaction cadence) and unionByName keeps the partition column
+    * positional drift out. */
+  def readDirs(spark: SparkSession, root: String,
+      dirs: Seq[String]): DataFrame =
+    dirs.sorted
+      .map(d => spark.read.option("basePath", s"$root/data/$d")
+        .parquet(s"$root/data/$d"))
+      .reduce(_ unionByName _)
 
   /** CAS-commit `rec` as `readVersion + 1`, after joining the calling
     * [[graft.Scope]] region's background tasks (the staging writes the

@@ -25,8 +25,15 @@ import graft.ops.ArtifactLog.Rec
   *   root/_commits/v<20-digit>      one record per committed version
   *   root/data/<uuid>/centroids/    (cid, cv: array<bigint>, cn2)
   *   root/data/<uuid>/cells/        (vec_id, v, n2, cell, pb)
+  *   root/data/<uuid>/books/        (sub, cid, cv, cvn2)       [PQ]
+  *   root/data/<uuid>/codes/        (vec_id, code, cell, pb)   [PQ]
   *   root/data/<uuid>/attrs/        (vec_id, <metadata…>, ab)  [attr-flagged]
   * }}}
+  *
+  * A PQ index is the flat index plus a code layer (IVFADC, Jégou et
+  * al.): the flat inverted lists stay the re-rank, retrain and
+  * drift-monitor substrate, and every operation dispatches on the
+  * record it reads — a `B` (books) line means the layer is there.
   *
   * Records are the [[ArtifactLog]] shape (header `#ivf k=.. p=..`, one
   * `C` line, one `D` line per cells shard): every version is a
@@ -71,22 +78,43 @@ object IvfIndexStore {
     * the coarse quantizer moved). */
   final case class IvfIndex(version: Long, k: Int, buckets: Int,
       centroids: DataFrame, cells: DataFrame,
-      attrs: Option[DataFrame] = None, attrBuckets: Int = 0)
+      attrs: Option[DataFrame] = None, attrBuckets: Int = 0,
+      pq: Option[PqLayer] = None)
 
-  /** A loaded IVF-PQ version: the flat index (centroids + raw-vector
-    * inverted lists, still the re-rank / retrain / drift-monitor
-    * substrate) plus the PQ layer — broadcast-hinted dense codebooks
+  /** The PQ layer of a loaded version (present iff it was saved with
+    * [[save]]'s `pq`): broadcast-hinted dense codebooks
     * (sub, cid, cv, cvn2) and the packed code table
     * (vec_id, code: array<int>, cell, pb). The codes table is the
     * one ADC scans: m ints + a cell id per vector vs the flat lists'
     * dim × 8 B arrays (~30× fewer bytes at m=4 × 64 dims; 64× at the
     * FAISS-typical m=16 × 768 float dims) — the raw vectors are read
     * only for the ≤ L×|queries| shortlist re-rank. */
-  final case class IvfPqIndex(flat: IvfIndex, m: Int, subDim: Int,
-      books: DataFrame, codes: DataFrame, residual: Boolean = false) {
-    def version: Long = flat.version
-    def buckets: Int = flat.buckets
-  }
+  final case class PqLayer(m: Int, subDim: Int, books: DataFrame,
+      codes: DataFrame, residual: Boolean = false)
+
+  /** The settings [[save]] trains a PQ layer with: `m` subspaces, ≤
+    * `ksub` centroids each (dense ids). `residual = true` selects
+    * RESIDUAL PQ (Jégou et al.'s IVFADC proper, FAISS
+    * `by_residual=true`): codebooks train on and codes encode
+    * x − c(cell) rather than raw x, concentrating the quantizer's
+    * budget on within-cell variation. Cost: per-(query, probed-cell)
+    * ADC tables (nprobe× more table rows, still a broadcast) and a
+    * centroid join on the encode path (broadcast, no shuffle).
+    * Measured honestly (BASELINE.md "Round-13: nprobe/recall operating
+    * grid + residual PQ"): recall@3 = 1.00 at 10×/100× like the raw
+    * path, and at the 1× toy budget (m=4, ksub=16, ~64-wide cells)
+    * residuals do NOT rescue the 0.70 dip (0.63) — the grids show that
+    * dip is SHORTLIST-PRECISION truncation (recall falls as nprobe
+    * grows at fixed L, climbs with L), so the operating knobs there
+    * are L and ksub, with by-residual the standard default at
+    * production budgets (FAISS trains IVF with residuals for exactly
+    * the within-cell-variance reason). The flag persists in the record
+    * (`res=1`); appends, retrain, and the ADC probe all dispatch on
+    * it; `s_ann_index_pq_residual` gates the arithmetic end-to-end.
+    * `rowGroupBytes > 0` is the re-rank IO knob (record `rg`): see
+    * [[adcShortlist]]. */
+  final case class Pq(m: Int, ksub: Int, residual: Boolean = false,
+      rowGroupBytes: Int = 0)
 
   private val Kind = "ivf"
 
@@ -100,41 +128,25 @@ object IvfIndexStore {
   private def dot(a: String, b: String) =
     graft.functions.GraftFunctions.dot_long(col(a), col(b))
 
-  private def mkRec(k: Int, buckets: Int, centroidDir: String,
-      cellDirs: Seq[String]): Rec =
-    Rec(Seq("k" -> k.toString, "p" -> buckets.toString),
-      ("C" -> centroidDir) +: cellDirs.map("D" -> _))
+  /** The union of `r`'s `tag` shard dirs, tombstoned vectors dropped. */
+  private def live(spark: SparkSession, root: String, r: Rec, tag: String,
+      tombs: Option[DataFrame]): DataFrame =
+    ArtifactLog.dropTombs(ArtifactLog.readDirs(spark, root, r.dirsOf(tag)),
+      tombs, "vec_id")
 
-  /** Tombstone dirs are tiny unpartitioned (vec_id) tables — read
-    * whole, broadcast, anti-joined. None → no filter in any plan. */
-  private def readTombs(spark: SparkSession, root: String,
-      dirs: Seq[String]): Option[DataFrame] =
-    if (dirs.isEmpty) None
-    else Some(dirs.sorted
-      .map(d => spark.read.parquet(s"$root/data/$d"))
-      .reduce(_ unionByName _))
+  /** The dir lines of one shard staged under `dirName`: its cells
+    * (`D`), its codes (`Q`) under a code layer, its attrs (`A`) on an
+    * attr-flagged index. */
+  private def shardDirs(dirName: String, codes: Boolean,
+      attrs: Boolean): Seq[(String, String)] =
+    Seq("D" -> s"$dirName/cells") ++
+      (if (codes) Seq("Q" -> s"$dirName/codes") else Nil) ++
+      (if (attrs) Seq("A" -> s"$dirName/attrs") else Nil)
 
-  private def dropTombs(df: DataFrame, tombs: Option[DataFrame])
-      : DataFrame = tombs match {
-    case Some(t) => df.join(broadcast(t), Seq("vec_id"), "left_anti")
-    case None => df
-  }
-
-  /** Shard dirs are each a partitioned (pb=N) table root; Spark's
-    * partition discovery refuses a multi-root scan without a common
-    * basePath, so each dir reads under its own basePath and the
-    * shards union — the unions are FEW (one per un-compacted shard,
-    * bounded by [[compact]]'s cadence) and unionByName keeps the
-    * partition column positional drift out. */
-  private def readCellDirs(spark: SparkSession, root: String,
-      dirs: Seq[String]): DataFrame =
-    dirs.sorted
-      .map(d => spark.read.option("basePath", s"$root/data/$d")
-        .parquet(s"$root/data/$d"))
-      .reduce(_ unionByName _)
+  private def rowGroup(r: Rec): Int = r.kvMap.get("rg").fold(0)(_.toInt)
 
   private def writeCells(cells: DataFrame, buckets: Int, dir: String,
-      rowGroup: Int = 0): Unit = {
+      rowGroup: Int): Unit = {
     val w = cells
       .select(col("vec_id"), col("v"), col("n2"), col("cell"),
         pmod(col("cell"), lit(buckets.toLong)).cast("int").as("pb"))
@@ -198,16 +210,16 @@ object IvfIndexStore {
   /** Train on `corpus` (a [[SimilarityOps.quantized]]-shaped frame:
     * vec_id, v, n2) and commit version 1: centroids via the
     * integer-exact Lloyd pass, cells = corpus assignment on the
-    * trained centroids. Returns the committed version. */
+    * trained centroids. `pq` adds the code layer: per-subspace
+    * codebooks and the packed code table, staged next to the flat
+    * dirs under the same uuid, with the PQ params (`m=`, `sd=`, `ks=`,
+    * `rg=`, `res=`) in the record header and two extra dir kinds — `B`
+    * (books), `Q` (one codes shard per ingest, parallel to the `D`
+    * cells shards). Returns the committed version. */
   def save(root: String, corpus: DataFrame, k: Int,
       store: CommitStore = LinkCommitStore, iters: Int = 1,
-      attrs: Option[DataFrame] = None): Long = Scope {
+      attrs: Option[DataFrame] = None, pq: Option[Pq] = None): Long = Scope {
     TxLog.init(root)
-    // the Lloyd-iteration subplan behind the centroids feeds THREE
-    // actions (empty check, centroid write, cell assignment) — cache
-    // it for this call so it runs once (like
-    // MinhashIndexStore.save's corpus cache)
-    val cents = Scope.cache(SimilarityOps.ivfCentroids(corpus, k, iters))
     val sess = corpus.sparkSession
     graft.core.labeled(sess, "ivf:save") {
       // the attr sidecar's bucket sizing (a count over the attrs
@@ -215,219 +227,153 @@ object IvfIndexStore {
       // train gate and the staging writes (guide §2.6)
       val apFut = attrs.map(a => Scope.fork(sess, "ivf:save:attrs-n")(
         defaultAttrBuckets(a.count())))
-      require(!graft.core.labeled(sess, "ivf:save:train")(cents.isEmpty),
-        "IVF save needs a non-empty training corpus (the coarse " +
-          "quantizer cannot train on nothing — unlike the dedup " +
-          "index, there is no empty-index bootstrap; re-save when " +
-          "data exists)")
-      val cells = SimilarityOps.ivfCells(corpus, cents)
+      // a code layer reads the corpus twice more (book training,
+      // encode): cache it for the call
+      val corp = if (pq.isEmpty) corpus else Scope.cache(corpus)
+      // one limit(1) action answers both the PQ layer's non-empty
+      // gate and the dimension its subspaces split
+      val layer = pq.map { p =>
+        val dim = graft.core.labeled(sess, "ivf:save:dim")(dimOf(corp))
+        require(dim.isDefined, EmptyCorpus)
+        require(dim.get % p.m == 0,
+          s"vector dim ${dim.get} is not divisible by m=${p.m} subspaces")
+        (p, dim.get / p.m)
+      }
       val dirName = UUID.randomUUID().toString
-      // ALL independent staging writes — centroids, cells, and the
-      // attr sidecar — overlap (guide §2.6) and the commit joins
-      // them; the attr write joins its own bucket count, so the
-      // sizing job overlaps the other writes too
-      Scope.fork(sess, "ivf:save:write:centroids")(
-        cents.write.parquet(s"$root/data/$dirName/centroids"))
-      Scope.fork(sess, "ivf:save:write:cells")(
-        writeCells(cells, defaultBuckets(k), s"$root/data/$dirName/cells"))
+      val dir = s"$root/data/$dirName"
+      stage(corp, k, iters, None, layer, dir, EmptyCorpus)
+      // the attr write joins its own bucket count, so the sizing job
+      // overlaps the other staging writes too
       attrs.zip(apFut).foreach { case (a, f) =>
         Scope.fork(sess, "ivf:save:write:attrs")(
-          writeAttrs(a, f(), s"$root/data/$dirName/attrs"))
+          writeAttrs(a, f(), s"$dir/attrs"))
       }
-      val attrKv = apFut.toSeq.map(f => "ap" -> f().toString)
-      val base = mkRec(k, defaultBuckets(k), s"$dirName/centroids",
-        Seq(s"$dirName/cells"))
-      val rec = Rec(base.kv ++ attrKv,
-        base.dirs ++ attrs.toSeq.map(_ => "A" -> s"$dirName/attrs"))
+      val rec = Rec(
+        Seq("k" -> k.toString, "p" -> defaultBuckets(k).toString) ++
+          layer.toSeq.flatMap { case (p, sd) => pqKv(p, sd) } ++
+          apFut.toSeq.map(f => "ap" -> f().toString),
+        Seq("C" -> s"$dirName/centroids") ++
+          pq.map(_ => "B" -> s"$dirName/books") ++
+          shardDirs(dirName, pq.isDefined, attrs.isDefined))
       val v = ArtifactLog.list(root).headOption.map(_._1).getOrElse(0L)
       ArtifactLog.commit(root, Kind, v, rec, store)
     }
   }
 
+  private val EmptyCorpus =
+    "IVF save needs a non-empty training corpus with ids below k (the " +
+      "coarse quantizer cannot train on nothing and seeds on the low " +
+      "ids — unlike the dedup index, there is no empty-index " +
+      "bootstrap; re-save when data exists)"
+
+  /** The PQ settings and subspace width of a record with a code layer
+    * — the inverse of [[pqKv]]. */
+  private def pqOf(r: Rec): Option[(Pq, Int)] =
+    r.dirsOf("B").headOption.map(_ => (
+      Pq(r.kvMap("m").toInt, r.kvMap("ks").toInt,
+        r.kvMap.get("res").contains("1"), rowGroup(r)),
+      r.kvMap("sd").toInt))
+
+  private def pqKv(p: Pq, subDim: Int): Seq[(String, String)] =
+    Seq("m" -> p.m.toString, "sd" -> subDim.toString,
+      "ks" -> p.ksub.toString) ++
+      (if (p.rowGroupBytes > 0) Seq("rg" -> p.rowGroupBytes.toString)
+       else Nil) ++
+      (if (p.residual) Seq("res" -> "1") else Nil)
+
+  /** Train a version on `corp` — the coarse quantizer, and the code
+    * layer `pq` names with its subspace width — and fork every staging
+    * write into `dir` ([[save]], [[retrain]]). `seeds` replaces the
+    * low-id seeding of both quantizers with a hash sample; `gate` is
+    * the error when the coarse training comes out empty. */
+  private def stage(corp: DataFrame, k: Int, iters: Int,
+      seeds: Option[DataFrame], pq: Option[(Pq, Int)], dir: String,
+      gate: String): Unit = {
+    val sess = corp.sparkSession
+    // the Lloyd-iteration subplan behind the centroids feeds THREE
+    // actions (empty check, centroid write, cell assignment) — cache
+    // it for this call so it runs once (like
+    // MinhashIndexStore.save's corpus cache)
+    val cents = Scope.cache(SimilarityOps.ivfCentroids(corp, k, iters, seeds))
+    require(!graft.core.labeled(sess, "ivf:train")(cents.isEmpty), gate)
+    val buckets = defaultBuckets(k)
+    // ALL independent staging writes — centroids, cells, books and
+    // codes — overlap (guide §2.6) and the commit joins them
+    Scope.fork(sess, "ivf:write:centroids")(
+      cents.write.parquet(s"$dir/centroids"))
+    val assigned = SimilarityOps.ivfCells(corp, cents)
+    // the code layer encodes the assignment a second time: cache it
+    // then, or the broadcast argmin pass runs twice
+    val cells = if (pq.isEmpty) assigned else Scope.cache(assigned)
+    Scope.fork(sess, "ivf:write:cells")(writeCells(cells, buckets,
+      s"$dir/cells", pq.fold(0)(_._1.rowGroupBytes)))
+    pq.foreach { case (p, subDim) =>
+      // codebooks train on the raw corpus, or on x − c(cell) for a
+      // residual layer; the residual frame feeds book training AND
+      // the encode
+      val resid =
+        if (p.residual) Some(Scope.cache(SimilarityOps.residuals(cells, cents)))
+        else None
+      val base = resid.getOrElse(corp)
+      // hash-seeded books need their OWN ksub-sized sample: a subset
+      // of the k coarse seeds silently shrinks the codebooks whenever
+      // k < ksub (retrain's k is n/64 but ksub is a fixed quantization
+      // budget — at small corpora k can be far below it). Same
+      // ordering, so when k ≥ ksub this is exactly the first-ksub
+      // subset.
+      val bookSeeds = seeds.map(_ => base.orderBy(xxhash64(col("vec_id")))
+        .limit(p.ksub).select("vec_id", "v", "n2"))
+      val books = Scope.cache(SimilarityOps.pqCodebooks(
+        base, p.m, subDim, p.ksub, iters, bookSeeds))
+      // the materializing count is the gate
+      require(graft.core.labeled(sess, "ivf:book-train")(books.count()) > 0,
+        "IVF-PQ training produced no codebooks (the default low-id " +
+          "seeding needs corpus ids below ksub; pass explicit seeds " +
+          "otherwise)")
+      Scope.fork(sess, "ivf:write:books")(books.write.parquet(s"$dir/books"))
+      // encode carries the coarse cell through the argmin, so the
+      // code table buckets like the lists WITHOUT an n×n re-join of
+      // codes to assignment
+      Scope.fork(sess, "ivf:write:codes")(writeCodes(
+        SimilarityOps.pqEncode(resid.getOrElse(cells), books, p.m, subDim,
+          carry = Seq("cell")),
+        buckets, s"$dir/codes"))
+    }
+  }
+
+  /** The newest version: one listing of `_commits`, one record parse. */
   def load(spark: SparkSession, root: String): IvfIndex = {
-    val recs = ArtifactLog.list(root)
-    require(recs.nonEmpty, s"$root has no committed index")
-    loadAt(spark, root, recs.head._1)
+    val (v, r) = ArtifactLog.latest(root, Kind)
+    index(spark, root, v, r)
   }
 
   /** Time travel: the index as of `version` — every record is a full
-    * manifest, so any retained version reads directly. Tombstoned
-    * vectors ([[delete]]) are filtered here, at the load seam, so
-    * EVERY downstream read — shortlist, ADC, cellStats/drift, retrain
-    * corpus — sees the post-delete index without per-path handling
-    * (a broadcast anti-join against the tiny tombstone set; zero plan
-    * change when no deletes are committed). */
-  def loadAt(spark: SparkSession, root: String, version: Long): IvfIndex = {
-    val r = ArtifactLog.recordAt(root, Kind, version)
+    * manifest, so any retained version reads directly. */
+  def loadAt(spark: SparkSession, root: String, version: Long): IvfIndex =
+    index(spark, root, version, ArtifactLog.recordAt(root, Kind, version))
+
+  /** The frames record `r` names. Tombstoned vectors ([[delete]]) are
+    * filtered here, at the load seam, so EVERY downstream read —
+    * shortlist, ADC, cellStats/drift, retrain corpus — sees the
+    * post-delete index without per-path handling (a broadcast
+    * anti-join against the tiny tombstone set; zero plan change when
+    * no deletes are committed). A `B` line brings the PQ layer. */
+  private def index(spark: SparkSession, root: String, version: Long,
+      r: Rec): IvfIndex = {
     val cents = broadcast(
       spark.read.parquet(s"$root/data/${r.dirsOf("C").head}"))
-    val tombs = readTombs(spark, root, r.dirsOf("T"))
+    val tombs = ArtifactLog.readTombs(spark, root, r.dirsOf("T"))
     IvfIndex(version, r.kvMap("k").toInt, r.kvMap("p").toInt, cents,
-      dropTombs(readCellDirs(spark, root, r.dirsOf("D")), tombs),
+      live(spark, root, r, "D", tombs),
       if (r.dirsOf("A").isEmpty) None
-      else Some(dropTombs(readCellDirs(spark, root, r.dirsOf("A")),
-        tombs)),
-      r.kvMap.get("ap").map(_.toInt).getOrElse(0))
+      else Some(live(spark, root, r, "A", tombs)),
+      r.kvMap.get("ap").fold(0)(_.toInt),
+      pqOf(r).map { case (p, sd) => PqLayer(p.m, sd,
+        broadcast(spark.read.parquet(s"$root/data/${r.dirsOf("B").head}")),
+        live(spark, root, r, "Q", tombs), p.residual) })
   }
 
-  /** Train and commit an IVF-PQ index: the flat layer ([[save]]'s
-    * centroids + raw-vector inverted lists — still the re-rank,
-    * retrain, and drift-monitor substrate) PLUS per-subspace PQ
-    * codebooks (`m` subspaces, ≤ `ksub` centroids each, dense ids)
-    * and the packed code table. The record carries the PQ params
-    * (`m=`, `sd=`, `ks=`) and two extra dir kinds — `B` (books), `Q`
-    * (one codes shard per ingest, parallel to the `D` cells shards) —
-    * so a flat reader's [[load]] still works on a PQ record (it
-    * ignores the extra lines) while [[loadPq]] requires them. */
-  /** `residual = true` selects RESIDUAL PQ (Jégou et al.'s IVFADC
-    * proper, FAISS `by_residual=true`): codebooks train on and codes
-    * encode x − c(cell) rather than raw x, concentrating the
-    * quantizer's budget on within-cell variation. Cost: per-(query,
-    * probed-cell) ADC tables (nprobe× more table rows, still a
-    * broadcast) and a centroid join on the encode path (broadcast, no
-    * shuffle). Measured honestly (BASELINE.md "Round-13: nprobe/recall
-    * operating grid + residual PQ"): recall@3 = 1.00 at 10×/100× like
-    * the raw path, and at the 1×
-    * toy budget (m=4, ksub=16, ~64-wide cells) residuals do NOT
-    * rescue the 0.70 dip (0.63) — the grids show that dip is
-    * SHORTLIST-PRECISION truncation (recall falls as nprobe grows at
-    * fixed L, climbs with L), so the operating knobs there are L and
-    * ksub, with by-residual the standard default at production
-    * budgets (FAISS trains IVF with residuals for exactly the
-    * within-cell-variance reason). The flag persists in the record
-    * (`res=1`); appends, retrain, and the ADC probe all dispatch on
-    * it; `s_ann_index_pq_residual` gates the arithmetic end-to-end. */
-  def savePq(root: String, corpus: DataFrame, k: Int, m: Int,
-      ksub: Int, store: CommitStore = LinkCommitStore,
-      iters: Int = 1, rowGroupBytes: Int = 0,
-      residual: Boolean = false,
-      attrs: Option[DataFrame] = None): Long = Scope {
-    TxLog.init(root)
-    // feeds coarse train + assign + PQ train + encode
-    val corp = Scope.cache(corpus)
-    val sess = corpus.sparkSession
-    // the attr sidecar's bucket sizing (a count over the attrs
-    // frame) is independent of training — overlap it with the
-    // whole train/encode chain (guide §2.6) and join at record
-    // render time
-    val apFut = attrs.map(a => Scope.fork(sess, "pq:attrs-n")(
-      defaultAttrBuckets(a.count())))
-    // one limit(1) action answers BOTH the non-empty gate and the
-    // dimension probe (was an isEmpty + a head() — two jobs)
-    val dimOpt = graft.core.labeled(sess, "pq:corp")(
-      corp.select(size(col("v"))).limit(1).collect().headOption
-        .map(_.getInt(0)))
-    require(dimOpt.isDefined,
-      "IVF-PQ save needs a non-empty training corpus (same " +
-        "no-empty-bootstrap rule as save)")
-    val dim = dimOpt.get
-    require(dim % m == 0,
-      s"vector dim $dim is not divisible by m=$m subspaces")
-    val subDim = dim / m
-    val cents = Scope.cache(SimilarityOps.ivfCentroids(corp, k, iters))
-    // NON-residual books train on the raw corpus — independent of
-    // the coarse quantizer, so the two Lloyd passes overlap
-    // (guide §2.6). Residual books need cents first (they train on
-    // x − c(cell)) and stay sequential below.
-    val booksEager =
-      if (residual) None
-      else Some(Scope.cache(SimilarityOps.pqCodebooks(corp, m, subDim,
-        ksub, iters)))
-    // the training counts ARE the non-empty gates (was a count
-    // plus a separate isEmpty job per trained frame)
-    val centsN = Scope.fork(sess, "pq:coarse-train")(cents.count())
-    val booksEagerN =
-      booksEager.map(b => Scope.fork(sess, "pq:book-train")(b.count()))
-    require(centsN() > 0,
-      "IVF-PQ training produced no centroids (the default low-id " +
-        "seeding needs corpus ids below k; pass explicit seeds " +
-        "otherwise)")
-    val dirName = UUID.randomUUID().toString
-    val buckets = defaultBuckets(k)
-    // the trained centroid frame is final here — its staging
-    // write depends on nothing below, so it overlaps the whole
-    // assign/book-train/encode chain (guide §2.6); the commit joins it
-    Scope.fork(sess, "pq:write:centroids")(
-      cents.write.parquet(s"$root/data/$dirName/centroids"))
-    // the trained-centroid assignment feeds TWO sinks (the cells
-    // table write and the PQ encode / residual path) — cache for
-    // the call's scope or the broadcast argmin pass runs twice
-    val cells = Scope.cache(SimilarityOps.ivfCells(corp, cents))
-    // residual PQ trains and encodes on x − c(cell); the residual
-    // frame feeds book training AND the encode, so it caches for
-    // the call's scope
-    val resid =
-      if (residual) Some(Scope.cache(SimilarityOps.residuals(cells, cents)))
-      else None
-    val books = booksEager.getOrElse(Scope.cache(SimilarityOps.pqCodebooks(
-      resid.getOrElse(corp), m, subDim, ksub, iters)))
-    // residual books train only here — their materializing count is
-    // the gate (the non-residual count runs in the overlapped train)
-    val booksN = booksEagerN.map(_()).getOrElse(
-      graft.core.labeled(sess, "pq:book-train")(books.count()))
-    require(booksN > 0,
-      "IVF-PQ training produced no codebooks (the default " +
-        "low-id seeding needs corpus ids below ksub; pass " +
-        "explicit seeds otherwise)")
-    // encode carries the coarse cell through the argmin, so
-    // the code table buckets like the lists WITHOUT an n×n
-    // re-join of codes to assignment
-    val codes = SimilarityOps.pqEncode(
-      resid.getOrElse(cells), books, m, subDim,
-      carry = Seq("cell"))
-    // the remaining independent staging writes to separate dirs
-    // overlap (guide §2.6) — the commit record below is written only
-    // after all of them (and the centroid write) complete, so
-    // atomicity is unchanged
-    Scope.fork(sess, "pq:write:books")(
-      books.write.parquet(s"$root/data/$dirName/books"))
-    Scope.fork(sess, "pq:write:cells")(
-      writeCells(cells, buckets, s"$root/data/$dirName/cells",
-        rowGroupBytes))
-    Scope.fork(sess, "pq:write:codes")(
-      writeCodes(codes, buckets, s"$root/data/$dirName/codes"))
-    attrs.zip(apFut).foreach { case (a, f) =>
-      Scope.fork(sess, "pq:write:attrs")(
-        writeAttrs(a, f(), s"$root/data/$dirName/attrs"))
-    }
-    val attrKv = apFut.toSeq.map(f => "ap" -> f().toString)
-    val rec = Rec(
-      Seq("k" -> k.toString, "p" -> buckets.toString,
-        "m" -> m.toString, "sd" -> subDim.toString,
-        "ks" -> ksub.toString) ++
-        (if (rowGroupBytes > 0)
-          Seq("rg" -> rowGroupBytes.toString) else Nil) ++
-        (if (residual) Seq("res" -> "1") else Nil) ++ attrKv,
-      Seq("C" -> s"$dirName/centroids", "B" -> s"$dirName/books",
-        "D" -> s"$dirName/cells", "Q" -> s"$dirName/codes") ++
-        attrs.toSeq.map(_ => "A" -> s"$dirName/attrs"))
-    val v = ArtifactLog.list(root).headOption.map(_._1).getOrElse(0L)
-    ArtifactLog.commit(root, Kind, v, rec, store)
-  }
-
-  def loadPq(spark: SparkSession, root: String): IvfPqIndex = {
-    val recs = ArtifactLog.list(root)
-    require(recs.nonEmpty, s"$root has no committed index")
-    loadPqAt(spark, root, recs.head._1)
-  }
-
-  /** Time travel for the PQ layer — mirrors [[loadAt]]. */
-  def loadPqAt(spark: SparkSession, root: String, version: Long)
-      : IvfPqIndex = {
-    val r = ArtifactLog.recordAt(root, Kind, version)
-    require(r.dirsOf("B").nonEmpty,
-      s"version $version of $root is a flat IVF record (no PQ " +
-        "layer); save with savePq, or load with load")
-    val books = broadcast(
-      spark.read.parquet(s"$root/data/${r.dirsOf("B").head}"))
-    IvfPqIndex(loadAt(spark, root, version),
-      r.kvMap("m").toInt, r.kvMap("sd").toInt, books,
-      dropTombs(readCellDirs(spark, root, r.dirsOf("Q")),
-        readTombs(spark, root, r.dirsOf("T"))),
-      residual = r.kvMap.get("res").contains("1"))
-  }
-
-  /** The shared stage→CAS→rebase tail of [[append]]/[[appendPq]]:
+  /** The shared stage→CAS→rebase tail of [[append]] and [[delete]]:
     * commit `newDirs` onto the live record, preserving or advancing
     * the replay tag, retrying through conflicts. The replay tag is
     * RE-CHECKED inside the loop against each freshly-read head — the
@@ -439,6 +385,11 @@ object IvfIndexStore {
     * committed streaming tag — erasing it would let a crash-replayed
     * stream batch double-append after any interleaved ad-hoc
     * append. */
+  /** Whether `r` already carries replay tag `tag` (or a later one) on
+    * channel `tagKey`: that batch landed, so it must not stage again. */
+  private def landed(r: Rec, tag: Option[Long], tagKey: String): Boolean =
+    tag.exists(t => r.kvMap.get(tagKey).exists(_.toLong >= t))
+
   private def casAppend(root: String, head: Rec,
       newDirs: Seq[(String, String)], tag: Option[Long],
       store: CommitStore, maxRetries: Int,
@@ -446,10 +397,7 @@ object IvfIndexStore {
     var attempt = 0
     while (true) {
       val (v, latest) = ArtifactLog.latest(root, Kind)
-      tag.foreach { t =>
-        val committed = latest.kvMap.get(tagKey).map(_.toLong)
-        if (committed.exists(_ >= t)) return v
-      }
+      if (landed(latest, tag, tagKey)) return v
       require(latest.kvMap.filterNot(kv => ArtifactLog.TagKeys(kv._1)) ==
           head.kvMap.filterNot(kv => ArtifactLog.TagKeys(kv._1)) &&
         latest.dirsOf("C") == head.dirsOf("C") &&
@@ -473,44 +421,64 @@ object IvfIndexStore {
   }
 
   /** O(increment) shard ingest: assign `inc` (quantized frame) on the
-    * FROZEN persisted centroids, stage only the increment's inverted-
-    * list rows as a new shard dir, and CAS a record appending that
-    * dir — corpus rows are never read, rewritten, or reassigned, and
-    * a conflict rebases by re-listing (the staged shard dir stays
+    * FROZEN persisted centroids — and, on a PQ head, encode it on the
+    * frozen persisted codebooks — stage only the increment's rows as
+    * one new shard (a `D` cells dir, plus a `Q` codes dir on a PQ
+    * head, under one uuid), and CAS a record appending it. Corpus
+    * lists and corpus codes are never read, rewritten, or reassigned:
+    * the reads are the k-row centroid frame and the m×ksub-row books,
+    * and a conflict rebases by re-listing (the staged shard dir stays
     * valid; only the record re-renders). Returns the new version. */
   def append(spark: SparkSession, root: String, inc: DataFrame,
       store: CommitStore = LinkCommitStore, maxRetries: Int = 10,
       tag: Option[Long] = None,
       attrs: Option[DataFrame] = None): Long = {
     val (v0, head) = ArtifactLog.latest(root, Kind)
-    require(head.dirsOf("B").isEmpty,
-      s"$root carries a PQ layer: a flat append would leave the new " +
-        "shard without code rows and ADC probes would silently miss " +
-        "it; use appendPq")
     requireAttrsMatch(head, attrs)
-    tag.foreach { t =>
-      // replay idempotence (the foreachBatch contract — see
-      // graft.streaming.EmbeddingIngestStream): a batchId at or below
-      // the committed tag already landed; do not double-append. This
-      // entry check avoids staging work on replay; the authoritative
-      // re-check is inside casAppend's loop.
-      val committed = head.kvMap.get("tag").map(_.toLong)
-      if (committed.exists(_ >= t)) return v0
-    }
-    val d = incDim(inc).getOrElse(return v0) // empty: nothing to stage
+    // replay idempotence (the foreachBatch contract — see
+    // graft.streaming.EmbeddingIngestStream): a batchId at or below
+    // the committed tag already landed; do not double-append. This
+    // entry check avoids staging work on replay; the authoritative
+    // re-check is inside casAppend's loop.
+    if (landed(head, tag, "tag")) return v0
+    val d = dimOf(inc).getOrElse(return v0) // empty: nothing to stage
     val cents = broadcast(
       spark.read.parquet(s"$root/data/${head.dirsOf("C").head}"))
-    requireDim(d, cents.select(size(col("cv"))).head().getInt(0))
-    val assigned = SimilarityOps.ivfCells(inc, cents)
-    val dirName = UUID.randomUUID().toString
-    writeCells(assigned, head.kvMap("p").toInt,
-      s"$root/data/$dirName/cells",
-      head.kvMap.get("rg").map(_.toInt).getOrElse(0))
-    attrs.foreach(a => writeAttrs(a, head.kvMap("ap").toInt,
-      s"$root/data/$dirName/attrs"))
-    casAppend(root, head, Seq("D" -> s"$dirName/cells") ++
-      attrs.toSeq.map(_ => "A" -> s"$dirName/attrs"), tag, store,
-      maxRetries)
+    val pq = pqOf(head)
+    // a PQ record carries its dimension; a flat one asks the centroids
+    requireDim(d, pq.fold(cents.select(size(col("cv"))).head().getInt(0)) {
+      case (p, sd) => p.m * sd })
+    val books = pq.map(_ => broadcast(
+      spark.read.parquet(s"$root/data/${head.dirsOf("B").head}")))
+    Scope {
+      val assigned = SimilarityOps.ivfCells(inc, cents)
+      // the code layer encodes the assignment a second time: cache it
+      // then, so the argmin runs once
+      val cells = if (pq.isEmpty) assigned else Scope.cache(assigned)
+      val dirName = UUID.randomUUID().toString
+      val buckets = head.kvMap("p").toInt
+      // independent staging writes to separate dirs — overlap them
+      // (guide §2.6); the commit joins them
+      Scope.fork(spark, "ivf:append:cells")(
+        writeCells(cells, buckets, s"$root/data/$dirName/cells",
+          rowGroup(head)))
+      pq.zip(books).foreach { case ((p, sd), b) =>
+        // a residual head (res=1) encodes the increment's RESIDUALS on
+        // the frozen books — the same frozen-structure rule as the raw
+        // path, with the broadcast centroid join supplying c(cell)
+        val encIn =
+          if (p.residual) SimilarityOps.residuals(cells, cents)
+          else cells
+        Scope.fork(spark, "ivf:append:codes")(writeCodes(
+          SimilarityOps.pqEncode(encIn, b, p.m, sd, carry = Seq("cell")),
+          buckets, s"$root/data/$dirName/codes"))
+      }
+      attrs.foreach(a => Scope.fork(spark, "ivf:append:attrs")(
+        writeAttrs(a, head.kvMap("ap").toInt,
+          s"$root/data/$dirName/attrs")))
+      casAppend(root, head, shardDirs(dirName, pq.isDefined, attrs.isDefined),
+        tag, store, maxRetries)
+    }
   }
 
   /** An attr-flagged index must ingest each shard's attribute rows
@@ -531,17 +499,17 @@ object IvfIndexStore {
         "sidecar to enable filtered search")
   }
 
-  /** The increment's vector dimension, or None when it is empty. One
-    * limit(1) job. Callers (a) no-op on None — a zero-row partitionBy
-    * write emits no schema-bearing file, so staging an empty shard
-    * would brick every later read of the dir — and (b) fail a
-    * schema-drifted shard BEFORE it stages: `DotLong.compute`
+  /** The frame's vector dimension, or None when it is empty. One
+    * limit(1) job. [[append]] (a) no-ops on None — a zero-row
+    * partitionBy write emits no schema-bearing file, so staging an
+    * empty shard would brick every later read of the dir — and (b)
+    * fails a schema-drifted shard BEFORE it stages: `DotLong.compute`
     * truncates to min(len), so a wrong-dimension increment would
     * otherwise commit silently-corrupt cells (and PQ codes) — the
-    * dimension check [[savePq]] makes at train time, made on every
+    * dimension check a PQ [[save]] makes at train time, made on every
     * ingest. */
-  private def incDim(inc: DataFrame): Option[Int] =
-    inc.select(size(col("v"))).limit(1).collect().headOption
+  private def dimOf(df: DataFrame): Option[Int] =
+    df.select(size(col("v"))).limit(1).collect().headOption
       .map(_.getInt(0))
 
   private def requireDim(d: Int, indexDim: Int): Unit =
@@ -550,66 +518,6 @@ object IvfIndexStore {
         "shard came from a different embedding schema; appending " +
         "it would corrupt the index (dot products truncate to " +
         "the shorter vector) — re-embed or re-train")
-
-  /** [[append]] for an IVF-PQ index: assign the increment on the
-    * frozen persisted centroids AND encode it on the frozen persisted
-    * codebooks, stage both as one shard (a `D` cells dir + a `Q`
-    * codes dir under one uuid), CAS-append. Still O(increment): the
-    * reads are the k-row centroid frame and the m×ksub-row books;
-    * corpus lists and corpus codes are never opened. Replay-tag
-    * semantics identical to [[append]]. */
-  def appendPq(spark: SparkSession, root: String, inc: DataFrame,
-      store: CommitStore = LinkCommitStore, maxRetries: Int = 10,
-      tag: Option[Long] = None,
-      attrs: Option[DataFrame] = None): Long = {
-    val (v0, head) = ArtifactLog.latest(root, Kind)
-    require(head.dirsOf("B").nonEmpty,
-      s"$root is a flat IVF index (no PQ layer); use append")
-    requireAttrsMatch(head, attrs)
-    tag.foreach { t =>
-      // entry fast-path; the authoritative re-check is in casAppend
-      val committed = head.kvMap.get("tag").map(_.toLong)
-      if (committed.exists(_ >= t)) return v0
-    }
-    val d = incDim(inc).getOrElse(return v0) // empty: nothing to stage
-    val cents = broadcast(
-      spark.read.parquet(s"$root/data/${head.dirsOf("C").head}"))
-    val books = broadcast(
-      spark.read.parquet(s"$root/data/${head.dirsOf("B").head}"))
-    val m = head.kvMap("m").toInt
-    val subDim = head.kvMap("sd").toInt
-    requireDim(d, m * subDim)
-    Scope {
-      // feeds BOTH the cells write and the encode path (run
-      // concurrently below): cache so the assignment argmin runs once
-      val assigned = Scope.cache(SimilarityOps.ivfCells(inc, cents))
-      // a residual head (res=1) encodes the increment's RESIDUALS on
-      // the frozen books — the same frozen-structure rule as the raw
-      // path, with the broadcast centroid join supplying c(cell)
-      val encIn =
-        if (head.kvMap.get("res").contains("1"))
-          SimilarityOps.residuals(assigned, cents)
-        else assigned
-      val codes = SimilarityOps.pqEncode(
-        encIn, books, m, subDim, carry = Seq("cell"))
-      val dirName = UUID.randomUUID().toString
-      val buckets = head.kvMap("p").toInt
-      // independent staging writes to separate dirs — overlap them
-      // (guide §2.6); the commit joins them
-      Scope.fork(spark, "ivf:appendPq:cells")(
-        writeCells(assigned, buckets, s"$root/data/$dirName/cells",
-          head.kvMap.get("rg").map(_.toInt).getOrElse(0)))
-      Scope.fork(spark, "ivf:appendPq:codes")(
-        writeCodes(codes, buckets, s"$root/data/$dirName/codes"))
-      attrs.foreach(a => Scope.fork(spark, "ivf:appendPq:attrs")(
-        writeAttrs(a, head.kvMap("ap").toInt,
-          s"$root/data/$dirName/attrs")))
-      casAppend(root, head,
-        Seq("D" -> s"$dirName/cells", "Q" -> s"$dirName/codes") ++
-          attrs.toSeq.map(_ => "A" -> s"$dirName/attrs"),
-        tag, store, maxRetries)
-    }
-  }
 
   /** Tombstone-delete vectors from the index — the takedown path a
     * 100 TB training-data index needs (the reference's package
@@ -642,11 +550,8 @@ object IvfIndexStore {
       tag: Option[Long] = None, tagKey: String = "tag"): Long = {
     require(ArtifactLog.TagKeys(tagKey), s"unknown tag channel $tagKey")
     val (v0, head) = ArtifactLog.latest(root, Kind)
-    tag.foreach { t =>
-      // entry fast-path; the authoritative re-check is in casAppend
-      val committed = head.kvMap.get(tagKey).map(_.toLong)
-      if (committed.exists(_ >= t)) return v0
-    }
+    // entry fast-path; the authoritative re-check is in casAppend
+    if (landed(head, tag, tagKey)) return v0
     val dirName = UUID.randomUUID().toString
     ids.select(col("vec_id")).distinct()
       .write.parquet(s"$root/data/$dirName/tombs")
@@ -665,7 +570,7 @@ object IvfIndexStore {
     * construction) and return the top `topK`.
     *
     * DEFAULT is NON-RESIDUAL PQ (FAISS `by_residual=false`): vectors
-    * PQ-encode RAW; [[savePq]]'s `residual = true` selects the
+    * PQ-encode RAW; [[Pq]]'s `residual = true` selects the
     * paper's by-residual encoding (per-(query, cell) lookup tables —
     * see the flag's scaladoc). Measured on this corpus
     * (BASELINE.md "Round-13: nprobe/recall operating grid + residual
@@ -691,72 +596,63 @@ object IvfIndexStore {
     *
     * Re-rank IO knobs: the In(vec_id) point fetch can only skip
     * what the storage exposes — default bucket files are one row
-    * group, so a touched bucket reads whole ([[savePq]]'s
+    * group, so a touched bucket reads whole ([[Pq]]'s
     * `rowGroupBytes` writes small row groups over the vec_id-sorted
     * layout for the stats to skip against), and Spark collapses an
     * In pushdown above `spark.sql.parquet.pushdown.inFilterThreshold`
     * (default 10) to a vacuous min/max range — deployments raise it
-    * past L×|queries| (BASELINE.md "Round-12 addendum 9b"). */
+    * past L×|queries| (BASELINE.md "Round-12 addendum 9b").
+    *
+    * Needs the index's PQ layer: a flat index fails loudly here
+    * ([[shortlist]] probes its lists). */
   /** The ADC candidate frame — (qid, nid, adc) over the probed
     * cells' packed codes, bucket-pruned — plus the probed bucket
     * set (package-private so the spec can pin the pruned code-scan
     * plan in isolation; [[adcShortlist]] composes it). */
-  private[graft] def adcCandidates(index: IvfPqIndex, queries: DataFrame,
+  private[graft] def adcCandidates(index: IvfIndex, queries: DataFrame,
       nprobe: Int,
       pred: Option[org.apache.spark.sql.Column] = None)
       : (DataFrame, Array[Int]) = {
+    val pq = index.pq.getOrElse(throw new IllegalArgumentException(
+      s"version ${index.version} is a flat IVF index (no PQ layer): " +
+        "ADC probes need an index saved with a pq; shortlist probes " +
+        "the flat lists"))
     val qprobe = Scope.cache(
-      SimilarityOps.probeCells(queries, index.flat.centroids, nprobe))
+      SimilarityOps.probeCells(queries, index.centroids, nprobe))
     val qp = qprobe.select(col("vec_id").as("qid"),
       col("cell").as("pcell"))
-    val probedBuckets = qp
-      .select(pmod(col("pcell"), lit(index.buckets.toLong)).cast("int")
-        .as("pb"))
-      .distinct().collect().map(_.getInt(0)) // ≤ P values by pigeonhole
+    // filtered IVFADC: the allowed ids semi-join the CODE scan — a
+    // failing candidate never costs an ADC table lookup, and the
+    // shortlist fills with passing candidates instead of
+    // post-filtering them away (the same in-probe-vs-post-filter
+    // recall gap BASELINE.md's round-13 "filtered vector search"
+    // section measures on the flat path, compounded here by the
+    // fixed L)
+    val (candCodes, probedBuckets) = probed(index, qp, pq.codes, pred)
     // non-residual: one m×ksub table per query. Residual: one table
     // per (query, probed cell) — the query's residual to the cell's
     // centroid is what the cell's codes quantized against — still a
     // broadcast (nprobe× the rows, bounded by |queries|×nprobe).
     val dtab = broadcast(
-      if (!index.residual)
-        SimilarityOps.pqDistTables(
-          queries, index.books, index.m, index.subDim)
+      if (!pq.residual)
+        SimilarityOps.pqDistTables(queries, pq.books, pq.m, pq.subDim)
       else
         SimilarityOps.pqDistTables(
-          SimilarityOps.residuals(qprobe, index.flat.centroids),
-          index.books, index.m, index.subDim, carry = Seq("cell"))
+          SimilarityOps.residuals(qprobe, index.centroids),
+          pq.books, pq.m, pq.subDim, carry = Seq("cell"))
           .withColumnRenamed("cell", "pcell"))
-    val probedCodes =
-      index.codes.filter(col("pb").isin(probedBuckets.toSeq: _*))
-    // filtered IVFADC: the predicate runs on the attr sidecar and
-    // the allowed ids semi-join the CODE scan — a failing candidate
-    // never costs an ADC table lookup, and the shortlist fills with
-    // passing candidates instead of post-filtering them away (the
-    // same in-probe-vs-post-filter recall gap BASELINE.md's round-13
-    // "filtered vector search" section measures on the flat path,
-    // compounded here by the fixed L)
-    val candCodes = pred match {
-      case None => probedCodes
-      case Some(p) =>
-        val at = index.flat.attrs.getOrElse(
-          throw new IllegalArgumentException(
-            "filtered adcShortlist needs an attrs sidecar: savePq " +
-              "with attrs"))
-        probedCodes.join(at.filter(p).select("vec_id"),
-          Seq("vec_id"), "left_semi")
-    }
     val base = qp
       .join(candCodes,
         col("pcell") === col("cell") && col("vec_id") =!= col("qid"))
     val cand =
-      (if (index.residual) base.join(dtab, Seq("qid", "pcell"))
+      (if (pq.residual) base.join(dtab, Seq("qid", "pcell"))
        else base.join(dtab, Seq("qid")))
         .select(col("qid"), col("vec_id").as("nid"),
           SimilarityOps.adcScore.as("adc"))
     (cand, probedBuckets)
   }
 
-  def adcShortlist(index: IvfPqIndex, queries: DataFrame, nprobe: Int,
+  def adcShortlist(index: IvfIndex, queries: DataFrame, nprobe: Int,
       shortlistL: Int, topK: Int,
       pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     val (cand, probedBuckets) =
@@ -780,7 +676,7 @@ object IvfIndexStore {
     val nids = shortPairs.map(_._2).distinct.toSeq
     // exact re-rank: |q|² + |n|² − 2⟨q,n⟩, all integers — the
     // quantizer bounds the SHORTLIST, never the answer
-    val nvecs = index.flat.cells
+    val nvecs = index.cells
       .filter(col("pb").isin(probedBuckets.toSeq: _*) &&
         col("vec_id").isin(nids: _*))
       .select(col("vec_id").as("nid"), col("v").as("nv"),
@@ -801,12 +697,6 @@ object IvfIndexStore {
     * callers' empty-batch probe). */
   def latestVersion(root: String): Long =
     ArtifactLog.latest(root, Kind)._1
-
-  /** Whether the live index carries the PQ layer — one record read,
-    * no frames; the ingest stream dispatches append vs appendPq on
-    * this so one stream definition serves both index shapes. */
-  def hasPqLayer(root: String): Boolean =
-    ArtifactLog.latest(root, Kind)._2.dirsOf("B").nonEmpty
 
   /** Per-cell occupancy — the drift monitor's read. One row per
     * TRAINED cell, `(cell, n_members)`, exact bigints; cells the
@@ -871,48 +761,36 @@ object IvfIndexStore {
   def compact(spark: SparkSession, root: String,
       store: CommitStore = LinkCommitStore): Long = {
     val (v, r) = ArtifactLog.latest(root, Kind)
-    val tombs = readTombs(spark, root, r.dirsOf("T"))
+    val tombs = ArtifactLog.readTombs(spark, root, r.dirsOf("T"))
     // tombstones fold PHYSICALLY here: the compacted lists exclude
     // deleted rows and the record drops its T lines — compact is the
     // point where a takedown stops costing a probe-time anti-join
-    val cells = dropTombs(readCellDirs(spark, root, r.dirsOf("D")),
-      tombs)
+    val cells = live(spark, root, r, "D", tombs)
     val dirName = UUID.randomUUID().toString
     // re-bucket on write: one file per bucket in the compacted (the
     // long-lived) form, preserving the record's rg layout policy
     writeCells(cells.select(col("vec_id"), col("v"), col("n2"),
         col("cell")),
-      r.kvMap("p").toInt, s"$root/data/$dirName/cells",
-      r.kvMap.get("rg").map(_.toInt).getOrElse(0))
+      r.kvMap("p").toInt, s"$root/data/$dirName/cells", rowGroup(r))
     // a PQ record's code shards fold alongside the cells shards
     // (through writeCodes, so the compacted layout can never diverge
     // from the appended one)
-    val qDir =
-      if (r.dirsOf("Q").isEmpty) Nil
-      else {
-        writeCodes(
-          dropTombs(readCellDirs(spark, root, r.dirsOf("Q")), tombs)
-            .select(col("vec_id"), col("code"), col("cell")),
-          r.kvMap("p").toInt, s"$root/data/$dirName/codes")
-        Seq("Q" -> s"$dirName/codes")
-      }
+    val codes = r.dirsOf("Q").nonEmpty
+    if (codes)
+      writeCodes(live(spark, root, r, "Q", tombs)
+          .select(col("vec_id"), col("code"), col("cell")),
+        r.kvMap("p").toInt, s"$root/data/$dirName/codes")
     // the attribute sidecar folds like the lists, with tombstoned
     // rows physically excluded — compact is also where a takedown's
     // STALE attr rows (retrain drops T lines but never rewrites the
     // sidecar) finally leave the disk
-    val aDir =
-      if (r.dirsOf("A").isEmpty) Nil
-      else {
-        writeAttrs(
-          dropTombs(readCellDirs(spark, root, r.dirsOf("A")), tombs)
-            .drop("ab"),
-          r.kvMap("ap").toInt, s"$root/data/$dirName/attrs")
-        Seq("A" -> s"$dirName/attrs")
-      }
+    val attrs = r.dirsOf("A").nonEmpty
+    if (attrs)
+      writeAttrs(live(spark, root, r, "A", tombs).drop("ab"),
+        r.kvMap("ap").toInt, s"$root/data/$dirName/attrs")
     ArtifactLog.commit(root, Kind, v,
-      Rec(r.kv,
-        r.dirs.filterNot(d => Set("D", "Q", "T", "A")(d._1)) :+
-        ("D" -> s"$dirName/cells") :++ qDir :++ aDir), store)
+      Rec(r.kv, r.dirs.filterNot(d => Set("D", "Q", "T", "A")(d._1)) ++
+        shardDirs(dirName, codes, attrs)), store)
   }
 
   /** Retrain the coarse quantizer on the CURRENT corpus and commit a
@@ -966,10 +844,10 @@ object IvfIndexStore {
     // (retraining ON deleted vectors would resurrect their influence
     // as centroid mass); the fresh record carries no T lines — the
     // retrain IS the physical fold for its generation.
-    val corpus = Scope.cache(dropTombs(
-        readCellDirs(spark, root, head.dirsOf("D")),
-        readTombs(spark, root, head.dirsOf("T")))
-      .select(col("vec_id"), col("v"), col("n2")))
+    val corpus = Scope.cache(
+      live(spark, root, head, "D",
+        ArtifactLog.readTombs(spark, root, head.dirsOf("T")))
+        .select(col("vec_id"), col("v"), col("n2")))
     // the n/64 target-cell rule, CAPPED at the k ≤ 65 536 budget
     // ivfCentroids' collect/re-broadcast cycle and the broadcast-
     // hinted centroid frame are built on (≈34 MB at 64 dims; an
@@ -983,55 +861,18 @@ object IvfIndexStore {
       if (reseed) Some(corpus.orderBy(xxhash64(col("vec_id")))
         .limit(kNew).select("vec_id", "v", "n2"))
       else None
-    val cents =
-      Scope.cache(SimilarityOps.ivfCentroids(corpus, kNew, iters, seeds))
-    require(!cents.isEmpty,
+    val dirName = UUID.randomUUID().toString
+    // a PQ head retrains its codebooks from the same corpus (and
+    // hash-sampled seeds — codebooks freeze exactly like the coarse
+    // centroids, so they drift exactly like them) and re-encodes;
+    // dropping the layer here would silently degrade the index to
+    // flat. A residual head retrains its books on residuals to the
+    // NEW centroids (books quantize within-cell variation, so they
+    // must follow the cells they are relative to).
+    val pq = pqOf(head)
+    stage(corpus, kNew, iters, seeds, pq, s"$root/data/$dirName",
       "retrain found no trainable seeds (the index is empty, or " +
         s"reseed=false with no vec_id < $kNew in the corpus)")
-    val cells = SimilarityOps.ivfCells(corpus, cents)
-    val dirName = UUID.randomUUID().toString
-    val buckets = defaultBuckets(kNew)
-    cents.write.parquet(s"$root/data/$dirName/centroids")
-    writeCells(cells, buckets, s"$root/data/$dirName/cells",
-      head.kvMap.get("rg").map(_.toInt).getOrElse(0))
-    // a PQ head retrains its codebooks from the same corpus (and
-    // the same hash-sampled seeds — codebooks freeze exactly like
-    // the coarse centroids, so they drift exactly like them) and
-    // re-encodes; dropping the layer here would silently degrade
-    // the index to flat
-    val pqDirs =
-      if (head.dirsOf("B").isEmpty) Nil
-      else {
-        val m = head.kvMap("m").toInt
-        val subDim = head.kvMap("sd").toInt
-        val ksub = head.kvMap("ks").toInt
-        val res = head.kvMap.get("res").contains("1")
-        // a residual head retrains its books on residuals to the
-        // NEW centroids (books quantize within-cell variation, so
-        // they must follow the cells they are relative to)
-        val encBase =
-          if (res) SimilarityOps.residuals(cells, cents) else corpus
-        // the books need their OWN ksub-sized hash sample: a
-        // subset of the kNew coarse seeds silently shrinks the
-        // codebooks whenever kNew < ksub (k is n/64 but ksub is
-        // a fixed quantization budget — at small corpora kNew
-        // can be far below it). Same ordering, so when
-        // kNew ≥ ksub this is exactly the old first-ksub subset.
-        val bookSeeds =
-          if (seeds.isDefined)
-            Some(encBase.orderBy(xxhash64(col("vec_id")))
-              .limit(ksub).select("vec_id", "v", "n2"))
-          else None
-        val books = Scope.cache(SimilarityOps.pqCodebooks(
-          encBase, m, subDim, ksub, iters, bookSeeds))
-        books.write.parquet(s"$root/data/$dirName/books")
-        writeCodes(
-          SimilarityOps.pqEncode(
-            if (res) encBase else cells, books, m, subDim,
-            carry = Seq("cell")),
-          buckets, s"$root/data/$dirName/codes")
-        Seq("B" -> s"$dirName/books", "Q" -> s"$dirName/codes")
-      }
     // the attribute sidecar survives retrain UNTOUCHED — it is
     // bucketed by vec_id, not cell, precisely so the coarse
     // structure can be replaced without an O(corpus) sidecar
@@ -1041,12 +882,13 @@ object IvfIndexStore {
     // so the semi-join never surfaces them) and physically
     // folded at the next compact.
     val rec = Rec(
-      Seq("k" -> kNew.toString, "p" -> buckets.toString) ++
+      Seq("k" -> kNew.toString, "p" -> defaultBuckets(kNew).toString) ++
         head.kvMap.filter(kv =>
           Set("m", "sd", "ks", "rg", "res", "ap")(kv._1)) ++
         head.kvMap.get("tag").map("tag" -> _),
-      Seq("C" -> s"$dirName/centroids") ++ pqDirs.take(1) ++
-        Seq("D" -> s"$dirName/cells") ++ pqDirs.drop(1) ++
+      Seq("C" -> s"$dirName/centroids") ++
+        pq.map(_ => "B" -> s"$dirName/books") ++
+        shardDirs(dirName, pq.isDefined, attrs = false) ++
         head.dirs.filter(_._1 == "A"))
     preCommitHook(v) // test seam: races injected between stage + CAS
     ArtifactLog.commit(root, Kind, v, rec, store)
@@ -1089,21 +931,7 @@ object IvfIndexStore {
       SimilarityOps.probeCells(queries, index.centroids, nprobe)
         .select(col("vec_id").as("qid"), col("v").as("qv"),
           col("n2").as("qn2"), col("cell").as("pcell")))
-    val probedBuckets = qp
-      .select(pmod(col("pcell"), lit(index.buckets.toLong)).cast("int")
-        .as("pb"))
-      .distinct().collect().map(_.getInt(0)) // ≤ P values by pigeonhole
-    val probedCells =
-      index.cells.filter(col("pb").isin(probedBuckets.toSeq: _*))
-    val candCells = pred match {
-      case None => probedCells
-      case Some(p) =>
-        val at = index.attrs.getOrElse(throw new IllegalArgumentException(
-          "filtered shortlist needs an attrs sidecar: save/append " +
-            "with attrs"))
-        probedCells.join(at.filter(p).select("vec_id"),
-          Seq("vec_id"), "left_semi")
-    }
+    val (candCells, _) = probed(index, qp, index.cells, pred)
     val cand = qp.join(candCells,
       col("pcell") === col("cell") && col("vec_id") =!= col("qid"))
     val pairs = cand
@@ -1120,6 +948,27 @@ object IvfIndexStore {
         col("rn"))
   }
 
+  /** `rows` — the cells or the codes — pruned to the buckets of the
+    * probed cells (`qp`'s `pcell`; the bucket set is a ≤ P-element
+    * collect by pigeonhole, returned too) and, under `pred`, semi-joined
+    * to the sidecar ids that pass it. */
+  private def probed(index: IvfIndex, qp: DataFrame, rows: DataFrame,
+      pred: Option[org.apache.spark.sql.Column]): (DataFrame, Array[Int]) = {
+    val buckets = qp
+      .select(pmod(col("pcell"), lit(index.buckets.toLong)).cast("int")
+        .as("pb"))
+      .distinct().collect().map(_.getInt(0))
+    val pruned = rows.filter(col("pb").isin(buckets.toSeq: _*))
+    (pred.fold(pruned)(p => pruned.join(
+      attrsOf(index).filter(p).select("vec_id"), Seq("vec_id"), "left_semi")),
+      buckets)
+  }
+
+  private def attrsOf(index: IvfIndex): DataFrame =
+    index.attrs.getOrElse(throw new IllegalArgumentException(
+      "filtered search and fetchAttrs need an attrs sidecar: " +
+        "save/append with attrs"))
+
   /** Bucket-pruned attribute hydration for a RESULT id set (the
     * read that turns a top-k of vec_ids into rows a consumer can
     * use): the ids' ≤ attrBuckets distinct `ab` buckets are
@@ -1131,8 +980,7 @@ object IvfIndexStore {
     * sidecar files but cannot surface here — the ids come from
     * probes over the tombstone-filtered lists. */
   def fetchAttrs(index: IvfIndex, ids: DataFrame): DataFrame = {
-    val at = index.attrs.getOrElse(throw new IllegalArgumentException(
-      "fetchAttrs needs an attrs sidecar: save/append with attrs"))
+    val at = attrsOf(index)
     val idsD = ids.select("vec_id").distinct()
     val abs = idsD
       .select(pmod(col("vec_id"), lit(index.attrBuckets.toLong))

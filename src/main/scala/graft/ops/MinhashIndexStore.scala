@@ -8,7 +8,7 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.Scope
 import graft.catalog.{CommitStore, LinkCommitStore, TxLog}
-import graft.ops.ArtifactLog.Rec
+import graft.ops.ArtifactLog.{Rec, dropTombs, readDirs, readTombs}
 
 /** The persisted MinHash/LSH dedup index — the dedup-side mirror of
   * [[IvfIndexStore]] and the artifact `d_incremental_dedup` could
@@ -77,13 +77,6 @@ object MinhashIndexStore {
   private def mkRec(p: Int, q: Int, dirs: Seq[(String, String)]): Rec =
     Rec(Seq("bands" -> "8", "rows" -> "4", "p" -> p.toString,
       "q" -> q.toString), dirs)
-
-  private def readDirs(spark: SparkSession, root: String,
-      dirs: Seq[String]): DataFrame =
-    dirs.sorted
-      .map(d => spark.read.option("basePath", s"$root/data/$d")
-        .parquet(s"$root/data/$d"))
-      .reduce(_ unionByName _)
 
   /** `partitioned = false` is the EMPTY-frame path (a from-scratch
     * streaming index saves over an empty corpus): a partitionBy write
@@ -231,10 +224,10 @@ object MinhashIndexStore {
     Seq("L" -> s"$dirName/labmem/side=q",
       "M" -> s"$dirName/labmem/side=m")
 
+  /** The newest version: one listing of `_commits`, one record parse. */
   def load(spark: SparkSession, root: String): MinhashIndex = {
-    val recs = ArtifactLog.list(root)
-    require(recs.nonEmpty, s"$root has no committed index")
-    loadAt(spark, root, recs.head._1)
+    val (v, r) = ArtifactLog.latest(root, Kind)
+    index(spark, root, v, r)
   }
 
   /** Latest committed (version, labeled?) without loading any frame
@@ -243,21 +236,6 @@ object MinhashIndexStore {
   def latestVersion(root: String): (Long, Boolean) = {
     val (v, r) = ArtifactLog.latest(root, Kind)
     (v, r.kvMap.get("lab").contains("1"))
-  }
-
-  /** Tombstone dirs: tiny unpartitioned (doc_id) tables, broadcast,
-    * anti-joined. None → no plan change anywhere. */
-  private def readTombs(spark: SparkSession, root: String,
-      dirs: Seq[String]): Option[DataFrame] =
-    if (dirs.isEmpty) None
-    else Some(dirs.sorted
-      .map(d => spark.read.parquet(s"$root/data/$d"))
-      .reduce(_ unionByName _))
-
-  private def dropTombs(df: DataFrame, tombs: Option[DataFrame])
-      : DataFrame = tombs match {
-    case Some(t) => df.join(broadcast(t), Seq("doc_id"), "left_anti")
-    case None => df
   }
 
   /** Time travel: the index as of `version` (full-manifest records —
@@ -272,8 +250,12 @@ object MinhashIndexStore {
     * max_by collapses to one row per doc. Both costs vanish exactly
     * when no delete is outstanding. */
   def loadAt(spark: SparkSession, root: String, version: Long)
-      : MinhashIndex = {
-    val r = ArtifactLog.recordAt(root, Kind, version)
+      : MinhashIndex =
+    index(spark, root, version, ArtifactLog.recordAt(root, Kind, version))
+
+  /** The frames record `r` (version `version`) names. */
+  private def index(spark: SparkSession, root: String, version: Long,
+      r: Rec): MinhashIndex = {
     val labeled = r.kvMap.get("lab").contains("1")
     val tombs = readTombs(spark, root, r.dirsOf("T"))
     val labels0 =
@@ -284,7 +266,7 @@ object MinhashIndexStore {
         // alias is a projection; partition filters push through it)
         val raw = dropTombs(
           readDirs(spark, root, r.dirsOf("L"))
-            .withColumnRenamed("b", "qb"), tombs)
+            .withColumnRenamed("b", "qb"), tombs, "doc_id")
         Some(
           if (tombs.isEmpty) raw.select("doc_id", "cid0", "qb")
           else raw.groupBy("doc_id", "qb")
@@ -292,8 +274,8 @@ object MinhashIndexStore {
             .select("doc_id", "cid0", "qb"))
       }
     MinhashIndex(version, r.kvMap("p").toInt, r.kvMap("q").toInt,
-      dropTombs(readDirs(spark, root, r.dirsOf("B")), tombs),
-      dropTombs(readDirs(spark, root, r.dirsOf("S")), tombs),
+      dropTombs(readDirs(spark, root, r.dirsOf("B")), tombs, "doc_id"),
+      dropTombs(readDirs(spark, root, r.dirsOf("S")), tombs, "doc_id"),
       labels0,
       if (labeled) Some(spark.read.parquet(
         s"$root/data/${r.dirsOf("F").head}")) else None)
@@ -371,7 +353,8 @@ object MinhashIndexStore {
     // bricks the root; and the non-empty path re-buckets to keep one
     // file per bucket (the whole point of compaction's long-lived
     // form)
-    def bands = dropTombs(readDirs(spark, root, r.dirsOf("B")), tombs)
+    def bands =
+      dropTombs(readDirs(spark, root, r.dirsOf("B")), tombs, "doc_id")
     val empty = bands.isEmpty
     // AQE-off staging ([[Scope.staged]]) only for the pure re-bucket
     // writes and the empty fwd write (ADVICE r13 / the §10b rule):
@@ -381,12 +364,12 @@ object MinhashIndexStore {
     writeBucketed(Scope.staged(bands), "pb",
       s"$root/data/$dirName/bands", empty)
     writeBucketed(Scope.staged(dropTombs(
-        readDirs(spark, root, r.dirsOf("S")), tombs)),
+        readDirs(spark, root, r.dirsOf("S")), tombs, "doc_id")),
       "qb", s"$root/data/$dirName/shingles", empty)
     val labDirs =
       if (!labeled) Nil
       else {
-        val idx = loadAt(spark, root, v) // tomb-filtered, newest-gen
+        val idx = index(spark, root, v, r) // tomb-filtered, newest-gen
         // feeds the folded write — cache (same rationale as save)
         val lab0 = Scope.cache(resolvedLabels(idx)
           .select(col("doc_id"), col("cluster_id").as("cid0")))
@@ -563,7 +546,7 @@ object MinhashIndexStore {
       val committed = head.kvMap.get("tag").map(_.toLong)
       if (committed.exists(_ >= t)) return v // replayed batch: no-op
     }
-    val idx = loadAt(spark, root, v)
+    val idx = index(spark, root, v, head)
     val (p, q) = (idx.bandBuckets, idx.shingleBuckets)
     val shardC = Scope.cache(shard)
     val (pairsRaw, probed, candBuckets) =
@@ -719,7 +702,8 @@ object MinhashIndexStore {
     val labDirs =
       if (!labeled) Nil
       else {
-        val idx = loadAt(spark, root, v) // prior tombs already filtered
+        // prior tombs already filtered
+        val idx = index(spark, root, v, head)
         val q = idx.shingleBuckets
         val fwd = Scope.cache(idx.forward.get)
         // 1. touched clusters: the deleted docs' current labels. The

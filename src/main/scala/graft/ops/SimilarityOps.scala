@@ -1183,9 +1183,10 @@ object SimilarityOps {
 
   /** The persisted IVF-PQ index, gated end-to-end through disk:
     * train coarse centroids + per-subspace PQ codebooks on the
-    * corpus, [[IvfIndexStore.savePq]] (centroids + books + raw-vector
-    * lists + packed codes, all bucketed), LOAD it back, and run the
-    * increment queries through [[IvfIndexStore.adcShortlist]] — the
+    * corpus, [[IvfIndexStore.save]] with a PQ layer (centroids +
+    * books + raw-vector lists + packed codes, all bucketed), LOAD it
+    * back, and run the increment queries through
+    * [[IvfIndexStore.adcShortlist]] — the
     * IVFADC recipe (coarse probe → bucket-pruned ADC over the ~30×
     * smaller code table → exact re-rank of the top-L against the raw
     * lists). Integer-exact end to end (squared-L2 in quantized
@@ -1196,15 +1197,16 @@ object SimilarityOps {
   val pqLifecycle = QueryDef(
     "s_ann_index_pq",
     "LLM-pipeline similarity: persisted IVF-PQ index (IVFADC probe)",
-    "savePq → load → coarse probe → ADC top-10 on packed codes → exact re-rank top-3",
+    "save(pq) → load → coarse probe → ADC top-10 on packed codes → exact re-rank top-3",
     (s, dir) => {
       val emb = Scope.cache(quantized(s, dir))
       val corpus = emb.filter(col("vec_id") % 5 =!= 0)
       val inc = emb.filter(col("vec_id") % 5 === 0)
       val kC = math.max(32L, corpus.count() / 64L).toInt
       val root = scratchRoot("pq")
-      IvfIndexStore.savePq(root, corpus, kC, m = 4, ksub = 16)
-      val idx = IvfIndexStore.loadPq(s, root)
+      IvfIndexStore.save(root, corpus, kC,
+        pq = Some(IvfIndexStore.Pq(m = 4, ksub = 16)))
+      val idx = IvfIndexStore.load(s, root)
       IvfIndexStore.adcShortlist(idx, inc, nprobe = 4,
           shortlistL = 10, topK = 3)
         .orderBy("qid", "rn")
@@ -1356,7 +1358,7 @@ object SimilarityOps {
 
   /** RESIDUAL IVF-PQ (IVFADC as published — Jégou et al. §V's
     * by-residual encoding, FAISS `by_residual=true`), gated
-    * end-to-end through disk: savePq with `residual = true` trains
+    * end-to-end through disk: a `residual = true` PQ layer trains
     * the codebooks on x − c(cell) and encodes residuals; the ADC
     * probe builds one lookup table per (query, probed cell) — the
     * query's residual to THAT cell's centroid is what the cell's
@@ -1367,7 +1369,7 @@ object SimilarityOps {
     * operating grid + residual PQ" records both encodings honestly
     * (recall@3 = 1.00 at 10×/100× either way; the 1× toy-budget dip
     * is shortlist-L-bound and residuals
-    * do not move it — see IvfIndexStore.savePq's scaladoc). All
+    * do not move it — see IvfIndexStore.Pq's scaladoc). All
     * arithmetic stays exact bigint (residual subtraction of two
     * bigint arrays), so the oracle replays the WHOLE path —
     * training-on-residuals, residual encode, per-(query,cell) tables,
@@ -1379,16 +1381,16 @@ object SimilarityOps {
   val pqResidual = QueryDef(
     "s_ann_index_pq_residual",
     "LLM-pipeline similarity: residual IVF-PQ (by-residual IVFADC)",
-    "savePq(residual) → per-(query,cell) ADC tables → exact re-rank top-3",
+    "save(pq residual) → per-(query,cell) ADC tables → exact re-rank top-3",
     (s, dir) => {
       val emb = Scope.cache(quantized(s, dir))
       val corpus = emb.filter(col("vec_id") % 5 =!= 0)
       val inc = emb.filter(col("vec_id") % 5 === 0)
       val kC = math.max(32L, corpus.count() / 64L).toInt
       val root = scratchRoot("pqres")
-      IvfIndexStore.savePq(root, corpus, kC, m = 4, ksub = 16,
-        residual = true)
-      val idx = IvfIndexStore.loadPq(s, root)
+      IvfIndexStore.save(root, corpus, kC,
+        pq = Some(IvfIndexStore.Pq(m = 4, ksub = 16, residual = true)))
+      val idx = IvfIndexStore.load(s, root)
       IvfIndexStore.adcShortlist(idx, inc, nprobe = 4,
           shortlistL = 10, topK = 3)
         .orderBy("qid", "rn")
@@ -1434,8 +1436,9 @@ object SimilarityOps {
     })
 
   /** The PQ layer's O(increment) append, gated through disk on the
-    * CODE path: savePq the corpus, [[IvfIndexStore.appendPq]] the
-    * shard (encoded on the FROZEN persisted codebooks + assigned on
+    * CODE path: save the corpus with a PQ layer,
+    * [[IvfIndexStore.append]] the shard (encoded on the FROZEN
+    * persisted codebooks + assigned on
     * the frozen coarse centroids — no retrain, no corpus read), and
     * return the loaded packed codes unpacked to (vec_id, sub, cid).
     * The oracle recomputes every vector's encode on the
@@ -1448,16 +1451,17 @@ object SimilarityOps {
   val pqCodes = QueryDef(
     "s_ann_index_pq_codes",
     "LLM-pipeline similarity: frozen-codebook PQ shard encode",
-    "appendPq encodes the shard on frozen books; loaded codes = corpus ∪ shard",
+    "append encodes the shard on frozen books; loaded codes = corpus ∪ shard",
     (s, dir) => {
       val emb = Scope.cache(quantized(s, dir))
       val corpus = emb.filter(col("vec_id") % 5 =!= 0)
       val inc = emb.filter(col("vec_id") % 5 === 0)
       val kC = math.max(32L, corpus.count() / 64L).toInt
       val root = scratchRoot("pqcodes")
-      IvfIndexStore.savePq(root, corpus, kC, m = 4, ksub = 16)
-      IvfIndexStore.appendPq(s, root, inc)
-      IvfIndexStore.loadPq(s, root).codes
+      IvfIndexStore.save(root, corpus, kC,
+        pq = Some(IvfIndexStore.Pq(m = 4, ksub = 16)))
+      IvfIndexStore.append(s, root, inc)
+      IvfIndexStore.load(s, root).pq.get.codes
         .select(col("vec_id"), posexplode(col("code")).as(Seq("sub", "c")))
         .select(col("vec_id"), col("sub"), col("c").cast("long").as("cid"))
         .orderBy("vec_id", "sub")
@@ -1547,7 +1551,7 @@ object SimilarityOps {
   val filteredPq = QueryDef(
     "s_ann_filtered_pq",
     "LLM-pipeline similarity: filtered IVFADC (PQ + attr sidecar)",
-    "savePq(attrs) -> load -> ADC with label%2=0 semi-joined below the code scan -> re-rank",
+    "save(pq, attrs) -> load -> ADC with label%2=0 semi-joined below the code scan -> re-rank",
     (s, dir) => {
       val emb = Scope.cache(quantized(s, dir))
       val attrs = t(s, dir, "embeddings")
@@ -1556,9 +1560,10 @@ object SimilarityOps {
       val inc = emb.filter(col("vec_id") % 5 === 0)
       val kC = math.max(32L, corpus.count() / 64L).toInt
       val root = scratchRoot("filteredpq")
-      IvfIndexStore.savePq(root, corpus, kC, m = 4, ksub = 16,
-        attrs = Some(attrs.join(corpus.select("vec_id"), Seq("vec_id"))))
-      val idx = IvfIndexStore.loadPq(s, root)
+      IvfIndexStore.save(root, corpus, kC,
+        attrs = Some(attrs.join(corpus.select("vec_id"), Seq("vec_id"))),
+        pq = Some(IvfIndexStore.Pq(m = 4, ksub = 16)))
+      val idx = IvfIndexStore.load(s, root)
       IvfIndexStore.adcShortlist(idx, inc, nprobe = 4,
           shortlistL = 10, topK = 3,
           pred = Some(col("label") % 2 === 0))

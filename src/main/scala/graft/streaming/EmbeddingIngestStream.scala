@@ -25,23 +25,16 @@ import graft.ops.{IvfIndexStore, SimilarityOps}
 object EmbeddingIngestStream {
 
   /** One micro-batch: quantize and append. Empty batches are skipped
-    * (naturally idempotent). Dispatches on the LIVE index's shape —
-    * a PQ head ([[IvfIndexStore.hasPqLayer]]) routes through
-    * [[IvfIndexStore.appendPq]] so the shard lands with its code
-    * rows (a flat append against a PQ index throws rather than
-    * stranding a code-less shard ADC would silently miss). Returns
-    * the committed (or, on replay, already-committed) version. */
+    * (naturally idempotent). [[IvfIndexStore.append]] reads the live
+    * index's shape from its record, so on a PQ head the shard lands
+    * with its code rows. Returns the committed (or, on replay,
+    * already-committed) version. */
   def processBatch(root: String, batch: DataFrame, batchId: Long): Long =
     if (batch.isEmpty) IvfIndexStore.latestVersion(root)
     else Scope {
-      val inc = SimilarityOps.quantizeEmbeddings(
-        batch.select("vec_id", "embedding"))
-      if (IvfIndexStore.hasPqLayer(root))
-        IvfIndexStore.appendPq(batch.sparkSession, root, inc,
-          tag = Some(batchId))
-      else
-        IvfIndexStore.append(batch.sparkSession, root, inc,
-          tag = Some(batchId))
+      IvfIndexStore.append(batch.sparkSession, root,
+        SimilarityOps.quantizeEmbeddings(batch.select("vec_id", "embedding")),
+        tag = Some(batchId))
     }
 
   /** Wire a streaming (vec_id, embedding) frame into the saved index

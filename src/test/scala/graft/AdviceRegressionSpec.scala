@@ -145,11 +145,14 @@ class AdviceRegressionSpec extends SparkTestBase {
   test("ADVICE r10: a releaseCaches() from another thread must not " +
       "unpersist this thread's in-flight ANN frames (per-thread " +
       "registries)") {
-    // build the ANN clustering plan on THIS thread — it registers
-    // localCheckpointed intermediates whose lineage is truncated, so
-    // an unpersist from anywhere makes the consuming action throw
-    // (BlockNotFound) instead of recomputing
-    val df = graft.Registry.byName("s_knn_clusters_ann")
+    // build the ANN recall plan on THIS thread — its output reads
+    // cached edge frames over localCheckpointed intermediates whose
+    // lineage is truncated, so an unpersist from anywhere makes the
+    // consuming action throw (BlockNotFound) instead of recomputing.
+    // (s_knn_clusters_ann cannot pin this: ConnectedComponents' local
+    // path hands back a driver-local frame that outlives its
+    // checkpoints.)
+    val df = graft.Registry.byName("s_knn_ann_recall")
       .run(spark, "/root/testdata/sf0.001")
     // a concurrent caller (an always-on stream's own query release)
     // finishing ITS query must release only its own registrations

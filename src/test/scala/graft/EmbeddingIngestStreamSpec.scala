@@ -124,7 +124,8 @@ class EmbeddingIngestStreamSpec extends SparkTestBase {
       "a replay is still a no-op") {
     val corpus = emb.filter(col("vec_id") % 5 =!= 0)
     val root = Files.createTempDirectory("emb_pq_stream").toString
-    IvfIndexStore.savePq(root, corpus, 32, m = 4, ksub = 16)
+    IvfIndexStore.save(root, corpus, 32,
+      pq = Some(IvfIndexStore.Pq(m = 4, ksub = 16)))
 
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[IngestVec]
@@ -138,7 +139,7 @@ class EmbeddingIngestStreamSpec extends SparkTestBase {
       q.processAllAvailable()
     } finally q.stop()
 
-    val idx = IvfIndexStore.loadPq(spark, root)
+    val idx = IvfIndexStore.load(spark, root).pq.get
     // every ingested vector carries a code — the shards were NOT
     // stranded flat — and the codes equal the frozen-book encode
     assert(idx.codes.count() == emb.count())
@@ -162,7 +163,8 @@ class EmbeddingIngestStreamSpec extends SparkTestBase {
       "the conflict PROPAGATES, the retry succeeds, no vector lost") {
     val corpus = emb.filter(col("vec_id") % 5 =!= 0)
     val root = Files.createTempDirectory("emb_race").toString
-    IvfIndexStore.savePq(root, corpus, 32, m = 4, ksub = 16)
+    IvfIndexStore.save(root, corpus, 32,
+      pq = Some(IvfIndexStore.Pq(m = 4, ksub = 16)))
 
     // the drifted regime from the monitor test — drives needsRetrain
     def driftedBatch(off: Long): Seq[IngestVec] =
@@ -194,19 +196,19 @@ class EmbeddingIngestStreamSpec extends SparkTestBase {
       }
       assert(e != null)
       // nothing lost: the interleaved batch's vectors are committed
-      val between = IvfIndexStore.loadPq(spark, root)
+      val between = IvfIndexStore.load(spark, root).pq.get
       assert(between.codes.filter(col("vec_id") >= 20000L).count() ==
         late.size)
 
       // the retry trains on the post-append corpus and succeeds
       IvfIndexStore.retrain(spark, root)
-      val idx = IvfIndexStore.loadPq(spark, root)
+      val idx = IvfIndexStore.load(spark, root)
       val total = corpus.count() + 2 * late.size
-      assert(idx.flat.cells.count() == total,
+      assert(idx.cells.count() == total,
         "no vector may be lost across the raced retrain")
-      assert(idx.codes.count() == total,
+      assert(idx.pq.get.codes.count() == total,
         "the PQ layer must survive the retrain with every code")
-      assert(idx.flat.k ==
+      assert(idx.k ==
         math.max(32L, total / 64L).toInt)
 
       // the stream's OWN batch 1 now replays as a no-op (the injected
@@ -216,7 +218,7 @@ class EmbeddingIngestStreamSpec extends SparkTestBase {
         late.toDF(), 1L) == IvfIndexStore.latestVersion(root))
       EmbeddingIngestStream.processBatch(root,
         driftedBatch(30000L).toDF(), 2L)
-      assert(IvfIndexStore.loadPq(spark, root).flat.cells.count() ==
+      assert(IvfIndexStore.load(spark, root).cells.count() ==
         total + late.size)
     } finally q.stop()
     SimilarityOps.releaseCaches()

@@ -151,9 +151,9 @@ class FilteredAnnSpec extends SparkTestBase {
   test("filtered ADC shortlist equals the manually code-filtered " +
       "probe (and refuses a sidecar-less PQ index)") {
     val root = freshRoot("fpq")
-    IvfIndexStore.savePq(root, corpus, 32, m = 4, ksub = 16,
-      attrs = Some(corpusAttrs))
-    val idx = IvfIndexStore.loadPq(spark, root)
+    IvfIndexStore.save(root, corpus, 32, attrs = Some(corpusAttrs),
+      pq = Some(IvfIndexStore.Pq(m = 4, ksub = 16)))
+    val idx = IvfIndexStore.load(spark, root)
     def adcRows(df: org.apache.spark.sql.DataFrame) =
       df.select("qid", "nid", "d2", "rn").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -165,8 +165,8 @@ class FilteredAnnSpec extends SparkTestBase {
     // to the code table directly, probed without a predicate
     val allowed = corpusAttrs.filter(col("label") % 2 === 0)
       .select("vec_id")
-    val expIdx = idx.copy(codes =
-      idx.codes.join(allowed, Seq("vec_id"), "left_semi"))
+    val expIdx = idx.copy(pq = idx.pq.map(l => l.copy(codes =
+      l.codes.join(allowed, Seq("vec_id"), "left_semi"))))
     val exp = adcRows(IvfIndexStore.adcShortlist(expIdx, inc,
       nprobe = 4, shortlistL = 10, topK = 3))
     assert(got == exp && got.nonEmpty)
@@ -177,8 +177,9 @@ class FilteredAnnSpec extends SparkTestBase {
     SimilarityOps.releaseCaches()
 
     val bare = freshRoot("fpq_bare")
-    IvfIndexStore.savePq(bare, corpus, 32, m = 4, ksub = 16)
-    val bareIdx = IvfIndexStore.loadPq(spark, bare)
+    IvfIndexStore.save(bare, corpus, 32,
+      pq = Some(IvfIndexStore.Pq(m = 4, ksub = 16)))
+    val bareIdx = IvfIndexStore.load(spark, bare)
     intercept[IllegalArgumentException] {
       IvfIndexStore.adcShortlist(bareIdx, inc, nprobe = 4,
         shortlistL = 10, topK = 3, pred = Some(col("label") === 1))

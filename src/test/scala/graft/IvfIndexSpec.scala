@@ -427,8 +427,9 @@ class IvfIndexSpec extends SparkTestBase {
   test("delete on a PQ index filters codes and cells alike; replay " +
       "tag and rebase-through-append hold") {
     val root = freshRoot("deletepq")
-    IvfIndexStore.savePq(root, corpus, 32, m = 4, ksub = 16)
-    IvfIndexStore.appendPq(spark, root, inc)
+    IvfIndexStore.save(root, corpus, 32,
+      pq = Some(IvfIndexStore.Pq(m = 4, ksub = 16)))
+    IvfIndexStore.append(spark, root, inc)
     val v3 = IvfIndexStore.delete(spark, root,
       emb.filter(col("vec_id") % 7 === 0).select("vec_id"),
       tag = Some(9L))
@@ -436,10 +437,11 @@ class IvfIndexSpec extends SparkTestBase {
     assert(IvfIndexStore.delete(spark, root,
       emb.filter(col("vec_id") % 7 === 0).select("vec_id"),
       tag = Some(9L)) == v3)
-    val idx = IvfIndexStore.loadPq(spark, root)
-    assert(idx.codes.filter(col("vec_id") % 7 === 0).count() == 0)
-    assert(idx.flat.cells.filter(col("vec_id") % 7 === 0).count() == 0)
-    assert(idx.codes.count() == idx.flat.cells.count())
+    val idx = IvfIndexStore.load(spark, root)
+    val codes = idx.pq.get.codes
+    assert(codes.filter(col("vec_id") % 7 === 0).count() == 0)
+    assert(idx.cells.filter(col("vec_id") % 7 === 0).count() == 0)
+    assert(codes.count() == idx.cells.count())
     // ADC probe over the post-delete index never surfaces deleted ids
     // (deterministic id filter — a limit() here evaluates per-branch
     // inside adcShortlist and can pick disjoint rows, emptying joins)
@@ -487,16 +489,57 @@ class IvfIndexSpec extends SparkTestBase {
     assert(IvfIndexStore.latestVersion(root) == 1L)
     // same guard on the PQ path (m × subDim from the record)
     val rootPq = freshRoot("dimcheckpq")
-    IvfIndexStore.savePq(rootPq, corpus, 32, m = 4, ksub = 16)
+    IvfIndexStore.save(rootPq, corpus, 32,
+      pq = Some(IvfIndexStore.Pq(m = 4, ksub = 16)))
     val e2 = intercept[IllegalArgumentException](
-      IvfIndexStore.appendPq(spark, rootPq, drifted))
+      IvfIndexStore.append(spark, rootPq, drifted))
     assert(e2.getMessage.contains("dim"))
     // an empty increment is a NO-OP on both paths (staging it would
     // write a schema-less partitionBy dir and brick later loads)
     assert(IvfIndexStore.append(spark, root, corpus.limit(0)) == 1L)
-    assert(IvfIndexStore.appendPq(spark, rootPq, corpus.limit(0)) == 1L)
+    assert(IvfIndexStore.append(spark, rootPq, corpus.limit(0)) == 1L)
     assert(IvfIndexStore.load(spark, root).cells.count() ==
       corpus.count())
+  }
+
+  test("record text is pinned: save and append of flat, attr-flagged " +
+      "and PQ indexes write the same header keys and dir tags as " +
+      "ever, so older roots keep loading") {
+    val attrs = emb.select(col("vec_id"), (col("vec_id") % 3).as("label"))
+    def attrsOf(df: DataFrame) =
+      Some(attrs.join(df.select("vec_id"), Seq("vec_id")))
+    val uuid = "[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}".r
+    def rec(root: String, v: Long): Seq[String] =
+      uuid.replaceAllIn(Files.readString(
+        Paths.get(root, "_commits", f"v$v%020d")).trim, "U").linesIterator.toSeq
+    def check(tag: String, withAttrs: Boolean,
+        pq: Option[IvfIndexStore.Pq], v1: Seq[String], v2: Seq[String]) = {
+      val root = freshRoot(s"rec_$tag")
+      IvfIndexStore.save(root, corpus, 32,
+        attrs = if (withAttrs) attrsOf(corpus) else None, pq = pq)
+      assert(rec(root, 1L) == v1, tag)
+      IvfIndexStore.append(spark, root, inc, tag = Some(3L),
+        attrs = if (withAttrs) attrsOf(inc) else None)
+      assert(rec(root, 2L) == v2, tag)
+    }
+    val (c, b, d, q, a) = ("C\tU/centroids", "B\tU/books", "D\tU/cells",
+      "Q\tU/codes", "A\tU/attrs")
+    check("flat", false, None,
+      Seq("#ivf k=32 p=8", c, d),
+      Seq("#ivf k=32 p=8 tag=3", c, d, d))
+    check("attrs", true, None,
+      Seq("#ivf k=32 p=8 ap=8", c, d, a),
+      Seq("#ivf k=32 p=8 ap=8 tag=3", c, d, a, d, a))
+    check("pq", false, Some(IvfIndexStore.Pq(m = 4, ksub = 16)),
+      Seq("#ivf k=32 p=8 m=4 sd=16 ks=16", c, b, d, q),
+      Seq("#ivf k=32 p=8 m=4 sd=16 ks=16 tag=3", c, b, d, q, d, q))
+    check("pq_all", true, Some(IvfIndexStore.Pq(m = 4, ksub = 16,
+        residual = true, rowGroupBytes = 16384)),
+      Seq("#ivf k=32 p=8 m=4 sd=16 ks=16 rg=16384 res=1 ap=8",
+        c, b, d, q, a),
+      Seq("#ivf k=32 p=8 m=4 sd=16 ks=16 rg=16384 res=1 ap=8 tag=3",
+        c, b, d, q, a, d, q, a))
+    SimilarityOps.releaseCaches()
   }
 
   test("a catalog reader pointed at an index root fails loudly " +

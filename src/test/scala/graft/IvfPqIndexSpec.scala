@@ -6,13 +6,14 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.{IvfIndexStore, SimilarityOps}
+import graft.ops.IvfIndexStore.Pq
 
 /** The PQ layer of the persisted IVF index
-  * ([[graft.ops.IvfIndexStore.savePq]] and friends): save/load
+  * ([[graft.ops.IvfIndexStore.save]] with a `pq`): save/load
   * exactness of the dense codebooks + packed codes, O(increment)
   * frozen-codebook appends, the IVFADC probe's bucket pruning on the
   * CODE scan, compaction of code shards, PQ-preserving retrain, and
-  * the flat/PQ cross-call guards. Arithmetic correctness end-to-end
+  * the ADC probe's refusal of a flat index. Arithmetic correctness end-to-end
   * is gated by the DuckDB oracles (`s_ann_index_pq`,
   * `s_ann_index_pq_codes`); these tests pin the artifact mechanics. */
 class IvfPqIndexSpec extends SparkTestBase {
@@ -28,6 +29,12 @@ class IvfPqIndexSpec extends SparkTestBase {
   private val SubDim = 16
   private val Ksub = 16
 
+  /** The PQ layer of the latest (or `version`) index at `root`. */
+  private def pq(root: String, version: Option[Long] = None)
+      : IvfIndexStore.PqLayer =
+    version.fold(IvfIndexStore.load(spark, root))(
+      IvfIndexStore.loadAt(spark, root, _)).pq.get
+
   private def codeRows(df: DataFrame): Set[(Long, Vector[Int])] =
     df.select("vec_id", "code").collect()
       .map(r => (r.getLong(0), r.getSeq[Int](1).toVector)).toSet
@@ -40,10 +47,11 @@ class IvfPqIndexSpec extends SparkTestBase {
   test("savePq → loadPq roundtrips books and codes bit-for-bit " +
       "against the in-memory recompute; dense ids are contiguous") {
     val root = freshRoot("roundtrip")
-    val v = IvfIndexStore.savePq(root, corpus, 32, M, Ksub)
+    val v = IvfIndexStore.save(root, corpus, 32, pq = Some(Pq(M, Ksub)))
     assert(v == 1L)
-    val idx = IvfIndexStore.loadPq(spark, root)
-    assert(idx.m == M && idx.subDim == SubDim && idx.version == 1L)
+    val flat = IvfIndexStore.load(spark, root)
+    val idx = flat.pq.get
+    assert(idx.m == M && idx.subDim == SubDim && flat.version == 1L)
 
     val memBooks = SimilarityOps.pqCodebooks(corpus, M, SubDim, Ksub)
     assert(bookRows(idx.books) == bookRows(memBooks))
@@ -59,18 +67,18 @@ class IvfPqIndexSpec extends SparkTestBase {
       }
     // the flat layer underneath is the ordinary IVF-Flat index
     val cents = SimilarityOps.ivfCentroids(corpus, 32)
-    assert(idx.flat.cells.count() == corpus.count())
-    assert(idx.flat.centroids.count() == cents.count())
+    assert(flat.cells.count() == corpus.count())
+    assert(flat.centroids.count() == cents.count())
   }
 
   test("appendPq is O(increment): frozen books + centroids, one new " +
       "shard dir carrying only increment cells AND codes") {
     val root = freshRoot("append")
-    IvfIndexStore.savePq(root, corpus, 32, M, Ksub)
-    val v1 = IvfIndexStore.loadPq(spark, root)
-    val v2 = IvfIndexStore.appendPq(spark, root, inc)
+    IvfIndexStore.save(root, corpus, 32, pq = Some(Pq(M, Ksub)))
+    val v1 = pq(root)
+    val v2 = IvfIndexStore.append(spark, root, inc)
     assert(v2 == 2L)
-    val idx2 = IvfIndexStore.loadPqAt(spark, root, v2)
+    val idx2 = pq(root, Some(v2))
 
     // books byte-identical across the append
     assert(bookRows(v1.books) == bookRows(idx2.books))
@@ -97,30 +105,36 @@ class IvfPqIndexSpec extends SparkTestBase {
       .count() == inc.count())
   }
 
-  test("a flat append on a PQ head throws (codes would silently go " +
-      "missing); appendPq on a flat head throws") {
-    val rootPq = freshRoot("guard_pq")
-    IvfIndexStore.savePq(rootPq, corpus, 32, M, Ksub)
-    val e1 = intercept[IllegalArgumentException](
-      IvfIndexStore.append(spark, rootPq, inc))
-    assert(e1.getMessage.contains("appendPq"))
+  test("append on a PQ head commits a D and a Q dir under one uuid, " +
+      "codes = the frozen-book encode; an ADC probe on a flat index " +
+      "fails loudly") {
+    val root = freshRoot("onepath")
+    IvfIndexStore.save(root, corpus, 32, pq = Some(Pq(M, Ksub)))
+    val books = pq(root).books
+    val v2 = IvfIndexStore.append(spark, root, inc)
+    val rec = Files.readString(
+      Paths.get(root, "_commits", f"v$v2%020d")).trim
+    val added = rec.linesIterator.drop(1).toSeq.drop(4) // C B D Q of v1
+    assert(added.map(_.takeWhile(_ != '\t')) == Seq("D", "Q"), rec)
+    val uuids = added.map(_.split("\t")(1).split("/")(0)).distinct
+    assert(uuids.size == 1, s"one uuid per shard: $added")
+    val shard = spark.read.parquet(s"$root/data/${uuids.head}/codes")
+    assert(codeRows(shard) ==
+      codeRows(SimilarityOps.pqEncode(inc, books, M, SubDim)))
 
     val rootFlat = freshRoot("guard_flat")
     IvfIndexStore.save(rootFlat, corpus, 32)
-    val e2 = intercept[IllegalArgumentException](
-      IvfIndexStore.appendPq(spark, rootFlat, inc))
-    assert(e2.getMessage.contains("flat IVF"))
-
-    val e3 = intercept[IllegalArgumentException](
-      IvfIndexStore.loadPq(spark, rootFlat))
-    assert(e3.getMessage.contains("no PQ layer"))
+    val e = intercept[IllegalArgumentException](
+      IvfIndexStore.adcShortlist(IvfIndexStore.load(spark, rootFlat),
+        inc, nprobe = 4, shortlistL = 10, topK = 3))
+    assert(e.getMessage.contains("no PQ layer"))
   }
 
   test("the ADC probe partition-prunes the code scan (never reading " +
       "vectors) and the re-rank reads vectors as pushed id lookups") {
     val root = freshRoot("prune")
-    IvfIndexStore.savePq(root, corpus, 32, M, Ksub)
-    val idx = IvfIndexStore.loadPq(spark, root)
+    IvfIndexStore.save(root, corpus, 32, pq = Some(Pq(M, Ksub)))
+    val idx = IvfIndexStore.load(spark, root)
     val q = inc.filter(col("vec_id") === 5L)
     // the candidate stage: codes scan bucket-pruned, and its
     // ReadSchema carries the packed code — never the raw vectors
@@ -153,9 +167,9 @@ class IvfPqIndexSpec extends SparkTestBase {
   test("adcShortlist through disk equals the same IVFADC plan on " +
       "in-memory frames") {
     val root = freshRoot("equiv")
-    IvfIndexStore.savePq(root, corpus, 32, M, Ksub)
+    IvfIndexStore.save(root, corpus, 32, pq = Some(Pq(M, Ksub)))
     val got = IvfIndexStore.adcShortlist(
-        IvfIndexStore.loadPq(spark, root), inc,
+        IvfIndexStore.load(spark, root), inc,
         nprobe = 4, shortlistL = 10, topK = 3)
       .collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
@@ -167,9 +181,8 @@ class IvfPqIndexSpec extends SparkTestBase {
     val codes = SimilarityOps.pqEncode(cells, books, M, SubDim,
         carry = Seq("cell"))
       .withColumn("pb", pmod(col("cell"), lit(8L)).cast("int"))
-    val mem = IvfIndexStore.IvfPqIndex(
-      IvfIndexStore.IvfIndex(1L, 32, 8, broadcast(cents), cells),
-      M, SubDim, broadcast(books), codes)
+    val mem = IvfIndexStore.IvfIndex(1L, 32, 8, broadcast(cents), cells,
+      pq = Some(IvfIndexStore.PqLayer(M, SubDim, broadcast(books), codes)))
     val want = IvfIndexStore.adcShortlist(mem, inc,
         nprobe = 4, shortlistL = 10, topK = 3)
       .collect().map(r =>
@@ -181,13 +194,13 @@ class IvfPqIndexSpec extends SparkTestBase {
   test("compact folds cells AND code shards to one dir each with " +
       "identical content") {
     val root = freshRoot("compact")
-    IvfIndexStore.savePq(root, corpus, 32, M, Ksub)
-    IvfIndexStore.appendPq(spark, root, inc)
-    val before = codeRows(IvfIndexStore.loadPq(spark, root).codes)
+    IvfIndexStore.save(root, corpus, 32, pq = Some(Pq(M, Ksub)))
+    IvfIndexStore.append(spark, root, inc)
+    val before = codeRows(pq(root).codes)
     val v3 = IvfIndexStore.compact(spark, root)
-    val after = IvfIndexStore.loadPq(spark, root)
-    assert(codeRows(after.codes) == before)
-    assert(after.flat.cells.count() == emb.count())
+    val after = IvfIndexStore.load(spark, root)
+    assert(codeRows(after.pq.get.codes) == before)
+    assert(after.cells.count() == emb.count())
     val rec = Files.readString(
       Paths.get(root, "_commits", f"v$v3%020d")).trim
     assert(rec.linesIterator.count(_.startsWith("D\t")) == 1)
@@ -197,23 +210,23 @@ class IvfPqIndexSpec extends SparkTestBase {
   test("rowGroupBytes is a persisted layout policy: the record " +
       "carries rg, appendPq inherits it, and content is unchanged") {
     val root = freshRoot("rg")
-    IvfIndexStore.savePq(root, corpus, 32, M, Ksub,
-      rowGroupBytes = 16 * 1024)
+    IvfIndexStore.save(root, corpus, 32,
+      pq = Some(Pq(M, Ksub, rowGroupBytes = 16 * 1024)))
     val rec1 = Files.readString(Paths.get(root, "_commits",
       f"v${1L}%020d")).trim
     assert(rec1.contains("rg=16384"), rec1)
-    IvfIndexStore.appendPq(spark, root, inc)
+    IvfIndexStore.append(spark, root, inc)
     val rec2 = Files.readString(Paths.get(root, "_commits",
       f"v${2L}%020d")).trim
     assert(rec2.contains("rg=16384"), rec2)
     // content identical to the default-layout twin
     val defRoot = freshRoot("rg_default")
-    IvfIndexStore.savePq(defRoot, corpus, 32, M, Ksub)
-    IvfIndexStore.appendPq(spark, defRoot, inc)
-    val a = IvfIndexStore.loadPq(spark, root)
-    val b = IvfIndexStore.loadPq(spark, defRoot)
-    assert(codeRows(a.codes) == codeRows(b.codes))
-    assert(a.flat.cells.count() == b.flat.cells.count())
+    IvfIndexStore.save(defRoot, corpus, 32, pq = Some(Pq(M, Ksub)))
+    IvfIndexStore.append(spark, defRoot, inc)
+    val a = IvfIndexStore.load(spark, root)
+    val b = IvfIndexStore.load(spark, defRoot)
+    assert(codeRows(a.pq.get.codes) == codeRows(b.pq.get.codes))
+    assert(a.cells.count() == b.cells.count())
     // and the small-row-group files really carry more groups: more
     // (or equal) files is not the claim — same file count, so assert
     // via total size parity (content equal) + the probe measures IO
@@ -228,7 +241,7 @@ class IvfPqIndexSpec extends SparkTestBase {
       "the loser returns the winner's version instead of " +
       "double-appending the batch's shard") {
     val root = freshRoot("tagrace")
-    IvfIndexStore.savePq(root, corpus, 32, M, Ksub)
+    IvfIndexStore.save(root, corpus, 32, pq = Some(Pq(M, Ksub)))
     val shardA = inc.filter(col("vec_id") % 10 === 0)
     val shardB = inc.filter(col("vec_id") % 10 =!= 0)
     // zombie-driver shape: both writers replay STREAM BATCH 7; the
@@ -239,11 +252,11 @@ class IvfPqIndexSpec extends SparkTestBase {
       def putIfAbsent(target: java.nio.file.Path,
           content: String): Boolean = {
         if (fired.compareAndSet(false, true))
-          IvfIndexStore.appendPq(spark, root, shardB, tag = Some(7L))
+          IvfIndexStore.append(spark, root, shardB, tag = Some(7L))
         graft.catalog.LinkCommitStore.putIfAbsent(target, content)
       }
     }
-    val v = IvfIndexStore.appendPq(spark, root, shardA, racing,
+    val v = IvfIndexStore.append(spark, root, shardA, racing,
       tag = Some(7L))
     assert(v == 2L, s"loser must return the winner's version, got $v")
     assert(IvfIndexStore.latestVersion(root) == 2L,
@@ -251,20 +264,19 @@ class IvfPqIndexSpec extends SparkTestBase {
     // only the winner's shard landed; the loser's batch is NOT
     // duplicated (its vectors arrive when the stream re-runs the
     // NEXT batch — exactly the crash-replay contract)
-    val idx = IvfIndexStore.loadPq(spark, root)
-    assert(idx.codes.count() == corpus.count() + shardB.count())
+    assert(pq(root).codes.count() == corpus.count() + shardB.count())
     SimilarityOps.releaseCaches()
   }
 
   test("retrain keeps the ksub codebook budget when the re-sized " +
       "coarse k falls below it (books get their own hash sample)") {
     val root = freshRoot("ksmall")
-    IvfIndexStore.savePq(root, corpus, 32, M, Ksub)
-    IvfIndexStore.appendPq(spark, root, inc)
+    IvfIndexStore.save(root, corpus, 32, pq = Some(Pq(M, Ksub)))
+    IvfIndexStore.append(spark, root, inc)
     // force kNew=8 < ksub=16: the books must still train from a
     // 16-seed sample, not a truncated 8-seed one
     val v3 = IvfIndexStore.retrain(spark, root, k = Some(8))
-    val idx = IvfIndexStore.loadPqAt(spark, root, v3)
+    val idx = pq(root, Some(v3))
     val bookSeeds = emb.orderBy(xxhash64(col("vec_id"))).limit(Ksub)
       .select("vec_id", "v", "n2")
     val memBooks = SimilarityOps.pqCodebooks(emb, M, SubDim, Ksub, 1,
@@ -279,10 +291,10 @@ class IvfPqIndexSpec extends SparkTestBase {
       "hash-sampled seeds and re-encodes — the layer survives, " +
       "params and replay tag intact") {
     val root = freshRoot("retrain")
-    IvfIndexStore.savePq(root, corpus, 32, M, Ksub)
-    IvfIndexStore.appendPq(spark, root, inc, tag = Some(3L))
+    IvfIndexStore.save(root, corpus, 32, pq = Some(Pq(M, Ksub)))
+    IvfIndexStore.append(spark, root, inc, tag = Some(3L))
     val v3 = IvfIndexStore.retrain(spark, root)
-    val idx = IvfIndexStore.loadPqAt(spark, root, v3)
+    val idx = pq(root, Some(v3))
     assert(idx.m == M && idx.subDim == SubDim)
 
     val kNew = math.max(32L, emb.count() / 64L).toInt
@@ -294,15 +306,15 @@ class IvfPqIndexSpec extends SparkTestBase {
     assert(codeRows(idx.codes) ==
       codeRows(SimilarityOps.pqEncode(emb, memBooks, M, SubDim)))
     // replay of batch 3 still no-ops after the retrain
-    assert(IvfIndexStore.appendPq(spark, root, inc, tag = Some(3L)) == v3)
+    assert(IvfIndexStore.append(spark, root, inc, tag = Some(3L)) == v3)
     // post-retrain appends encode on the NEW books
     val off = emb.agg(max("vec_id")).head().getLong(0) + 1
     val shard = inc.select((col("vec_id") + lit(off)).as("vec_id"),
       col("v"), col("n2"))
-    val v4 = IvfIndexStore.appendPq(spark, root, shard)
+    val v4 = IvfIndexStore.append(spark, root, shard)
     val expected = codeRows(
       SimilarityOps.pqEncode(shard, idx.books, M, SubDim))
-    assert(codeRows(IvfIndexStore.loadPqAt(spark, root, v4).codes
+    assert(codeRows(pq(root, Some(v4)).codes
       .filter(col("vec_id") >= off)) == expected)
   }
 
@@ -310,8 +322,10 @@ class IvfPqIndexSpec extends SparkTestBase {
       "in-memory residual recompute, appends encode increment " +
       "residuals on frozen books, retrain re-anchors to new centroids") {
     val root = freshRoot("residual")
-    IvfIndexStore.savePq(root, corpus, 32, M, Ksub, residual = true)
-    val idx = IvfIndexStore.loadPq(spark, root)
+    IvfIndexStore.save(root, corpus, 32,
+      pq = Some(Pq(M, Ksub, residual = true)))
+    val loaded = IvfIndexStore.load(spark, root)
+    val idx = loaded.pq.get
     assert(idx.residual, "res flag must roundtrip the record")
 
     // books/codes = the recompute over residuals to the trained
@@ -330,17 +344,17 @@ class IvfPqIndexSpec extends SparkTestBase {
       codeRows(SimilarityOps.pqEncode(corpus, rawBooks, M, SubDim)))
 
     // frozen-book increment append encodes the increment's residuals
-    val v2 = IvfIndexStore.appendPq(spark, root, inc)
+    val v2 = IvfIndexStore.append(spark, root, inc)
     val incResid = SimilarityOps.residuals(
       SimilarityOps.ivfCells(inc, cents), cents)
-    assert(codeRows(IvfIndexStore.loadPqAt(spark, root, v2).codes
+    assert(codeRows(pq(root, Some(v2)).codes
         .filter(col("vec_id") % 5 === 0)) ==
       codeRows(SimilarityOps.pqEncode(incResid, memBooks, M, SubDim)))
 
     // the ADC probe on the loaded residual index returns exactly
     // topK rows per query and never a query itself
     val q = inc.filter(col("vec_id").isin(5L, 10L, 15L))
-    val out = IvfIndexStore.adcShortlist(idx, q, nprobe = 4,
+    val out = IvfIndexStore.adcShortlist(loaded, q, nprobe = 4,
         shortlistL = 10, topK = 3)
       .select("qid", "nid").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
@@ -350,7 +364,7 @@ class IvfPqIndexSpec extends SparkTestBase {
     // retrain keeps the residual layer and re-anchors books + codes
     // to the NEW centroids
     val v3 = IvfIndexStore.retrain(spark, root)
-    val after = IvfIndexStore.loadPqAt(spark, root, v3)
+    val after = pq(root, Some(v3))
     assert(after.residual, "res flag must survive retrain")
     val kNew = math.max(32L, emb.count() / 64L).toInt
     val seeds = emb.orderBy(xxhash64(col("vec_id"))).limit(kNew)
