@@ -457,11 +457,10 @@ object IvfIndexStore {
       val cells = if (pq.isEmpty) assigned else Scope.cache(assigned)
       val dirName = UUID.randomUUID().toString
       val buckets = head.kvMap("p").toInt
-      // independent staging writes to separate dirs — overlap them
-      // (guide §2.6); the commit joins them
-      Scope.fork(spark, "ivf:append:cells")(
-        writeCells(cells, buckets, s"$root/data/$dirName/cells",
-          rowGroup(head)))
+      // independent staging writes to separate dirs — the codes and
+      // attrs writes fork to overlap the cells write on this thread
+      // (guide §2.6; a lone cells write starts no thread); the commit
+      // joins them
       pq.zip(books).foreach { case ((p, sd), b) =>
         // a residual head (res=1) encodes the increment's RESIDUALS on
         // the frozen books — the same frozen-structure rule as the raw
@@ -476,6 +475,8 @@ object IvfIndexStore {
       attrs.foreach(a => Scope.fork(spark, "ivf:append:attrs")(
         writeAttrs(a, head.kvMap("ap").toInt,
           s"$root/data/$dirName/attrs")))
+      writeCells(cells, buckets, s"$root/data/$dirName/cells",
+        rowGroup(head))
       casAppend(root, head, shardDirs(dirName, pq.isDefined, attrs.isDefined),
         tag, store, maxRetries)
     }
