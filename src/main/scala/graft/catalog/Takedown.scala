@@ -88,10 +88,10 @@ object Takedown {
     dropTombs(spark.read.parquet(s"$root/data/${r.dirsOf(tag).head}"),
       tombs, "download_url")
 
+  /** The newest version: one listing of `_commits`, one record parse. */
   def load(spark: SparkSession, root: String): Catalog = {
-    val recs = ArtifactLog.list(root)
-    require(recs.nonEmpty, s"$root has no committed catalog")
-    loadAt(spark, root, recs.head._1)
+    val (v, r) = ArtifactLog.latest(root, Kind)
+    catalog(spark, root, v, r)
   }
 
   /** Time travel: the catalog as of `version` — a pre-takedown
@@ -99,8 +99,12 @@ object Takedown {
     * and index rows included), because its record's T lines don't
     * carry the later tombstone. */
   def loadAt(spark: SparkSession, root: String, version: Long)
-      : Catalog = {
-    val r = ArtifactLog.recordAt(root, Kind, version)
+      : Catalog =
+    catalog(spark, root, version, ArtifactLog.recordAt(root, Kind, version))
+
+  /** The tables record `r` (version `version`) names. */
+  private def catalog(spark: SparkSession, root: String, version: Long,
+      r: Rec): Catalog = {
     val tombs = readTombs(spark, root, r.dirsOf("T"))
     Catalog(version,
       table(spark, root, r, "P", tombs),

@@ -426,13 +426,24 @@ object TxLog {
   }
 
   /** Read a delta catalog at its latest version: the union of every
-    * manifest partition. `empty` supplies the version-0 schema. */
+    * manifest partition. `empty` supplies the version-0 schema.
+    *
+    * Reuse: every call resolves the latest version (one `_commits`
+    * listing), and while the (version, manifest) pair is the one this
+    * session last read, returns the SAME frame
+    * ([[graft.ops.ArtifactLog.reuse]]): no schema-inference job, no
+    * re-listing. Partition dirs are
+    * uuid-named and written once, and [[vacuum]] keeps every dir the
+    * newest record names, so the reused frame reads exactly what a
+    * fresh one would; a commit moves the version and is seen on the
+    * next call. */
   def readDelta(spark: SparkSession, root: String, empty: => DataFrame)
       : (Long, DataFrame) = {
     val (v, m) = manifestSnapshot(root)
     if (m.isEmpty) (v, empty)
-    else (v, spark.read.parquet(
-      m.values.toSeq.sorted.map(p => s"$root/data/$p"): _*))
+    else (v, graft.ops.ArtifactLog.reuse(spark, root, ("delta", v, m))(
+      spark.read.parquet(
+        m.values.toSeq.sorted.map(p => s"$root/data/$p"): _*)))
   }
 
   /** Time travel: read a delta catalog at a HISTORICAL version — the

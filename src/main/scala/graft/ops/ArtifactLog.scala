@@ -86,6 +86,54 @@ private[graft] object ArtifactLog {
     (recs.head._1, parse(kind, Files.readString(recs.head._2).trim))
   }
 
+  /** One root's reused read handle: built in `session` from the record
+    * `key` names. */
+  private final case class Handle(session: SparkSession, key: Any,
+      frames: AnyRef)
+
+  /** Roots with a reused handle, least recently read first. The cap
+    * bounds the sessions and plans the map keeps alive (a handle's
+    * frames hold their session); one entry per root, so a root's newer
+    * version replaces the older one's frames. */
+  private val MaxHandles = 32
+  private val handles =
+    new java.util.LinkedHashMap[String, Handle](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, Handle]): Boolean =
+        size > MaxHandles
+    }
+
+  /** The frames `build` makes for `root`'s newest record `key`, reused
+    * while `key` is unchanged ([[IvfIndexStore.load]],
+    * [[MinhashIndexStore.load]], [[TxLog.readDelta]]): the same
+    * DataFrames come back, whose relations already hold the inferred
+    * schema and the file listing, so a repeat read starts no Spark job
+    * and lists no data dir. Sound because committed data dirs are
+    * uuid-named and written once, and vacuum keeps the newest record
+    * and every dir it names; any commit moves the key, so the next
+    * call rebuilds. A handle is only returned to the session that
+    * built it (compared by reference: a [[graft.Scope.staged]] clone
+    * is another session), and entries of stopped sessions are
+    * dropped. Callers pass only the NEWEST record, so no version is
+    * held longer than a caller holding a fresh handle would hold it. */
+  def reuse[V <: AnyRef](spark: SparkSession, root: String, key: Any)(
+      build: => V): V = {
+    val hit = handles.synchronized(Option(handles.get(root)))
+      .filter(h => (h.session eq spark) && h.key == key)
+    hit.fold {
+      val frames = build
+      handles.synchronized {
+        handles.values.removeIf(_.session.sparkContext.isStopped)
+        handles.put(root, Handle(spark, key, frames))
+      }
+      frames
+    }(_.frames.asInstanceOf[V])
+  }
+
+  /** The frames [[reuse]] keeps for `root`, if any. */
+  private[graft] def reused(root: String): Option[AnyRef] =
+    handles.synchronized(Option(handles.get(root)).map(_.frames))
+
   def recordAt(root: String, kind: String, version: Long): Rec = {
     val recs = list(root)
     val p = recs.collectFirst { case (v, path) if v == version => path }

@@ -341,10 +341,18 @@ object IvfIndexStore {
     }
   }
 
-  /** The newest version: one listing of `_commits`, one record parse. */
+  /** The newest version: one listing of `_commits`, one record parse.
+    *
+    * Reuse: while the newest (version, record) is the one this session
+    * last loaded, the SAME handle comes back ([[ArtifactLog.reuse]]):
+    * no schema-inference job, no re-listing of its dirs. Data dirs are
+    * uuid-named and written once, and [[vacuum]] always keeps the
+    * newest record and every dir it names, so the handle reads exactly
+    * what a fresh one would; an append, delete, compact or retrain
+    * moves the version and is seen on the next call. */
   def load(spark: SparkSession, root: String): IvfIndex = {
     val (v, r) = ArtifactLog.latest(root, Kind)
-    index(spark, root, v, r)
+    ArtifactLog.reuse(spark, root, (Kind, v, r))(index(spark, root, v, r))
   }
 
   /** Time travel: the index as of `version` — every record is a full
@@ -884,9 +892,9 @@ object IvfIndexStore {
     // folded at the next compact.
     val rec = Rec(
       Seq("k" -> kNew.toString, "p" -> defaultBuckets(kNew).toString) ++
-        head.kvMap.filter(kv =>
-          Set("m", "sd", "ks", "rg", "res", "ap")(kv._1)) ++
-        head.kvMap.get("tag").map("tag" -> _),
+        pq.toSeq.flatMap { case (p, sd) => pqKv(p, sd) } ++
+        head.kvMap.get("ap").map("ap" -> _) ++
+        head.kv.filter(kv => ArtifactLog.TagKeys(kv._1)),
       Seq("C" -> s"$dirName/centroids") ++
         pq.map(_ => "B" -> s"$dirName/books") ++
         shardDirs(dirName, pq.isDefined, attrs = false) ++

@@ -224,10 +224,18 @@ object MinhashIndexStore {
     Seq("L" -> s"$dirName/labmem/side=q",
       "M" -> s"$dirName/labmem/side=m")
 
-  /** The newest version: one listing of `_commits`, one record parse. */
+  /** The newest version: one listing of `_commits`, one record parse.
+    *
+    * Reuse: while the newest (version, record) is the one this session
+    * last loaded, the SAME handle comes back ([[ArtifactLog.reuse]]):
+    * no schema-inference job, no re-listing of its dirs. Data dirs are
+    * uuid-named and written once, and [[vacuum]] always keeps the
+    * newest record and every dir it names, so the handle reads exactly
+    * what a fresh one would; an append, delete, compact or labeled
+    * ingest moves the version and is seen on the next call. */
   def load(spark: SparkSession, root: String): MinhashIndex = {
     val (v, r) = ArtifactLog.latest(root, Kind)
-    index(spark, root, v, r)
+    ArtifactLog.reuse(spark, root, (Kind, v, r))(index(spark, root, v, r))
   }
 
   /** Latest committed (version, labeled?) without loading any frame

@@ -475,6 +475,33 @@ class IvfIndexSpec extends SparkTestBase {
     assert(!rec.linesIterator.exists(_.startsWith("T\t")))
   }
 
+  test("retrain keeps both replay-tag channels and writes the PQ " +
+      "header in save's order, so a replayed saga delete no-ops") {
+    val root = freshRoot("retraintags")
+    val attrs = emb.select(col("vec_id"), (col("vec_id") % 3).as("label"))
+    IvfIndexStore.save(root, corpus, 32,
+      attrs = Some(attrs.join(corpus.select("vec_id"), Seq("vec_id"))),
+      pq = Some(IvfIndexStore.Pq(m = 4, ksub = 16, residual = true,
+        rowGroupBytes = 16384)))
+    IvfIndexStore.append(spark, root, inc, tag = Some(3L),
+      attrs = Some(attrs.join(inc.select("vec_id"), Seq("vec_id"))))
+    val gone = emb.filter(col("vec_id") % 7 === 0).select("vec_id")
+    IvfIndexStore.delete(spark, root, gone, tag = Some(4L),
+      tagKey = "tdtag")
+    val v4 = IvfIndexStore.retrain(spark, root)
+    val kNew = math.max(32L,
+      emb.filter(col("vec_id") % 7 =!= 0).count() / 64L).toInt
+    val header = Files.readString(Paths.get(root, "_commits",
+      f"v$v4%020d")).linesIterator.next()
+    assert(header == s"#ivf k=$kNew p=${IvfIndexStore.defaultBuckets(kNew)} " +
+      "m=4 sd=16 ks=16 rg=16384 res=1 ap=8 tag=3 tdtag=4")
+    // the saga's replayed batch sees its watermark: no new version
+    assert(IvfIndexStore.delete(spark, root, gone, tag = Some(4L),
+      tagKey = "tdtag") == v4)
+    assert(IvfIndexStore.latestVersion(root) == v4)
+    SimilarityOps.releaseCaches()
+  }
+
   test("appends validate the increment's vector dimension against " +
       "the index (a schema-drifted shard fails before staging)") {
     import spark.implicits._
