@@ -75,10 +75,9 @@ object Takedown {
     TableTags.zip(frames).foreach { case (tag, f) =>
       f.write.parquet(s"$root/data/$dirName/$tag")
     }
-    val v = ArtifactLog.list(root).headOption.map(_._1).getOrElse(0L)
     // a record must carry at least one kv (an empty header trims to
     // '#cat' and fails the kind check on read)
-    ArtifactLog.commit(root, Kind, v,
+    ArtifactLog.commit(root, Kind, ArtifactLog.version(root),
       Rec(Seq("tables" -> TableTags.size.toString),
         TableTags.map(t => t -> s"$dirName/$t")), store)
   }
@@ -123,40 +122,16 @@ object Takedown {
     * carries); `tag` gives streaming takedown feeds the replay-no-op
     * contract of the artifact stores. */
   def takedown(root: String, urls: DataFrame,
-      store: CommitStore = LinkCommitStore, maxRetries: Int = 10,
+      store: CommitStore = LinkCommitStore,
       tag: Option[Long] = None, tagKey: String = "tag"): Long = {
-    require(ArtifactLog.TagKeys(tagKey), s"unknown tag channel $tagKey")
+    ArtifactLog.channel(tagKey)
     val (v0, head0) = ArtifactLog.latest(root, Kind)
-    tag.foreach { t =>
-      val committed = head0.kvMap.get(tagKey).map(_.toLong)
-      if (committed.exists(_ >= t)) return v0
-    }
+    if (ArtifactLog.landed(head0, tag, tagKey)) return v0
     val dirName = UUID.randomUUID().toString
     urls.select("download_url").distinct()
       .write.parquet(s"$root/data/$dirName/T")
-    var attempt = 0
-    while (true) {
-      val (v, latest) = ArtifactLog.latest(root, Kind)
-      tag.foreach { t =>
-        // re-check inside the loop (the zombie-driver race — see
-        // IvfIndexStore.casAppend)
-        val committed = latest.kvMap.get(tagKey).map(_.toLong)
-        if (committed.exists(_ >= t)) return v
-      }
-      val rec = Rec(
-        if (tag.isDefined)
-          latest.kv.filterNot(_._1 == tagKey) ++
-            tag.map(t => tagKey -> t.toString)
-        else latest.kv,
-        latest.dirs :+ ("T" -> s"$dirName/T"))
-      try return ArtifactLog.commit(root, Kind, v, rec, store)
-      catch {
-        case e: TxLog.CommitConflict =>
-          if (attempt >= maxRetries) throw e
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    ArtifactLog.rebase(root, Kind, store, dirName, tag, tagKey)(latest =>
+      Rec(latest.kv, latest.dirs :+ ("T" -> s"$dirName/T")))
   }
 
   /** Merge a scanned-package batch into the P table under the same

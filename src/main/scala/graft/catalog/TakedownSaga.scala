@@ -88,39 +88,31 @@ object TakedownSaga {
         stores.ann.map(_ => "vec_id")).flatten
       .foreach(c => require(ids.columns.contains(c),
         s"saga ids must carry $c for the configured member store"))
-    tag.foreach { t =>
-      newestIntentTag(sagaRoot).foreach { committed =>
-        if (committed._2 >= t) return committed._1 // replayed batch
-      }
-    }
+    val replay = replayedIntent(sagaRoot, tag)
+    if (replay.isDefined) return replay.get // replayed batch
     val dirName = UUID.randomUUID().toString
     ids.write.parquet(s"$sagaRoot/data/$dirName/ids")
-    var attempt = 0
-    while (true) {
-      tag.foreach { t =>
-        // re-check inside the loop (the zombie-driver race)
-        newestIntentTag(sagaRoot).foreach { committed =>
-          if (committed._2 >= t) return committed._1
-        }
-      }
-      val v = ArtifactLog.list(sagaRoot).headOption.map(_._1)
-        .getOrElse(0L)
-      val rec = Rec(
+    // the intent's tag rides its own position in the header (after
+    // `state`), so the saga stamps it itself and keeps its own replay
+    // check: the newest INTENT's tag, not the head record's
+    ArtifactLog.rebase(sagaRoot, Kind, store, dirName,
+        replayed = () => replayedIntent(sagaRoot, tag)) { _ =>
+      Rec(
         Seq("state" -> "open") ++
           tag.map(t => "tag" -> t.toString) ++
           stores.catalog.map("cat" -> _) ++
           stores.dedup.map("mh" -> _) ++
           stores.ann.map("ivf" -> _),
         Seq("I" -> s"$dirName/ids"))
-      try return ArtifactLog.commit(sagaRoot, Kind, v, rec, store)
-      catch {
-        case e: TxLog.CommitConflict =>
-          if (attempt >= 10) throw e
-          attempt += 1
-      }
     }
-    throw new IllegalStateException("unreachable")
   }
+
+  /** The saga id of the intent that already carries replay tag `tag`
+    * (or a later one), if any. */
+  private def replayedIntent(sagaRoot: String,
+      tag: Option[Long]): Option[Long] =
+    tag.flatMap(t => newestIntentTag(sagaRoot).collect {
+      case (id, committed) if committed >= t => id })
 
   /** (sagaId, tag) of the newest INTENT record carrying a tag, if
     * any — completion records don't carry the feed's tag, so the
@@ -190,20 +182,10 @@ object TakedownSaga {
       .sortBy(_._1)
     open.map { case (sagaId, rec) =>
       applyOne(spark, sagaRoot, sagaId, rec, store, crashAfter)
-      var attempt = 0
-      var committed = false
-      while (!committed) {
-        val v = ArtifactLog.list(sagaRoot).head._1
-        try {
-          ArtifactLog.commit(sagaRoot, Kind, v,
-            Rec(Seq("state" -> "done", "upto" -> sagaId.toString),
-              rec.dirs), store)
-          committed = true
-        } catch {
-          case e: TxLog.CommitConflict =>
-            if (attempt >= 10) throw e
-            attempt += 1
-        }
+      TxLog.optimistic() {
+        ArtifactLog.commit(sagaRoot, Kind, ArtifactLog.version(sagaRoot),
+          Rec(Seq("state" -> "done", "upto" -> sagaId.toString),
+            rec.dirs), store)
       }
       sagaId
     }

@@ -1,6 +1,9 @@
 package graft.catalog
 
-import java.nio.file.{Files, NoSuchFileException, Path, Paths}
+import java.io.IOException
+import java.nio.file.{FileVisitResult, Files, NoSuchFileException, Path,
+  Paths, SimpleFileVisitor}
+import java.nio.file.attribute.BasicFileAttributes
 import java.util.UUID
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -65,13 +68,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ([[LockingPutCommitStore]] is the bundled conditional-PUT-shaped
   * test double CatalogTxSpec drives the concurrency suite through).
   *
-  * [[transact]] is the writer loop: read snapshot v, apply the
-  * caller's merge against it, stage the result, CAS v+1; on conflict
-  * rebase — re-read the winner's snapshot and re-apply — exactly the
+  * Every versioned root — this catalog, [[graft.ops.ArtifactLog]]'s
+  * index and takedown roots, the saga log — commits through ONE
+  * optimistic loop, [[optimistic]]: read the head at v, stage, CAS
+  * v+1; on a lost CAS retry against the winner's head, at most
+  * [[MaxRetries]] times, then rethrow the [[CommitConflict]] — the
   * optimistic protocol of every table format (Delta/Iceberg commit
-  * protocols). Staged-but-unclaimed data dirs from losers or crashes
-  * are unreachable garbage, removed by retention alongside superseded
-  * versions.
+  * protocols). Writers differ only in what an attempt does:
+  *  - [[transact]] and [[mergeCommitDelta]] STAGE PER ATTEMPT (the
+  *    merge re-runs on the winner's snapshot) and GC each lost
+  *    attempt's dir;
+  *  - the artifact appenders, deletes and takedowns STAGE ONCE and
+  *    REBASE only the record ([[graft.ops.ArtifactLog.rebase]]), and
+  *    GC their staged dir only when they give up;
+  *  - writers whose staging depends on the head they read (labeled
+  *    ingest and delete, retrain, compact, `Takedown.mergePackages`)
+  *    do not rebase: their lost CAS propagates for the caller to re-run.
+  * A GC runs only on those exits, never on another failure: a store
+  * whose claim landed and whose clean-up then threw has COMMITTED the
+  * dir. Whatever a crash leaves staged is unreachable garbage, removed
+  * by retention alongside superseded versions.
   *
   * On a 100 TB deployment the same protocol runs against an object
   * store with a conditional-PUT (or a DynamoDB-style lock row) as the
@@ -138,7 +154,8 @@ object TxLog {
   final class CommitConflict(version: Long)
     extends RuntimeException(s"version $version already committed")
 
-  private def commitsDir(root: String): Path = Paths.get(root, "_commits")
+  import graft.ops.ArtifactLog.{commitsDir, list => listRecords}
+
   private def name(v: Long): String = f"v$v%020d"
 
   def init(root: String): Unit = {
@@ -155,23 +172,6 @@ object TxLog {
 
   private def isDeltaRecord(content: String): Boolean =
     content.linesIterator.exists(_.trim == "#delta")
-
-  /** All commit records, newest first. */
-  private def listRecords(root: String): Seq[(Long, Path)] = {
-    val dir = commitsDir(root)
-    if (!Files.exists(dir)) return Seq.empty
-    val listing = Files.list(dir)
-    try {
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Path)]
-      val it = listing.iterator()
-      while (it.hasNext) {
-        val p = it.next()
-        val n = p.getFileName.toString
-        if (n.startsWith("v")) buf += ((n.drop(1).toLong, p))
-      }
-      buf.sortBy(-_._1).toSeq
-    } finally listing.close()
-  }
 
   /** Raw content of the latest commit (None on an empty root). The
     * newest record is never pruned by vacuum, so no read race. */
@@ -216,41 +216,59 @@ object TxLog {
     else throw new CommitConflict(next)
   }
 
-  /** Best-effort recursive delete of a staged-but-unclaimed data dir. */
-  private def gcStaged(root: String, dirName: String): Unit = {
-    val stale = Paths.get(root, "data", dirName)
-    if (Files.exists(stale))
-      Files.walk(stale).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.deleteIfExists(f))
-  }
+  /** Recursive delete of a staged-but-unclaimed data dir — a lost
+    * attempt's, or a giving-up writer's ([[optimistic]]). */
+  private[graft] def gcStaged(root: String, dirName: String): Unit =
+    deleteTree(Paths.get(root, "data", dirName))
 
-  /** Optimistic transaction: read → merge → stage → CAS, rebasing on
-    * conflict up to `maxRetries` times. `merge` must be a pure
-    * function of the snapshot (it reruns on rebase). Returns the
-    * committed version. The staged dir of every losing attempt is
-    * GC'd immediately — including the final one when retries exhaust
-    * and the [[CommitConflict]] propagates (ADVICE r9: the exhausted
-    * path used to leak its staging until a vacuum). */
-  def transact(spark: SparkSession, root: String, empty: => DataFrame,
-      maxRetries: Int = 10, store: CommitStore = LinkCommitStore)(
-      merge: DataFrame => DataFrame): Long = {
-    init(root)
-    var attempt = 0
+  private[graft] def deleteTree(p: Path): Unit =
+    if (Files.exists(p))
+      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => Files.deleteIfExists(f))
+
+  /** Retry budget of every optimistic writer. */
+  val MaxRetries = 10
+
+  /** THE optimistic-commit loop of every versioned root: run `attempt`
+    * (read the head, stage or re-render, CAS) until its CAS lands. A
+    * lost CAS runs `lost(last)` — `last` when no retry follows — and
+    * retries, at most [[MaxRetries]] times, then rethrows the
+    * [[CommitConflict]]. A writer staging per attempt GCs on every
+    * loss, one staging once only on the last. Any other failure
+    * propagates without `lost`: it may come from a store whose claim
+    * landed. */
+  private[graft] def optimistic[A](lost: Boolean => Unit = _ => ())(
+      attempt: => A): A = {
+    var n = 0
     while (true) {
-      val (v, current) = read(spark, root, empty)
-      val out = merge(current)
-      val dirName = UUID.randomUUID().toString
-      out.write.parquet(s"$root/data/$dirName")
-      try return commit(root, v, dirName, store)
+      try return attempt
       catch {
         case e: CommitConflict =>
-          // loser's staged snapshot is unreachable; best-effort GC now
-          gcStaged(root, dirName)
-          if (attempt >= maxRetries) throw e
-          attempt += 1
+          lost(n >= MaxRetries)
+          if (n >= MaxRetries) throw e
+          n += 1
       }
     }
     throw new IllegalStateException("unreachable")
+  }
+
+  /** Optimistic transaction: read → merge → stage → CAS, rebasing on
+    * conflict ([[optimistic]]). `merge` must be a pure function of the
+    * snapshot (it reruns on rebase). Returns the committed version.
+    * The staged dir of every losing attempt is GC'd immediately —
+    * including the final one when retries exhaust and the
+    * [[CommitConflict]] propagates (ADVICE r9). */
+  def transact(spark: SparkSession, root: String, empty: => DataFrame,
+      store: CommitStore = LinkCommitStore)(
+      merge: DataFrame => DataFrame): Long = {
+    init(root)
+    var dirName = ""
+    optimistic(_ => gcStaged(root, dirName)) {
+      val (v, current) = read(spark, root, empty)
+      dirName = UUID.randomUUID().toString
+      merge(current).write.parquet(s"$root/data/$dirName")
+      commit(root, v, dirName, store)
+    }
   }
 
   /** The user-facing composition: merge one scanned-package batch into
@@ -284,20 +302,17 @@ object TxLog {
     * commit duplicate keys). */
   val DefaultPartitions = 64
 
-  /** Persist-or-assert the root's fixed partition count. First writer
-    * claims the sidecar through the same link(2) CAS as commits; a
-    * racing second writer re-reads and asserts. */
-  private def assertPartitions(root: String, partitions: Int,
-      store: CommitStore = LinkCommitStore): Unit = {
-    val f = commitsDir(root).resolve("PARTITIONS")
-    if (!Files.exists(f)) {
-      // first writer claims the sidecar through the same CAS as
-      // commits; a racing loser just re-reads and asserts below
-      store.putIfAbsent(f, partitions.toString)
-    }
-    val fixed = Files.readString(f).trim.toInt
+  /** Persist-or-assert a root's fixed partition count in the `sidecar`
+    * file ([[mergeCommitDelta]]'s `PARTITIONS`, the frontier state's
+    * `SPARTS`). The first writer claims it through the commit CAS; a
+    * racing loser re-reads and asserts. `owner` names the root in the
+    * error. */
+  private[graft] def assertPartitions(sidecar: Path, partitions: Int,
+      owner: String, store: CommitStore = LinkCommitStore): Unit = {
+    if (!Files.exists(sidecar)) store.putIfAbsent(sidecar, partitions.toString)
+    val fixed = Files.readString(sidecar).trim.toInt
     require(fixed == partitions,
-      s"delta root $root was created with $fixed partitions; " +
+      s"$owner was created with $fixed partitions; " +
         s"got $partitions — the count is fixed at root creation " +
         "(manifests re-link old partition dirs)")
   }
@@ -485,19 +500,20 @@ object TxLog {
     * of the merges. */
   def mergeCommitDelta(spark: SparkSession, root: String,
       incoming: DataFrame, now: String, empty: => DataFrame,
-      partitions: Int = DefaultPartitions, maxRetries: Int = 10,
+      partitions: Int = DefaultPartitions,
       preCommitHook: Long => Unit = _ => (),
       tag: Option[Long] = None, checkpointEvery: Int = 16,
       store: CommitStore = LinkCommitStore): Long = {
     init(root)
-    assertPartitions(root, partitions, store)
+    assertPartitions(commitsDir(root).resolve("PARTITIONS"), partitions,
+      s"delta root $root", store)
     val inc = incoming.cache() // reused across pid probe + retries
     try {
       // bounded by `partitions`, never corpus size
       val touched = inc.select(pidCol(partitions).as("pid")).distinct()
         .collect().map(_.getInt(0)).sorted
-      var attempt = 0
-      while (true) {
+      var dirName = ""
+      optimistic(_ => gcStaged(root, dirName)) {
         val (v, m) = manifestSnapshot(root)
         val touchedPaths = touched.toSeq.flatMap(m.get)
           .map(p => s"$root/data/$p")
@@ -505,7 +521,7 @@ object TxLog {
           if (touchedPaths.isEmpty) empty
           else spark.read.parquet(touchedPaths: _*)
         val merged = MergeEngine.mergePackages(subset, inc, now).packages
-        val dirName = UUID.randomUUID().toString
+        dirName = UUID.randomUUID().toString
         merged.withColumn("pid", pidCol(partitions))
           .write.partitionBy("pid").parquet(s"$root/data/$dirName")
         val touchedEntries =
@@ -520,36 +536,39 @@ object TxLog {
             .map { case (p, d) => s"$p\t$d" }
         val record = (header ++ body).mkString("\n")
         preCommitHook(v) // test seam: races injected between stage+CAS
-        try return commit(root, v, record, store)
-        catch {
-          case e: CommitConflict =>
-            gcStaged(root, dirName)
-            if (attempt >= maxRetries) throw e
-            attempt += 1
-        }
+        commit(root, v, record, store)
       }
-      throw new IllegalStateException("unreachable")
     } finally inc.unpersist(false)
   }
 
-  /** Newest last-modified time across a dir tree. A partitionBy
-    * parquet job lands task files under `_temporary/` and `pid=N/`
-    * subdirs WITHOUT bumping the top-level dir's mtime (ADVICE r10 —
-    * the old top-level check could sweep a slow in-flight writer's
-    * staging mid-job); the grace cutoff must see the deepest write. */
-  private def treeMtime(p: Path): Long = {
-    val s = Files.walk(p)
-    try {
-      var best = 0L
-      val it = s.iterator()
-      while (it.hasNext) {
-        try {
-          val t = Files.getLastModifiedTime(it.next()).toMillis
-          if (t > best) best = t
-        } catch { case _: NoSuchFileException => () }
+  /** Newest last-modified time across a dir tree, for both vacuums'
+    * grace check. A partitionBy parquet job lands task files under
+    * `_temporary/` and `pid=N/` subdirs WITHOUT bumping the top-level
+    * dir's mtime (ADVICE r10), so the cutoff must see the deepest
+    * write. The trees it walks are exactly the unreferenced ones, where
+    * in-flight staging and `_temporary` files come and go mid-walk: an
+    * entry that vanishes is skipped, and a root that vanished reads as
+    * just modified (age 0), never as sweepable. */
+  private[graft] def treeMtime(p: Path): Long = {
+    var best = 0L
+    var seen = false
+    def keep(e: IOException): FileVisitResult = e match {
+      case null | _: NoSuchFileException => FileVisitResult.CONTINUE
+      case _ => throw e
+    }
+    Files.walkFileTree(p, new SimpleFileVisitor[Path] {
+      private def stat(a: BasicFileAttributes): FileVisitResult = {
+        seen = true
+        best = math.max(best, a.lastModifiedTime.toMillis)
+        FileVisitResult.CONTINUE
       }
-      best
-    } finally s.close()
+      override def preVisitDirectory(d: Path, a: BasicFileAttributes) =
+        stat(a)
+      override def visitFile(f: Path, a: BasicFileAttributes) = stat(a)
+      override def visitFileFailed(f: Path, e: IOException) = keep(e)
+      override def postVisitDirectory(d: Path, e: IOException) = keep(e)
+    })
+    if (seen) best else System.currentTimeMillis()
   }
 
   /** Retention: drop data dirs unreachable from the last `keep`
@@ -603,8 +622,7 @@ object TxLog {
           val p = it.next()
           if (!live.contains(p.getFileName.toString) &&
               treeMtime(p) <= cutoff)
-            Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-              .forEach(f => Files.deleteIfExists(f))
+            deleteTree(p)
         }
       } finally listing.close()
     }

@@ -20,7 +20,14 @@ import graft.catalog.{CommitStore, TxLog}
   * excluded by construction. The header kind is checked on every
   * parse, and the formats are disjoint from [[TxLog]]'s (whose
   * `snapshot` throws on a `#`-headed record), so a reader pointed at
-  * the wrong root fails loudly in both directions. */
+  * the wrong root fails loudly in both directions.
+  *
+  * Commits follow [[TxLog]]'s one protocol ([[TxLog.optimistic]]).
+  * Appenders, tombstone deletes, takedowns and saga intents stage once
+  * and REBASE through [[rebase]]; writers whose staging depends on the
+  * head they read (labeled ingest/delete, compact, retrain, catalog
+  * merges) commit once through [[commit]] and a lost CAS propagates.
+  * Tagged writers of either kind share [[landed]] and [[stamped]]. */
 private[graft] object ArtifactLog {
 
   /** One record: header key=values (ordered) + tagged dir lines
@@ -42,7 +49,24 @@ private[graft] object ArtifactLog {
     * channel advancing is not a structural change. */
   val TagKeys: Set[String] = Set("tag", "tdtag")
 
-  private def commitsDir(root: String): Path = Paths.get(root, "_commits")
+  def commitsDir(root: String): Path = Paths.get(root, "_commits")
+
+  /** `require`s that `tagKey` names a replay channel. */
+  def channel(tagKey: String): Unit =
+    require(TagKeys(tagKey), s"unknown tag channel $tagKey")
+
+  /** Whether `r` already carries replay tag `tag` (or a later one) on
+    * channel `tagKey`: that batch landed, so it must not stage again. */
+  def landed(r: Rec, tag: Option[Long], tagKey: String): Boolean =
+    tag.exists(t => r.kvMap.get(tagKey).exists(_.toLong >= t))
+
+  /** `kv` advanced to replay tag `tag` on channel `tagKey`. An UNTAGGED
+    * writer PRESERVES the committed tag — erasing it would let a
+    * crash-replayed stream batch land twice after any interleaved
+    * ad-hoc write. */
+  def stamped(kv: Seq[(String, String)], tag: Option[Long],
+      tagKey: String): Seq[(String, String)] =
+    tag.fold(kv)(t => kv.filterNot(_._1 == tagKey) :+ (tagKey -> t.toString))
 
   def render(kind: String, r: Rec): String =
     (s"#$kind ${r.kv.map { case (k, v) => s"$k=$v" }.mkString(" ")}" +:
@@ -79,6 +103,9 @@ private[graft] object ArtifactLog {
       buf.sortBy(-_._1).toSeq
     } finally l.close()
   }
+
+  /** The newest committed version, 0 before the first commit. */
+  def version(root: String): Long = list(root).headOption.fold(0L)(_._1)
 
   def latest(root: String, kind: String): (Long, Rec) = {
     val recs = list(root)
@@ -182,6 +209,43 @@ private[graft] object ArtifactLog {
     TxLog.commit(root, readVersion, render(kind, rec), store)
   }
 
+  /** The commit of a writer that staged `staged` (a dir under
+    * `root/data`) ONCE and rebases only its record: each attempt of
+    * [[TxLog.optimistic]] reads the newest record and, unless the
+    * batch already landed, CASes `next(head)` with replay tag `tag`
+    * stamped on channel `tagKey`. The replay check runs on EVERY
+    * attempt — the entry-time check alone loses the zombie-driver race
+    * (two drivers replay one batch, both pass it, one commits, and the
+    * loser's rebase would commit the batch AGAIN): it is the channel's
+    * watermark, or `replayed()` where the writer keeps its own. `next`
+    * holds the structure checks (a `require` failing there means a
+    * concurrent commit replaced what the staging was built for).
+    * Returns the committed version, or the version the batch landed
+    * as. The staged dir is GC'd when the writer gives up — retries
+    * exhausted, the batch landed, `next` rejecting the head — and on
+    * no other failure. */
+  def rebase(root: String, kind: String, store: CommitStore,
+      staged: String, tag: Option[Long] = None, tagKey: String = "tag",
+      replayed: () => Option[Long] = () => None)(next: Rec => Rec): Long = {
+    channel(tagKey)
+    // the staging writes may still run in the caller's region
+    def giveUp(): Unit =
+      try graft.Scope.join() finally TxLog.gcStaged(root, staged)
+    TxLog.optimistic(last => if (last) giveUp()) {
+      val (v, head) = list(root).headOption.fold((0L, Rec(Nil, Nil))) {
+        case (v, p) => (v, parse(kind, Files.readString(p).trim)) }
+      replayed().orElse(Some(v).filter(_ => landed(head, tag, tagKey))) match {
+        case Some(done) => giveUp(); done
+        case None =>
+          val rec =
+            try next(head)
+            catch { case e: IllegalArgumentException => giveUp(); throw e }
+          commit(root, kind, v, Rec(stamped(rec.kv, tag, tagKey), rec.dirs),
+            store)
+      }
+    }
+  }
+
   /** Prune history: keep the newest `keep` records, delete older
     * ones, then delete top-level data dirs no kept record references
     * (deep-tree mtime older than `graceMs`, protecting an in-flight
@@ -207,20 +271,12 @@ private[graft] object ArtifactLog {
           val d = it.next()
           val n = d.getFileName.toString
           if (!live.contains(n) && !n.startsWith(".") &&
-              Files.isDirectory(d) && treeMtime(d) <= cutoff)
-            Files.walk(d).sorted(java.util.Comparator.reverseOrder())
-              .forEach(f => Files.deleteIfExists(f))
+              Files.isDirectory(d) && TxLog.treeMtime(d) <= cutoff)
+            TxLog.deleteTree(d)
         }
       } finally l.close()
     }
     TxLog.sweepDotOrphans(commitsDir(root), cutoff)
     TxLog.sweepDotOrphans(dataDir, cutoff)
-  }
-
-  private def treeMtime(p: Path): Long = {
-    val s = Files.walk(p)
-    try s.mapToLong(f => Files.getLastModifiedTime(f).toMillis)
-      .max.orElse(0L)
-    finally s.close()
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.Scope
 import graft.catalog.{CommitStore, LinkCommitStore, TxLog}
-import graft.ops.ArtifactLog.Rec
+import graft.ops.ArtifactLog.{Rec, landed}
 
 /** The persisted IVF index as a first-class, versioned on-disk
   * artifact — the piece the `s_ann_increment` query could only
@@ -255,8 +255,7 @@ object IvfIndexStore {
         Seq("C" -> s"$dirName/centroids") ++
           pq.map(_ => "B" -> s"$dirName/books") ++
           shardDirs(dirName, pq.isDefined, attrs.isDefined))
-      val v = ArtifactLog.list(root).headOption.map(_._1).getOrElse(0L)
-      ArtifactLog.commit(root, Kind, v, rec, store)
+      ArtifactLog.commit(root, Kind, ArtifactLog.version(root), rec, store)
     }
   }
 
@@ -381,51 +380,19 @@ object IvfIndexStore {
         live(spark, root, r, "Q", tombs), p.residual) })
   }
 
-  /** The shared stage→CAS→rebase tail of [[append]] and [[delete]]:
-    * commit `newDirs` onto the live record, preserving or advancing
-    * the replay tag, retrying through conflicts. The replay tag is
-    * RE-CHECKED inside the loop against each freshly-read head — the
-    * entry-time check alone loses the zombie-driver race (two
-    * drivers replay the same stream batch concurrently, both pass
-    * the entry check, one commits, and the loser's rebase would
-    * otherwise commit the same tag's shard AGAIN, duplicating every
-    * vector of the batch). An UNTAGGED append must PRESERVE the
-    * committed streaming tag — erasing it would let a crash-replayed
-    * stream batch double-append after any interleaved ad-hoc
-    * append. */
-  /** Whether `r` already carries replay tag `tag` (or a later one) on
-    * channel `tagKey`: that batch landed, so it must not stage again. */
-  private def landed(r: Rec, tag: Option[Long], tagKey: String): Boolean =
-    tag.exists(t => r.kvMap.get(tagKey).exists(_.toLong >= t))
-
-  private def casAppend(root: String, head: Rec,
-      newDirs: Seq[(String, String)], tag: Option[Long],
-      store: CommitStore, maxRetries: Int,
-      tagKey: String = "tag"): Long = {
-    var attempt = 0
-    while (true) {
-      val (v, latest) = ArtifactLog.latest(root, Kind)
-      if (landed(latest, tag, tagKey)) return v
-      require(latest.kvMap.filterNot(kv => ArtifactLog.TagKeys(kv._1)) ==
-          head.kvMap.filterNot(kv => ArtifactLog.TagKeys(kv._1)) &&
-        latest.dirsOf("C") == head.dirsOf("C") &&
-        latest.dirsOf("B") == head.dirsOf("B"),
-        "concurrent commit replaced the index structure (compact/save " +
-          "raced this append); re-run against the new index")
-      val rec = Rec(
-        if (tag.isDefined)
-          latest.kv.filterNot(_._1 == tagKey) ++
-            tag.map(t => tagKey -> t.toString)
-        else latest.kv,
-        latest.dirs ++ newDirs)
-      try return ArtifactLog.commit(root, Kind, v, rec, store)
-      catch {
-        case e: TxLog.CommitConflict =>
-          if (attempt >= maxRetries) throw e
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
+  /** `newDirs` appended onto the newest record `latest` — the rebase
+    * of [[append]] and [[delete]] ([[ArtifactLog.rebase]]), valid only
+    * while nothing but shards moved since `head`, the record the
+    * staging was built against. */
+  private def onto(head: Rec, newDirs: Seq[(String, String)])(
+      latest: Rec): Rec = {
+    require(latest.kvMap.filterNot(kv => ArtifactLog.TagKeys(kv._1)) ==
+        head.kvMap.filterNot(kv => ArtifactLog.TagKeys(kv._1)) &&
+      latest.dirsOf("C") == head.dirsOf("C") &&
+      latest.dirsOf("B") == head.dirsOf("B"),
+      "concurrent commit replaced the index structure (compact/save " +
+        "raced this append); re-run against the new index")
+    Rec(latest.kv, latest.dirs ++ newDirs)
   }
 
   /** O(increment) shard ingest: assign `inc` (quantized frame) on the
@@ -438,7 +405,7 @@ object IvfIndexStore {
     * and a conflict rebases by re-listing (the staged shard dir stays
     * valid; only the record re-renders). Returns the new version. */
   def append(spark: SparkSession, root: String, inc: DataFrame,
-      store: CommitStore = LinkCommitStore, maxRetries: Int = 10,
+      store: CommitStore = LinkCommitStore,
       tag: Option[Long] = None,
       attrs: Option[DataFrame] = None): Long = {
     val (v0, head) = ArtifactLog.latest(root, Kind)
@@ -447,7 +414,7 @@ object IvfIndexStore {
     // graft.streaming.EmbeddingIngestStream): a batchId at or below
     // the committed tag already landed; do not double-append. This
     // entry check avoids staging work on replay; the authoritative
-    // re-check is inside casAppend's loop.
+    // re-check is on every attempt of the rebase.
     if (landed(head, tag, "tag")) return v0
     val d = dimOf(inc).getOrElse(return v0) // empty: nothing to stage
     val cents = broadcast(
@@ -485,8 +452,8 @@ object IvfIndexStore {
           s"$root/data/$dirName/attrs")))
       writeCells(cells, buckets, s"$root/data/$dirName/cells",
         rowGroup(head))
-      casAppend(root, head, shardDirs(dirName, pq.isDefined, attrs.isDefined),
-        tag, store, maxRetries)
+      ArtifactLog.rebase(root, Kind, store, dirName, tag)(
+        onto(head, shardDirs(dirName, pq.isDefined, attrs.isDefined)))
     }
   }
 
@@ -555,17 +522,17 @@ object IvfIndexStore {
     * complete until [[vacuum]] prunes it — a takedown that must also
     * erase HISTORY is vacuum-with-keep=1 after the delete commit. */
   def delete(spark: SparkSession, root: String, ids: DataFrame,
-      store: CommitStore = LinkCommitStore, maxRetries: Int = 10,
+      store: CommitStore = LinkCommitStore,
       tag: Option[Long] = None, tagKey: String = "tag"): Long = {
-    require(ArtifactLog.TagKeys(tagKey), s"unknown tag channel $tagKey")
+    ArtifactLog.channel(tagKey)
     val (v0, head) = ArtifactLog.latest(root, Kind)
-    // entry fast-path; the authoritative re-check is in casAppend
+    // entry fast-path; the authoritative re-check is in the rebase
     if (landed(head, tag, tagKey)) return v0
     val dirName = UUID.randomUUID().toString
     ids.select(col("vec_id")).distinct()
       .write.parquet(s"$root/data/$dirName/tombs")
-    casAppend(root, head, Seq("T" -> s"$dirName/tombs"), tag, store,
-      maxRetries, tagKey)
+    ArtifactLog.rebase(root, Kind, store, dirName, tag, tagKey)(
+      onto(head, Seq("T" -> s"$dirName/tombs")))
   }
 
   /** IVFADC probe (the shape of Jégou et al. §V, with one stated

@@ -8,7 +8,8 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.Scope
 import graft.catalog.{CommitStore, LinkCommitStore, TxLog}
-import graft.ops.ArtifactLog.{Rec, dropTombs, readDirs, readTombs}
+import graft.ops.ArtifactLog.{Rec, dropTombs, landed, readDirs, readTombs,
+  stamped}
 
 /** The persisted MinHash/LSH dedup index — the dedup-side mirror of
   * [[IvfIndexStore]] and the artifact `d_incremental_dedup` could
@@ -170,8 +171,7 @@ object MinhashIndexStore {
           (if (labels.isDefined) Seq("lab" -> "1") else Nil),
         Seq("B" -> s"$dirName/bands", "S" -> s"$dirName/shingles") ++
           labDirs)
-      val v = ArtifactLog.list(root).headOption.map(_._1).getOrElse(0L)
-      ArtifactLog.commit(root, Kind, v, rec, store)
+      ArtifactLog.commit(root, Kind, ArtifactLog.version(root), rec, store)
     }
   }
 
@@ -295,7 +295,7 @@ object MinhashIndexStore {
     * new dir pair and CAS-appended with rebase-on-conflict. The
     * corpus dirs are never read or rewritten. */
   def append(spark: SparkSession, root: String, shard: DataFrame,
-      store: CommitStore = LinkCommitStore, maxRetries: Int = 10): Long = {
+      store: CommitStore = LinkCommitStore): Long = {
     val (_, head) = ArtifactLog.latest(root, Kind)
     require(!head.kvMap.get("lab").contains("1"),
       "labeled index: use ingestLabeled (a bare append would leave " +
@@ -306,25 +306,16 @@ object MinhashIndexStore {
     val (p, q) = (head.kvMap("p").toInt, head.kvMap("q").toInt)
     val dirName = UUID.randomUUID().toString
     writeShard(Scope.staged(shard), p, q, s"$root/data/$dirName")
-    var attempt = 0
-    while (true) {
-      val (v, latest) = ArtifactLog.latest(root, Kind)
+    ArtifactLog.rebase(root, Kind, store, dirName) { latest =>
       // tag channels advancing (a saga takedown interleaving) is not
       // a structural change — compare everything else
       require(latest.kv.filterNot(kv => ArtifactLog.TagKeys(kv._1)) ==
           head.kv.filterNot(kv => ArtifactLog.TagKeys(kv._1)),
         "concurrent commit replaced the index structure (a save raced " +
           "this append); re-run against the new index")
-      val rec = Rec(latest.kv, latest.dirs ++
+      Rec(latest.kv, latest.dirs ++
         Seq("B" -> s"$dirName/bands", "S" -> s"$dirName/shingles"))
-      try return ArtifactLog.commit(root, Kind, v, rec, store)
-      catch {
-        case e: TxLog.CommitConflict =>
-          if (attempt >= maxRetries) throw e
-          attempt += 1
-      }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Fold the accreted shard dirs into one family (same content).
@@ -550,10 +541,7 @@ object MinhashIndexStore {
     val (v, head) = ArtifactLog.latest(root, Kind)
     require(head.kvMap.get("lab").contains("1"),
       s"$root was saved without labels; pass labels to save() first")
-    tag.foreach { t =>
-      val committed = head.kvMap.get("tag").map(_.toLong)
-      if (committed.exists(_ >= t)) return v // replayed batch: no-op
-    }
+    if (landed(head, tag, "tag")) return v // replayed batch: no-op
     val idx = index(spark, root, v, head)
     val (p, q) = (idx.bandBuckets, idx.shingleBuckets)
     val shardC = Scope.cache(shard)
@@ -625,14 +613,7 @@ object MinhashIndexStore {
         s"$root/data/$dirName"))
     Scope.fork(spark, "mh:ingest:write:fwd")(
       Scope.staged(newFwd).write.parquet(s"$root/data/$fwdDirName/forward"))
-    // an UNTAGGED ingest must PRESERVE the committed streaming tag —
-    // erasing it would let a crash-replayed stream batch re-ingest
-    // after any interleaved ad-hoc ingest
-    val rec = Rec(
-      if (tag.isDefined)
-        head.kv.filterNot(_._1 == "tag") ++
-          tag.map(t => "tag" -> t.toString)
-      else head.kv,
+    val rec = Rec(stamped(head.kv, tag, "tag"),
       head.dirs.filter(_._1 != "F") ++ Seq(
         "B" -> s"$dirName/bands", "S" -> s"$dirName/shingles") ++
         labelDirs(dirName) :+ ("F" -> s"$fwdDirName/forward"))
@@ -691,12 +672,9 @@ object MinhashIndexStore {
       tag: Option[Long] = None,
       preCommitHook: Long => Unit = _ => (),
       tagKey: String = "tag"): Long = {
-    require(ArtifactLog.TagKeys(tagKey), s"unknown tag channel $tagKey")
+    ArtifactLog.channel(tagKey)
     val (v, head) = ArtifactLog.latest(root, Kind)
-    tag.foreach { t =>
-      val committed = head.kvMap.get(tagKey).map(_.toLong)
-      if (committed.exists(_ >= t)) return v // replayed batch: no-op
-    }
+    if (landed(head, tag, tagKey)) return v // replayed batch: no-op
     val del = Scope.cache(ids.select("doc_id").distinct())
     val labeled = head.kvMap.get("lab").contains("1")
     val dirName = UUID.randomUUID().toString
@@ -807,11 +785,7 @@ object MinhashIndexStore {
             .write.parquet(s"$root/data/$fwdDirName/forward"))
         labelDirs(dirName) :+ ("F" -> s"$fwdDirName/forward")
       }
-    val rec = Rec(
-      if (tag.isDefined)
-        head.kv.filterNot(_._1 == tagKey) ++
-          tag.map(t => tagKey -> t.toString)
-      else head.kv,
+    val rec = Rec(stamped(head.kv, tag, tagKey),
       (if (labeled) head.dirs.filter(_._1 != "F") else head.dirs) ++
         (("T" -> s"$dirName/tombs") +: labDirs))
     preCommitHook(v) // test seam: races injected between stage + CAS

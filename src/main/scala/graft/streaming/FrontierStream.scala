@@ -87,24 +87,6 @@ object FrontierStream {
   private def spidOf(canonical: Column, partitions: Int): Column =
     pmod(xxhash64(canonical), lit(partitions.toLong)).cast("int")
 
-  /** Persist-or-assert the state root's fixed partition count (same
-    * contract as TxLog's PARTITIONS sidecar). */
-  private def assertStateParts(stateRoot: String, partitions: Int): Unit = {
-    val f = Paths.get(stateRoot, "SPARTS")
-    if (!Files.exists(f)) {
-      val tmp = Paths.get(stateRoot, s".sparts-${UUID.randomUUID()}")
-      Files.writeString(tmp, partitions.toString)
-      try Files.createLink(f, tmp)
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      finally Files.deleteIfExists(tmp)
-    }
-    val fixed = Files.readString(f).trim.toInt
-    require(fixed == partitions,
-      s"frontier state root $stateRoot was created with $fixed " +
-        s"partitions; got $partitions — the count is fixed at root " +
-        "creation (manifests re-link old partition dirs)")
-  }
-
   /** Where a streaming run lands its mapped packages: a TxLog delta
     * catalog root plus the projection from the map loop's raw
     * (uri, package_data) rows to mergePackages-shaped package rows.
@@ -621,7 +603,8 @@ object FrontierStream {
     // concurrent caller's caches and checkpoints survive it.
     if (batchId > last) Scope {
       Files.createDirectories(Paths.get(stateRoot))
-      assertStateParts(stateRoot, statePartitions)
+      graft.catalog.TxLog.assertPartitions(Paths.get(stateRoot, "SPARTS"),
+        statePartitions, s"frontier state root $stateRoot")
       val now = batchTime(batchId)
 
       // the seed inbox is control-plane, not data-plane: a micro-batch

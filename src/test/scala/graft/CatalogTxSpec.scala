@@ -8,7 +8,7 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 
-import graft.catalog.{MergeEngine, PackageRow, TxLog}
+import graft.catalog.{CommitStore, MergeEngine, PackageRow, TxLog}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -221,11 +221,12 @@ class CatalogTxSpec extends SparkTestBase {
   test("exhausted retries GC the final staged dir before rethrowing") {
     val root = Files.createTempDirectory("txgc").toString
     TxLog.init(root)
+    // a store that never grants a claim: every attempt loses
+    val losing = new CommitStore {
+      def putIfAbsent(target: java.nio.file.Path, content: String) = false
+    }
     intercept[TxLog.CommitConflict] {
-      TxLog.transact(spark, root, emptyCatalog, maxRetries = 0) { _ =>
-        TxLog.commit(root, 0L, "decoy") // steal v1 mid-transaction
-        seedDf
-      }
+      TxLog.transact(spark, root, emptyCatalog, store = losing)(_ => seedDf)
     }
     // ADVICE r9: the propagating-conflict path must not leak staging
     val dirs = Files.list(java.nio.file.Paths.get(root, "data"))
